@@ -1,21 +1,22 @@
 """Composite point-in-time feature job with hot-key-aware planning.
 
 ``pit_enrich`` is the engine's headline composite: strict as-of join + any of
-{rolling count, sessionize, forward-fill} in one call, with a skew plan:
+{rolling, sessionize, forward-fill} in one call, with a skew plan:
 
 - **cold entities** (the overwhelming majority): the fused plain path — ONE
   shuffle on entity, ONE sort, every window function sharing it (verified:
   single Exchange in the physical plan).
-- **hot entities** (detected by count > hot_threshold, or supplied): the
-  time-bucketed exact decomposition from operators.skew, whose partitions are
-  bounded by (entity, bucket) — no task ever sees a whole hot entity.
+- **hot entities** (count > hot_threshold): ONE call into the time-bucketed
+  core of operators.skew — one (entity, bucket) pass plus one tiny
+  summary/carry repair, so no task ever sees a whole hot entity.
 - results unioned; both branches read the same scan (Spark reuses it).
+
+The planner is one per-entity count aggregate that picks the hot set.
 
 At 100 TB the hot set is exactly the Zipf head (a handful of doc_ids holding
 double-digit percent of rows); leaving them in the plain path puts 25% of the
 dataset in ONE task — an Amdahl floor measured at ~9× the deskewed runtime on
-this box.  The split costs one cheap pre-aggregation (entity → count) that
-reuses the entity shuffle.
+this box.
 """
 
 from __future__ import annotations
@@ -24,12 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feathr_online_spark.operators.asof import asof_join
-from feathr_online_spark.operators.skew import (
-    asof_join_bucketed,
-    forward_fill_bucketed,
-    rolling_bucketed,
-    sessionize_bucketed,
-)
+from feathr_online_spark.operators.skew import _pit_core, _rolling_kw
 from feathr_online_spark.operators.windows import forward_fill, rolling, sessionize
 
 
@@ -48,7 +44,7 @@ def pit_enrich(
     left_ts: str = "event_time",
     right_ts: str = "feature_time",
     strict: bool = True,
-    rolling_spec: dict | None = None,   # {"name": ..., "col": ..., "fn": ..., "rows": N}
+    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows": N | "range_seconds": S}
     session_gap: int | None = None,
     ffill_cols: list[str] | None = None,
     hot_threshold: int = 100_000,
@@ -56,12 +52,9 @@ def pit_enrich(
 ) -> DataFrame:
     """As-of join + windowed derivations with hot/cold split planning.
 
-    ``rolling_spec`` here is ROWS-mode: ``{"name", "col", "fn", "rows": N}``
-    (the fused skew composite, pit_fused_bucketed, takes the time-mode
-    ``range_seconds`` form instead — validated on both sides)."""
-    if rolling_spec is not None and "rows" not in rolling_spec:
-        raise ValueError("pit_enrich rolling_spec needs 'rows' (rows mode); "
-                         "pit_fused_bucketed's rolling_spec uses 'range_seconds'")
+    ``rolling_spec`` takes ``rows`` or ``range_seconds``; it always rolls
+    over history strictly before the row."""
+    roll = _rolling_kw(rolling_spec)
     hot = F.broadcast(hot_entities(events, on, hot_threshold))
 
     ev_cold = events.join(hot, on, "left_anti")
@@ -73,32 +66,16 @@ def pit_enrich(
     ft_cold = features.join(hot, on, "left_anti")
     ft_hot = features.join(hot, on, "left_semi")
 
-    def plain(ev: DataFrame, ft: DataFrame) -> DataFrame:
-        out = asof_join(ev, ft, on=on, left_ts=left_ts, right_ts=right_ts, strict=strict)
-        if rolling_spec is not None:
-            out = rolling(out, {rolling_spec["name"]: (rolling_spec["col"], rolling_spec["fn"])},
-                          on=on, ts=left_ts, rows=rolling_spec["rows"], include_current=False)
-        if session_gap is not None:
-            out = sessionize(out, session_gap, on=on, ts=left_ts)
-        if ffill_cols:
-            out = forward_fill(out, ffill_cols, on=on, ts=left_ts)
-        return out
+    cold = asof_join(ev_cold, ft_cold, on=on, left_ts=left_ts, right_ts=right_ts, strict=strict)
+    if roll:
+        cold = rolling(cold, roll["aggs"], on=on, ts=left_ts, rows=roll["rows"],
+                       range_seconds=roll["range_seconds"], include_current=False)
+    if session_gap is not None:
+        cold = sessionize(cold, session_gap, on=on, ts=left_ts)
+    if ffill_cols:
+        cold = forward_fill(cold, ffill_cols, on=on, ts=left_ts)
 
-    def bucketed(ev: DataFrame, ft: DataFrame) -> DataFrame:
-        out = asof_join_bucketed(ev, ft, on=on, left_ts=left_ts, right_ts=right_ts,
-                                 strict=strict, bucket_seconds=bucket_seconds)
-        if rolling_spec is not None:
-            out = rolling_bucketed(out, {rolling_spec["name"]: (rolling_spec["col"], rolling_spec["fn"])},
-                                   on=on, ts=left_ts, rows=rolling_spec["rows"],
-                                   include_current=False, bucket_seconds=bucket_seconds)
-        if session_gap is not None:
-            out = sessionize_bucketed(out, session_gap, on=on, ts=left_ts,
-                                      bucket_seconds=bucket_seconds)
-        if ffill_cols:
-            out = forward_fill_bucketed(out, ffill_cols, on=on, ts=left_ts,
-                                        bucket_seconds=bucket_seconds)
-        return out
-
-    cold = plain(ev_cold, ft_cold)
-    hot_out = bucketed(ev_hot, ft_hot)
+    hot_out = _pit_core(ev_hot, ft_hot, on=on, left_ts=left_ts, right_ts=right_ts, strict=strict,
+                        ffill_cols=ffill_cols or (), session_gap=session_gap,
+                        bucket_seconds=bucket_seconds, **roll)
     return cold.select(*cold.columns).unionByName(hot_out.select(*cold.columns))

@@ -1,4 +1,5 @@
-"""Skew-proof (time-bucketed two-pass) variants of the point-in-time operators.
+"""Skew-proof (time-bucketed) point-in-time operators: one within-bucket core
+plus one summary/carry repair.
 
 THE problem at 100 TB: per-entity window operators shuffle on the entity key,
 so a Zipf-hot entity (one doc_id holding 25% of all rows — exactly what the
@@ -9,31 +10,49 @@ local[32]).
 
 The cure is decomposition, not salting-by-hash (a random salt would break
 order-dependent semantics): slice each entity's timeline into fixed buckets,
-compute the operator *within* (entity, bucket) partitions — now bounded in
-size — and repair the cross-bucket dependency with a second pass over a TINY
-per-(entity, bucket) summary table:
+compute everything *within* (entity, bucket) partitions — now bounded in size
+— and repair the cross-bucket dependencies on a TINY per-(entity, bucket)
+summary table (the key×time partitioning of Waterwheel, ICDE 2018, with
+aggregates combined across unaligned partitions as in GeoAlign, EDBT 2018).
 
-- as-of / forward-fill: running ``last`` within bucket; carry-in = last
-  feature summary of all earlier buckets (window over the summary table);
-  final = coalesce(within, carry).  Exact.
-- sessionize: within-bucket session ordinals; the bucket's first-row gap is
-  re-checked against the previous bucket's last timestamp, and ordinals are
-  shifted by the running sum of corrected per-bucket session counts.  Exact.
-- rolling (rows mode): the last N rows of each bucket are replicated into the
-  entity's next present bucket as context rows (excluded from output), so the
-  trailing frame sees its true predecessors.  Exact when each present bucket
-  holds ≥ N rows per entity (the hot-entity case by construction); choose
-  ``bucket_seconds`` accordingly.
+``_pit_core`` states this once; every public function here is a thin call
+into it.  It tags events, features and rolling context rows into one stream,
+shuffles that stream ONCE on (entity, bucket) and computes in one sort:
 
-Every pass is Column-only; the big data is shuffled on (entity, bucket) —
-hot entities split across buckets by design.
+- as-of: running ``last`` of the whole-row payload struct; carry-in = the
+  last feature row of all earlier buckets.  Exact.
+- forward-fill of any output column, event or payload: running last non-null
+  within the bucket; carry-in = the fill value at the end of the earlier
+  buckets.  A payload column's fill depends on which feature row attached, so
+  its carry is computed on the summary after the as-of carry.  Exact.
+- rolling, range mode: events within ``range_seconds`` of their bucket's end
+  are replicated into the next bucket as context rows (excluded from output).
+  Exact for ``range_seconds <= bucket_seconds``.
+- rolling, rows mode: the summary keeps each bucket's last N events; a
+  bucket's context rows are the latest N of those tails over the entity's
+  previous N buckets holding events (each holds at least one, so together
+  they reach N events back).  The rows frame runs after the feature rows are
+  dropped, so it counts events only.  Exact however sparse the timeline.
+- sessions: within-bucket ordinals; the summary re-checks each bucket's first
+  gap against the previous event bucket's last timestamp and prefix-sums the
+  corrected counts into offsets.  Exact.
+
+The summary comes from aggregates that need no order (partially aggregated
+before their shuffle) and, where an ordinal or an attached row is needed, a
+narrow pass over keys, times and the filled or rolled values.  Its carry
+rides back into the main pass as one extra row per bucket that sorts first,
+so no join ever moves the wide stream a second time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
+
+from feathr_online_spark.operators.windows import gap_micros
+
+_FNS = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max, "count": F.count, "stddev": F.stddev}
 
 
 def _bkt(ts_col: str, bucket_seconds: int) -> Column:
@@ -60,9 +79,204 @@ def _ns_join(left: DataFrame, right: DataFrame, on: str, how: str = "inner") -> 
     return left.join(r, cond, how).drop("__r_on", "__r_bkt")
 
 
-# ---------------------------------------------------------------------------
-# As-of join, bucketed
-# ---------------------------------------------------------------------------
+def _rolling_kw(rolling_spec: dict | None) -> dict:
+    """``{"name", "col", "fn", "rows" | "range_seconds"}`` → the core's
+    rolling keywords."""
+    if rolling_spec is None:
+        return {}
+    return {"aggs": {rolling_spec["name"]: (rolling_spec["col"], rolling_spec["fn"])},
+            "rows": rolling_spec.get("rows"), "range_seconds": rolling_spec.get("range_seconds")}
+
+
+def _pit_core(
+    events: DataFrame,
+    features: DataFrame | None = None,
+    *,
+    on: str,
+    left_ts: str,
+    right_ts: str = "feature_time",
+    strict: bool = True,
+    ffill_cols: list[str] | tuple = (),
+    aggs: dict[str, tuple[str, str]] | None = None,
+    rows: int | None = None,
+    range_seconds: int | None = None,
+    include_current: bool = False,
+    session_gap: int | None = None,
+    session_col: str = "session_id",
+    bucket_seconds: int = 86400,
+) -> DataFrame:
+    """The event rows with (entity, time, event columns, payload columns, one
+    column per ``aggs`` name, ``session_col`` if ``session_gap``), equal to
+    the plain composition as-of → rolling → sessionize → forward-fill.
+    Rolling reads unfilled event columns; ``ffill_cols`` may name event or
+    payload columns."""
+    event_cols = [c for c in events.columns if c not in (on, left_ts)]
+    payload = [] if features is None else [c for c in features.columns if c not in (on, right_ts)]
+    if features is not None and not payload:
+        raise ValueError(f"bucketed as-of: features need a payload column besides ({on}, {right_ts})")
+    if set(payload) & set(events.columns):
+        raise ValueError(f"bucketed as-of: column collision {sorted(set(payload) & set(events.columns))}")
+    aggs = aggs or {}
+    if aggs:
+        if (rows is None) == (range_seconds is None):
+            raise ValueError("bucketed rolling: specify exactly one of rows / range_seconds")
+        if range_seconds is not None and range_seconds > bucket_seconds:
+            raise ValueError("bucketed rolling: range_seconds must be ≤ bucket_seconds (single-hop context)")
+        if any(c not in event_cols for c, _ in aggs.values()):
+            raise ValueError("bucketed rolling aggregates event columns only")
+    feat_tag, ev_tag = (1, 0) if strict else (0, 1)
+    pf = [c for c in ffill_cols if c in payload]        # payload columns to fill
+    agg_cols = list(dict.fromkeys(c for c, _ in aggs.values()))
+    carry_tag = -1   # a bucket's carry row sorts first: (null µs, -1) precedes every real row
+
+    def tagged(df: DataFrame, ts: str, tag: int, tb: Column, cols: list) -> DataFrame:
+        # time travels as epoch µs only: exact, and one column fewer to shuffle
+        return df.select(F.col(on), F.unix_micros(F.col(ts)).alias("__us"),
+                         _bkt(ts, bucket_seconds).alias("__bkt"), F.lit(tag).alias("__tag"),
+                         tb.cast("long").alias("__tb"), F.lit(0).alias("__ctx"), *cols)
+
+    base = tagged(events, left_ts, ev_tag, F.lit(0), event_cols)
+    if features is not None:
+        # null-ts feature rows have no place on the timeline: asof_join drops them too
+        ft = features.filter(F.col(right_ts).isNotNull())
+        # whole-row payload struct: the winning feature ROW attaches as-is, nulls preserved
+        base = base.unionByName(tagged(ft, right_ts, feat_tag, F.xxhash64(*payload),
+                                       [F.struct(*payload).alias("__pl")]), allowMissingColumns=True)
+    is_ev = (F.col("__tag") == ev_tag) & (F.col("__ctx") == 0)
+    is_feat = F.col("__tag") == feat_tag
+    order = F.struct("__us", "__tag", "__tb")
+
+    # ---- summary: one row per (entity, bucket), from aggregates that need no
+    # order (partially aggregated before their shuffle) and, where an ordinal
+    # or an attached row is needed, from a narrow pass over keys and times ----
+    parts = []
+    pre = {f"__end_{c}": F.max_by(c, F.when(is_ev & F.col(c).isNotNull(), order))
+           for c in ffill_cols if c not in payload}
+    if payload:
+        pre["__pl_end"] = F.max_by("__pl", F.when(is_feat, order))
+    if pre:
+        parts.append(base.groupBy(on, "__bkt").agg(*[e.alias(k) for k, e in pre.items()]))
+    if session_gap is not None or pf or rows is not None:
+        w_n = Window.partitionBy(on, "__bkt").orderBy("__us", "__tag", "__tb")
+        run_n = w_n.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        narrow = base.select(on, "__us", "__bkt", "__tag", "__tb", "__ctx", *agg_cols,
+                             *[F.col("__pl")[c].alias(c) for c in pf])
+        nagg = []
+        if session_gap is not None:
+            narrow = narrow.withColumn("__s_raw", _session_starts(w_n, is_ev, session_gap))
+            nagg += [F.max(F.when(is_ev, F.col("__s_raw"))).alias("__raw"),
+                     F.min(F.when(is_ev, F.col("__us"))).alias("__first"),
+                     F.max(F.when(is_ev, F.col("__us"))).alias("__last")]
+        if pf:
+            # the ffilled payload fields of the feature row each event attaches in-bucket
+            narrow = narrow.withColumn("__att", F.last(F.when(is_feat, F.struct(*pf)), ignorenulls=True)
+                                       .over(run_n))
+            nagg += [F.max_by(F.col("__att")[c], F.when(is_ev & F.col("__att")[c].isNotNull(), order))
+                     .alias(f"__end_{c}") for c in pf]
+            # the bucket's first row is an event: its early events attach the carried-in row
+            nagg.append((F.min_by("__tag", order) == ev_tag).alias("__lead"))
+        if rows is not None:
+            latest_events_first = Window.partitionBy(on, "__bkt").orderBy(
+                (F.col("__tag") == ev_tag).desc(), F.col("__us").desc())
+            narrow = narrow.withColumn("__rk", F.row_number().over(latest_events_first))
+            nagg.append(F.collect_list(F.when(is_ev & (F.col("__rk") <= rows), F.struct("__us", *agg_cols)))
+                        .alias("__tails"))
+        parts.append(narrow.groupBy(on, "__bkt").agg(*nagg))
+
+    un = base
+    if aggs and range_seconds is not None:
+        # range mode: events within range_seconds of their bucket's end are the
+        # next bucket's context rows — a filter, no shuffle
+        bucket_end_us = (F.col("__bkt") + 1) * (bucket_seconds * 1_000_000)
+        ctx = base.filter(is_ev & (F.col("__us") >= bucket_end_us - range_seconds * 1_000_000)).select(
+            on, "__us", (F.col("__bkt") + 1).alias("__bkt"), F.lit(ev_tag).alias("__tag"),
+            F.lit(0).cast("long").alias("__tb"), F.lit(1).alias("__ctx"), *agg_cols)
+        un = un.unionByName(ctx, allowMissingColumns=True)
+
+    if parts:
+        summary = parts[0] if len(parts) == 1 else _ns_join(parts[0], parts[1], on)
+        wb = Window.partitionBy(on).orderBy("__bkt")
+        before = wb.rowsBetween(Window.unboundedPreceding, -1)
+        carry = {}   # the carry row's columns, read back by the main pass below
+        if payload:
+            summary = summary.withColumn("__carry_pl", F.last("__pl_end", ignorenulls=True).over(before))
+            carry["__pl"] = F.col("__carry_pl")
+        if session_gap is not None:
+            prev_last = F.last("__last", ignorenulls=True).over(before)
+            summary = summary.withColumn("__adjust", F.when(F.col("__first") - prev_last <= gap_micros(session_gap),
+                                                            -1).otherwise(0).cast("long"))
+            offset = F.coalesce(F.sum(F.col("__raw") + F.col("__adjust")).over(before), F.lit(0).cast("long"))
+            carry["__off"] = offset + F.col("__adjust") - 1
+        # the fill value at the end of a bucket; a payload column's may be the
+        # carried-in row's, which the bucket's leading events attach
+        ends = {c: F.coalesce(f"__end_{c}", F.when(F.col("__lead"), F.col("__carry_pl")[c])) if c in pf
+                else F.col(f"__end_{c}") for c in ffill_cols}
+        carry.update({c: F.last(e, ignorenulls=True).over(before) for c, e in ends.items()})
+        summary = summary.withColumns(carry)
+        row = {"__bkt": F.col("__bkt"), "__us": F.lit(None).cast("long"), "__tag": F.lit(carry_tag),
+               "__ctx": F.lit(0), **{k: F.col(k) for k in carry}}
+        if rows is not None:
+            # rows mode: a bucket's context rows are the latest `rows` events
+            # among the tails of the entity's previous `rows` buckets holding
+            # events (partitioning by has-events keeps event buckets apart; a
+            # bucket without events sees only empty tails) — one explode
+            # emits them with the carry row, so the summary is read once
+            prior = F.flatten(F.collect_list("__tails").over(
+                Window.partitionBy(on, F.size("__tails") > 0).orderBy("__bkt").rowsBetween(-rows, -1)))
+            summary = summary.withColumn("__ctx_rows", F.slice(F.sort_array(prior, asc=False), 1, rows)).select(
+                "*", F.posexplode(F.array_prepend("__ctx_rows", F.lit(None))).alias("__pos", "__t"))
+            is_ctx = F.col("__pos") > 0
+            row = {k: F.when(~is_ctx, e) for k, e in row.items()}
+            row.update({"__bkt": F.col("__bkt"), "__us": F.col("__t.__us"),
+                        "__tag": F.when(is_ctx, ev_tag).otherwise(carry_tag), "__ctx": is_ctx.cast("int"),
+                        **{c: F.when(is_ctx, F.col("__t")[c]).otherwise(row.get(c)) for c in agg_cols}})
+        extra = summary.select(on, *[e.alias(k) for k, e in row.items()]).withColumn(
+            "__tb", F.lit(0).cast("long"))
+        un = un.unionByName(extra, allowMissingColumns=True)
+
+    # ---- the one within-bucket pass over the wide stream: one sort ----
+    w = Window.partitionBy(on, "__bkt").orderBy("__us", "__tag", "__tb", "__ctx")
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d = un
+    if payload:
+        d = d.withColumn("__in_pl", F.last("__pl", ignorenulls=True).over(run))
+    if session_gap is not None:
+        d = d.withColumn(session_col, F.last("__off", ignorenulls=True).over(run)
+                         + _session_starts(w, is_ev, session_gap))
+    is_carry = F.col("__tag") == carry_tag
+    fill_src = {c: F.when(is_carry, F.col(c)).when(is_ev, F.col("__in_pl")[c] if c in payload else F.col(c))
+                for c in ffill_cols}
+    d = d.withColumns({f"__in_{c}": F.last(e, ignorenulls=True).over(run) for c, e in fill_src.items()})
+
+    kept = d.filter(F.col("__tag") == ev_tag)
+    if aggs:
+        if rows is not None:
+            frame = w.rowsBetween(-(rows - 1) if include_current else -rows, 0 if include_current else -1)
+        else:
+            frame = Window.partitionBy(on, "__bkt").orderBy("__us").rangeBetween(
+                -range_seconds * 1_000_000, 0 if include_current else -1)
+        kept = kept.withColumns({name: _FNS[fn](c).over(frame) for name, (c, fn) in aggs.items()})
+
+    def out(c: str) -> Column:
+        if c in ffill_cols:
+            return F.col(f"__in_{c}")
+        return F.col("__in_pl")[c] if c in payload else F.col(c)
+
+    return kept.filter(F.col("__ctx") == 0).select(
+        F.col(on), F.timestamp_micros("__us").alias(left_ts),
+        *[out(c).alias(c) for c in event_cols + payload], *aggs,
+        *([session_col] if session_gap is not None else []),
+    )
+
+
+def _session_starts(w: WindowSpec, is_ev: Column, gap_seconds: int) -> Column:
+    """Running count of session starts among the bucket's events: an event
+    starts one when no earlier event of the bucket lies within the gap."""
+    prev = F.last(F.when(is_ev, F.col("__us")), ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, -1))
+    new = F.when(is_ev, (prev.isNull() | (F.col("__us") - prev > gap_micros(gap_seconds))).cast("long"))
+    return F.sum(new).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
 
 def asof_join_bucketed(
     events: DataFrame,
@@ -72,129 +286,14 @@ def asof_join_bucketed(
     right_ts: str = "feature_time",
     strict: bool = True,
     bucket_seconds: int = 86400,
-    right_tiebreak: str | None = None,
 ) -> DataFrame:
-    """Exact strict-`<` as-of join with per-(entity, bucket) parallelism.
+    """Exact strict-`<` as-of join with per-(entity, bucket) parallelism; same
+    semantics as operators.asof.asof_join.  Strictness only matters for
+    same-timestamp rows, which share a bucket, so the within-bucket tag order
+    handles it and the carry-in (strictly earlier buckets) is always safe."""
+    return _pit_core(events, features, on=on, left_ts=left_ts, right_ts=right_ts,
+                     strict=strict, bucket_seconds=bucket_seconds)
 
-    Same semantics as operators.asof.asof_join; the hot-key-proof physical
-    strategy.  Strictness only matters for same-timestamp rows, which by
-    construction share a bucket, so the within-bucket tag ordering handles it
-    and the carry-in (features from strictly earlier buckets) is always safe.
-    """
-    from pyspark.sql.types import StructType
-
-    event_cols = [c for c in events.columns if c not in (on, left_ts)]
-    payload = [c for c in features.columns if c not in (on, right_ts)]
-    if not payload:
-        raise ValueError("asof_join_bucketed: features must have at least one "
-                         f"payload column besides ({on}, {right_ts})")
-    overlap = set(payload) & set(events.columns)
-    if overlap:
-        raise ValueError(f"asof_join_bucketed: column collision {sorted(overlap)}")
-    feat_tag, event_tag = (1, 0) if strict else (0, 1)
-    tiebreak = F.col(right_tiebreak) if right_tiebreak else F.xxhash64(*[F.col(c) for c in payload])
-
-    # Whole-row payload struct (see asof._asof_union): the winning feature ROW
-    # attaches as-is, nulls preserved — never a per-column mix of rows.
-    pl_type = StructType([features.schema[c] for c in payload])
-
-    ev = events.select(
-        F.col(on), F.col(left_ts).alias("__ts"), F.lit(event_tag).alias("__tag"),
-        F.lit(0).cast("long").alias("__tb"),
-        *[F.col(c) for c in event_cols],
-        F.lit(None).cast(pl_type).alias("__pl"),
-    )
-    ft = features.select(
-        F.col(on), F.col(right_ts).alias("__ts"), F.lit(feat_tag).alias("__tag"),
-        tiebreak.cast("long").alias("__tb"),
-        *[F.lit(None).cast(events.schema[c].dataType).alias(c) for c in event_cols],
-        F.struct(*[F.col(c) for c in payload]).alias("__pl"),
-    )
-    un = ev.unionByName(ft).withColumn("__bkt", _bkt("__ts", bucket_seconds))
-
-    # pass 1: running last within (entity, bucket)
-    w_in = (
-        Window.partitionBy(on, "__bkt")
-        .orderBy("__ts", "__tag", "__tb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = un.select(
-        F.col(on), "__ts", "__tag", "__bkt",
-        *[F.col(c) for c in event_cols],
-        F.last(F.col("__pl"), ignorenulls=True).over(w_in).alias("__in_pl"),
-    )
-
-    # pass 2: tiny per-(entity, bucket) feature summaries → carry-in.
-    # The summary is the LAST feature row of the bucket (max (__ts, __tb)),
-    # as one struct — whole-row semantics carry across buckets too.
-    fb = ft.withColumn("__bkt", _bkt("__ts", bucket_seconds))
-    fsum = fb.groupBy(on, "__bkt").agg(
-        F.max_by(F.col("__pl"), F.struct("__ts", "__tb")).alias("__pl")
-    )
-    domain = un.select(on, "__bkt").distinct()
-    w_b = Window.partitionBy(on).orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        _ns_join(domain, fsum, on, how="left")
-        .select(
-            F.col(on), "__bkt",
-            F.last(F.col("__pl"), ignorenulls=True).over(w_b).alias("__carry_pl"),
-        )
-    )
-
-    out = (
-        _ns_join(within.filter(F.col("__tag") == event_tag), carry, on)
-        .withColumn("__pl", F.coalesce(F.col("__in_pl"), F.col("__carry_pl")))
-        .select(
-            F.col(on), F.col("__ts").alias(left_ts), *event_cols,
-            *[F.col("__pl").getField(c).alias(c) for c in payload],
-        )
-    )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Forward fill, bucketed
-# ---------------------------------------------------------------------------
-
-def forward_fill_bucketed(
-    df: DataFrame,
-    cols: list[str],
-    on: str = "entity",
-    ts: str = "event_time",
-    bucket_seconds: int = 86400,
-    tiebreak: Column | None = None,
-) -> DataFrame:
-    """Exact forward-fill with bounded partitions (same two-pass shape as the
-    bucketed as-of: within-bucket running last + carry from earlier buckets)."""
-    tb = tiebreak if tiebreak is not None else F.lit(0)
-    d = df.withColumn("__bkt", _bkt(ts, bucket_seconds)).withColumn("__tb", tb.cast("long"))
-    w_in = (
-        Window.partitionBy(on, "__bkt").orderBy(ts, "__tb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled_in = {c: F.last(F.col(c), ignorenulls=True).over(w_in) for c in cols}
-    d2 = d.withColumns({f"__in_{c}": e for c, e in filled_in.items()})
-
-    bsum = d.groupBy(on, "__bkt").agg(
-        *[
-            F.max_by(F.col(c), F.when(F.col(c).isNotNull(), F.struct(F.col(ts), "__tb"))).alias(c)
-            for c in cols
-        ]
-    )
-    w_b = Window.partitionBy(on).orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    carry = bsum.select(
-        F.col(on), "__bkt",
-        *[F.last(F.col(c), ignorenulls=True).over(w_b).alias(f"__carry_{c}") for c in cols],
-    )
-    out = _ns_join(d2, carry, on).withColumns(
-        {c: F.coalesce(F.col(f"__in_{c}"), F.col(f"__carry_{c}")) for c in cols}
-    )
-    return out.drop("__bkt", "__tb", *[f"__in_{c}" for c in cols], *[f"__carry_{c}" for c in cols])
-
-
-# ---------------------------------------------------------------------------
-# Sessionize, bucketed
-# ---------------------------------------------------------------------------
 
 def sessionize_bucketed(
     df: DataFrame,
@@ -204,63 +303,30 @@ def sessionize_bucketed(
     session_col: str = "session_id",
     bucket_seconds: int = 86400,
 ) -> DataFrame:
-    """Exact gap sessionization with bounded partitions.
-
-    Within each (entity, bucket): raw ordinals counting the bucket's first row
-    as a new session.  On the summary table: re-check the first-row gap
-    against the previous bucket's last timestamp (adjust −1 when it is NOT a
-    real boundary) and prefix-sum the corrected per-bucket session counts into
-    per-bucket offsets.  Row session = offset + raw ordinal + adjust − 1.
-    """
-    d = df.withColumn("__bkt", _bkt(ts, bucket_seconds))
-    w_in = Window.partitionBy(on, "__bkt").orderBy(ts)
-    prev_in = F.lag(F.col(ts)).over(w_in)
-    # gap math in MICROSECONDS (see operators.windows.sessionize)
-    is_new_raw = (
-        prev_in.isNull()
-        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev_in) > F.lit(gap_seconds) * 1_000_000)
-    ).cast("long")
-    run = Window.partitionBy(on, "__bkt").orderBy(ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d2 = d.withColumn("__s_raw", F.sum(is_new_raw).over(run))
-
-    bsum = d.groupBy(on, "__bkt").agg(F.min(ts).alias("__first_ts"), F.max(ts).alias("__last_ts"))
-    raw_counts = d2.groupBy(on, "__bkt").agg(F.max("__s_raw").alias("__raw_news"))
-    w_prev = Window.partitionBy(on).orderBy("__bkt")
-    summ = (
-        _ns_join(bsum, raw_counts, on)
-        .withColumn("__prev_last", F.lag("__last_ts").over(w_prev))
-        .withColumn(
-            "__adjust",
-            F.when(
-                F.col("__prev_last").isNotNull()
-                & (
-                    F.unix_micros("__first_ts") - F.unix_micros("__prev_last")
-                    <= F.lit(gap_seconds) * 1_000_000
-                ),
-                F.lit(-1),
-            ).otherwise(F.lit(0)).cast("long"),
-        )
-        .withColumn(
-            "__offset",
-            F.coalesce(
-                F.sum(F.col("__raw_news") + F.col("__adjust")).over(
-                    Window.partitionBy(on).orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(on, "__bkt", "__adjust", "__offset")
-    )
-    out = _ns_join(d2, summ, on).withColumn(
-        session_col, F.col("__offset") + F.col("__s_raw") + F.col("__adjust") - 1
-    )
-    return out.drop("__bkt", "__s_raw", "__adjust", "__offset")
+    """Exact gap sessionization (operators.windows.sessionize) with bounded partitions."""
+    out = _pit_core(df, on=on, left_ts=ts, session_gap=gap_seconds, session_col=session_col,
+                    bucket_seconds=bucket_seconds)
+    return out.select(*df.columns, session_col)
 
 
-# ---------------------------------------------------------------------------
-# Fused bucketed PIT: as-of + forward-fill + time-range rolling in ONE
-# within-bucket pass + ONE summary/carry pass
-# ---------------------------------------------------------------------------
+def rolling_bucketed(
+    df: DataFrame,
+    aggs: dict[str, tuple[str, str]],
+    on: str = "entity",
+    ts: str = "event_time",
+    *,
+    range_seconds: int,
+    include_current: bool = True,
+    bucket_seconds: int = 86400,
+) -> DataFrame:
+    """Exact trailing time-range aggregates (operators.windows.rolling with
+    ``range_seconds``) with bounded partitions; ``range_seconds`` must be
+    ≤ ``bucket_seconds``.  Value-based frames are immune to the tie ordering
+    of row frames, so this holds on any data."""
+    out = _pit_core(df, on=on, left_ts=ts, aggs=aggs, range_seconds=range_seconds,
+                    include_current=include_current, bucket_seconds=bucket_seconds)
+    return out.select(*df.columns, *aggs)
+
 
 def pit_fused_bucketed(
     events: DataFrame,
@@ -270,383 +336,14 @@ def pit_fused_bucketed(
     right_ts: str = "feature_time",
     strict: bool = True,
     ffill_cols: list[str] | None = None,
-    rolling_spec: dict | None = None,   # {"name", "col", "fn", "range_seconds", "include_current": False}
+    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows" | "range_seconds", "include_current": False}
     session_gap: int | None = None,
     bucket_seconds: int = 86400,
 ) -> DataFrame:
-    """The skew-proof composite, fused: strict-`<` as-of join, forward-fill of
-    event columns and a time-range trailing aggregate all computed over ONE
-    (entity, bucket) shuffle+sort of the tagged event∪feature∪context stream,
-    repaired by ONE tiny summary/carry join.  Gap sessionization is FUSED
-    into the same sort too: the raw ordinal is a conditional running sum
-    whose "previous event" comes from a (unboundedPreceding, -1) frame, and
-    the cross-bucket repair rides the summary pass — so adding sessions
-    costs zero extra big-data shuffles.
-
-    Why fusion matters: the single-operator bucketed variants each pay their
-    own shuffle + summary join; composed naively that is 4× the stage walls
-    of the plain path.  Fused, the bucketed plan costs ~2 big-data passes —
-    close enough to the plain path's one that the skew-proofing is nearly
-    free, and strictly necessary once a hot key exceeds task capacity.
-
-    Mechanics that make interleaved row kinds safe in one window pass:
-    - as-of: running ``last(payload, ignorenulls)`` — event and context rows
-      carry null payload, so they simply don't contribute;
-    - forward-fill: ``last(when(real event, col), ignorenulls)``;
-    - rolling: value-based RANGE frame over unix seconds with a conditional
-      aggregate ``fn(when(real-or-context event, col))`` — feature rows in
-      frame contribute null, context rows are the true predecessors
-      replicated from the previous present bucket, and their originals live
-      in another partition so nothing double-counts.
-    """
-    from pyspark.sql.types import StructType
-
-    ffill_cols = ffill_cols or []
-    payload = [c for c in features.columns if c not in (on, right_ts)]
-    if not payload:
-        raise ValueError("pit_fused_bucketed: features must have at least one "
-                         f"payload column besides ({on}, {right_ts})")
-    event_cols = [c for c in events.columns if c not in (on, left_ts)]
-    overlap = set(payload) & set(events.columns)
-    if overlap:
-        raise ValueError(f"pit_fused_bucketed: column collision {sorted(overlap)}")
-    feat_tag, event_tag = (1, 0) if strict else (0, 1)
-    tiebreak = F.xxhash64(*[F.col(c) for c in payload])
-
-    # Whole-row payload struct (see asof._asof_union): the as-of attach is the
-    # winning feature ROW, nulls preserved.  (ffill stays per-column — that IS
-    # forward-fill's semantics.)
-    pl_type = StructType([features.schema[c] for c in payload])
-
-    ev = events.select(
-        F.col(on), F.col(left_ts).alias("__ts"), F.lit(event_tag).alias("__tag"),
-        F.lit(0).cast("long").alias("__tb"),
-        *[F.col(c) for c in event_cols],
-        F.lit(None).cast(pl_type).alias("__pl"),
-    )
-    ft = features.select(
-        F.col(on), F.col(right_ts).alias("__ts"), F.lit(feat_tag).alias("__tag"),
-        tiebreak.cast("long").alias("__tb"),
-        *[F.lit(None).cast(events.schema[c].dataType).alias(c) for c in event_cols],
-        F.struct(*[F.col(c) for c in payload]).alias("__pl"),
-    )
-    un = ev.unionByName(ft).withColumn("__bkt", _bkt("__ts", bucket_seconds)).withColumn(
-        "__ctx", F.lit(0)
-    )
-    # ONE distinct over the big unioned stream serves both the rolling
-    # context chain and the carry domain (it was computed twice before —
-    # two full aggregations of the largest intermediate)
-    domain = un.select(on, "__bkt").distinct()
-
-    # context rows for the rolling frame: real events near their bucket's end,
-    # replicated into the entity's next PRESENT bucket
-    if rolling_spec is not None:
-        if "range_seconds" not in rolling_spec:
-            raise ValueError("pit_fused_bucketed rolling_spec needs 'range_seconds' "
-                             "(time mode); pit_enrich's rolling_spec uses 'rows'")
-        rng = int(rolling_spec["range_seconds"])
-        if rng > bucket_seconds:
-            raise ValueError("rolling range_seconds must be ≤ bucket_seconds")
-        chain = domain.withColumn(
-            "__next_bkt", F.lead("__bkt").over(Window.partitionBy(on).orderBy("__bkt"))
-        )
-        bucket_end_us = ((F.col("__bkt") + 1) * bucket_seconds).cast("long") * 1_000_000
-        ctx = (
-            _ns_join(
-                un.filter((F.col("__tag") == event_tag)
-                          & (F.unix_micros(F.col("__ts")) >= bucket_end_us - rng * 1_000_000)),
-                chain, on,
-            )
-            .filter(F.col("__next_bkt").isNotNull())
-            .withColumn("__bkt", F.col("__next_bkt"))
-            .drop("__next_bkt")
-            .withColumn("__ctx", F.lit(1))
-        )
-        aug = un.unionByName(ctx)
-    else:
-        aug = un
-
-    # ---- single within-bucket pass: all running windows share one sort ----
-    w_last = (
-        Window.partitionBy(on, "__bkt")
-        .orderBy("__ts", "__tag", "__tb", "__ctx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cols = [
-        F.col(on), F.col("__ts"), F.col("__tag"), F.col("__bkt"), F.col("__ctx"),
-        *[F.col(c) for c in event_cols],
-        F.last(F.col("__pl"), ignorenulls=True).over(w_last).alias("__in_pl"),
-        *[
-            F.last(F.when((F.col("__tag") == event_tag) & (F.col("__ctx") == 0), F.col(c)),
-                   ignorenulls=True).over(w_last).alias(f"__in_f_{c}")
-            for c in ffill_cols
-        ],
-    ]
-    if rolling_spec is not None:
-        fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
-               "count": F.count, "stddev": F.stddev}
-        inc = rolling_spec.get("include_current", False)
-        w_roll = (
-            Window.partitionBy(on, "__bkt")
-            .orderBy(F.unix_micros(F.col("__ts")))
-            .rangeBetween(-int(rolling_spec["range_seconds"]) * 1_000_000, 0 if inc else -1)
-        )
-        cols.append(
-            fns[rolling_spec["fn"]](
-                F.when(F.col("__tag") == event_tag, F.col(rolling_spec["col"]))
-            ).over(w_roll).alias(rolling_spec["name"])
-        )
-    is_event = (F.col("__tag") == event_tag) & (F.col("__ctx") == 0)
-    if session_gap is not None:
-        # FUSED sessionization: the within-bucket raw ordinal rides the same
-        # (entity, bucket) sort as every other frame — no second big-data
-        # shuffle.  "Previous event's timestamp" is a conditional last() over
-        # (unboundedPreceding, -1): feature and context rows contribute
-        # nothing, so the gap check sees only the bucket's real events.
-        w_prev = (
-            Window.partitionBy(on, "__bkt")
-            .orderBy("__ts", "__tag", "__tb", "__ctx")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prev_ev_us = F.last(
-            F.when(is_event, F.unix_micros(F.col("__ts"))), ignorenulls=True
-        ).over(w_prev)
-        is_new = F.when(
-            is_event,
-            (
-                prev_ev_us.isNull()
-                | (F.unix_micros(F.col("__ts")) - prev_ev_us > F.lit(session_gap) * 1_000_000)
-            ).cast("long"),
-        )
-        cols.append(F.sum(is_new).over(w_last).alias("__s_raw"))
-    within = aug.select(*cols)
-
-    # ---- tiny summary/carry pass (features + ffill sources per bucket) ----
-    fb = ft.withColumn("__bkt", _bkt("__ts", bucket_seconds))
-    fsum = fb.groupBy(on, "__bkt").agg(
-        F.max_by(F.col("__pl"), F.struct("__ts", "__tb")).alias("__pl")
-    )
-    w_b = Window.partitionBy(on).orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    joined = _ns_join(domain, fsum, on, how="left")
-    if ffill_cols:
-        eb = ev.withColumn("__bkt", _bkt("__ts", bucket_seconds))
-        esum = eb.groupBy(on, "__bkt").agg(
-            *[F.max_by(F.col(c), F.when(F.col(c).isNotNull(), F.col("__ts"))).alias(f"__e_{c}")
-              for c in ffill_cols]
-        )
-        joined = _ns_join(joined, esum, on, how="left")
-    carry = (
-        joined
-        .select(
-            F.col(on), "__bkt",
-            F.last(F.col("__pl"), ignorenulls=True).over(w_b).alias("__carry_pl"),
-            *[F.last(F.col(f"__e_{c}"), ignorenulls=True).over(w_b).alias(f"__carry_f_{c}")
-              for c in ffill_cols],
-        )
-    )
-
-    kept = _ns_join(within.filter(is_event), carry, on)
-
-    if session_gap is not None:
-        # cross-bucket session repair on a TINY per-(entity, event-bucket)
-        # summary (same scheme as sessionize_bucketed): re-check the bucket's
-        # first-event gap against the previous event-bucket's last timestamp
-        # and prefix-sum corrected session counts into offsets.  The groupBy
-        # keys equal the window partitioning (map-side combinable), so the
-        # repair adds no shuffle OF THE OUTPUT — unlike the old follow-up
-        # sessionize_bucketed pass, which re-bucketed and re-sorted every
-        # output row (measured 3.5 s → 2.2 s at sf0.1).
-        raw_counts = (
-            within.filter(is_event)
-            .groupBy(on, "__bkt")
-            .agg(
-                F.max("__s_raw").alias("__raw_news"),
-                F.min("__ts").alias("__first_ts"),
-                F.max("__ts").alias("__last_ts"),
-            )
-        )
-        w_prev_b = Window.partitionBy(on).orderBy("__bkt")
-        summ = (
-            raw_counts
-            .withColumn("__prev_last", F.lag("__last_ts").over(w_prev_b))
-            .withColumn(
-                "__adjust",
-                F.when(
-                    F.col("__prev_last").isNotNull()
-                    & (
-                        F.unix_micros("__first_ts") - F.unix_micros("__prev_last")
-                        <= F.lit(session_gap) * 1_000_000
-                    ),
-                    F.lit(-1),
-                ).otherwise(F.lit(0)).cast("long"),
-            )
-            .withColumn(
-                "__offset",
-                F.coalesce(
-                    F.sum(F.col("__raw_news") + F.col("__adjust")).over(
-                        Window.partitionBy(on).orderBy("__bkt")
-                        .rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ),
-            )
-            .select(on, "__bkt", "__adjust", "__offset")
-        )
-        kept = _ns_join(kept, summ, on)
-
-    out = (
-        kept
-        .withColumn("__pl2", F.coalesce(F.col("__in_pl"), F.col("__carry_pl")))
-        .select(
-            F.col(on), F.col("__ts").alias(left_ts),
-            *[c for c in event_cols if c not in ffill_cols],
-            *[F.coalesce(F.col(f"__in_f_{c}"), F.col(f"__carry_f_{c}")).alias(c) for c in ffill_cols],
-            *[F.col("__pl2").getField(c).alias(c) for c in payload],
-            *([rolling_spec["name"]] if rolling_spec is not None else []),
-            *([
-                (F.col("__offset") + F.col("__s_raw") + F.col("__adjust") - 1).alias("session_id")
-            ] if session_gap is not None else []),
-        )
-    )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Rolling (rows mode), bucketed
-# ---------------------------------------------------------------------------
-
-def rolling_bucketed(
-    df: DataFrame,
-    aggs: dict[str, tuple[str, str]],
-    on: str = "entity",
-    ts: str = "event_time",
-    rows: int | None = None,
-    range_seconds: int | None = None,
-    include_current: bool = True,
-    bucket_seconds: int = 86400,
-    on_sparse: str = "fallback",
-) -> DataFrame:
-    """Trailing-window aggregates with bounded partitions (rows OR time mode).
-
-    Rows mode: the last N rows of every (entity, bucket) are replicated as
-    context rows into the entity's NEXT PRESENT bucket (so sparse timelines
-    don't break), the window runs within (entity, bucket) over real+context
-    rows, context rows are dropped from the output.  Exact when each present
-    bucket holds ≥ the frame's preceding-row need per entity (N-1 rows with
-    ``include_current``, N without); a sparser interior bucket means history
-    reaching 2+ buckets back.  That precondition is now ENFORCED via
-    ``on_sparse`` (VERDICT r4 — previously it was documented only and
-    violations truncated silently):
-
-    - ``"fallback"`` (default): entities with a sparse interior bucket are
-      routed through the plain unbucketed ``rolling`` window — exact for
-      everyone, fully lazy.  The bucketing guarantee still holds where it
-      matters: hot entities (many rows per bucket) satisfy the precondition
-      and stay bucketed; only sparse entities — whose whole-entity
-      partitions are small by construction — take the plain path.
-    - ``"raise"``: detect and raise with a bucket-sizing hint.  Costs one
-      eager action (a bounded ``.first()`` on the violation set) at
-      plan-build time.
-    - ``"unchecked"``: skip detection (the pre-r5 behavior) — callers who
-      have sized buckets out-of-band and want zero extra plan.
-
-    Detection rides the bucket-chain aggregation the operator already does
-    (``groupBy(entity, bucket).count`` instead of ``distinct``) — the same
-    shuffle, and Spark's ReuseExchange dedupes the repeated subtree across
-    the fallback's semi/anti joins.
-
-    Time mode (``range_seconds``): rows within ``range_seconds`` of their
-    bucket's end are replicated instead.  EXACT unconditionally for
-    ``range_seconds ≤ bucket_seconds`` — value-based frames are immune to the
-    tie-ordering ambiguity of row frames, and a context row landing in a
-    later far bucket is simply outside the frame; ``on_sparse`` is ignored.
-    """
-    if (rows is None) == (range_seconds is None):
-        raise ValueError("rolling_bucketed: specify exactly one of rows / range_seconds")
-    if range_seconds is not None and range_seconds > bucket_seconds:
-        raise ValueError("rolling_bucketed: range_seconds must be ≤ bucket_seconds (single-hop context)")
-    if on_sparse not in ("fallback", "raise", "unchecked"):
-        raise ValueError(f"rolling_bucketed: on_sparse must be 'fallback', 'raise' or 'unchecked', got {on_sparse!r}")
-    d = df.withColumn("__bkt", _bkt(ts, bucket_seconds)).withColumn("__ctx", F.lit(0))
-    # entity's bucket chain: next present bucket per (entity, bucket); the
-    # per-bucket count rides the same aggregation for sparse detection
-    w_chain = Window.partitionBy(on).orderBy("__bkt")
-    counts = (
-        d.groupBy(on, "__bkt").agg(F.count(F.lit(1)).alias("__n"))
-        .withColumn("__next_bkt", F.lead("__bkt").over(w_chain))
-        # positional has-prev (ADVICE r5): row_number distinguishes "no prior
-        # row" structurally instead of testing lag(__bkt) for null — today
-        # __bkt is never null (the _bkt sentinel coalesce), so the two are
-        # equivalent, but this form cannot silently break if a future bucket
-        # key admits nulls
-        .withColumn("__has_prev", F.row_number().over(w_chain) > 1)
-    )
-    chain = counts.select(on, "__bkt", "__next_bkt")
-    affected = None
-    if rows is not None and on_sparse != "unchecked":
-        # a frame in bucket B can reach need preceding rows; context from the
-        # previous present bucket P supplies min(count(P), rows) ≥ need iff
-        # count(P) ≥ need — sparser P WITH earlier history ⇒ truncation risk
-        need = rows - 1 if include_current else rows
-        sparse = counts.filter(
-            F.col("__next_bkt").isNotNull() & F.col("__has_prev") & (F.col("__n") < need)
-        )
-        if on_sparse == "raise":
-            hit = sparse.select(on, "__bkt", "__n").first()
-            if hit is not None:
-                raise ValueError(
-                    f"rolling_bucketed(rows={rows}): entity {hit[0]!r} has an interior "
-                    f"bucket {hit[1]} holding {hit[2]} rows < the frame's preceding-row "
-                    f"need {need} — rows-mode context would silently truncate history "
-                    f"reaching 2+ buckets back. Increase bucket_seconds so hot buckets "
-                    f"hold ≥ {need} rows, use on_sparse='fallback' (exact plain-window "
-                    f"fallback for affected entities), or on_sparse='unchecked'."
-                )
-        else:
-            affected = sparse.select(F.col(on).alias("__aff_on")).distinct()
-    if affected is not None:
-        # route affected entities through the exact plain window; null-safe
-        # entity matching (a null entity is its own window group)
-        cond = F.col(on).eqNullSafe(F.col("__aff_on"))
-        sparse_src = df.join(affected, cond, "left_semi")
-        d = d.join(affected, cond, "left_anti")
-    if rows is not None:
-        w_desc = Window.partitionBy(on, "__bkt").orderBy(F.col(ts).desc())
-        tails = (
-            d.withColumn("__rnd", F.row_number().over(w_desc))
-            .filter(F.col("__rnd") <= rows)
-            .drop("__rnd")
-        )
-    else:
-        bucket_end_us = ((F.col("__bkt") + 1) * bucket_seconds).cast("long") * 1_000_000
-        tails = d.filter(F.unix_micros(F.col(ts)) >= bucket_end_us - range_seconds * 1_000_000)
-    tails = (
-        _ns_join(tails, chain, on)
-        .filter(F.col("__next_bkt").isNotNull())
-        .withColumn("__bkt", F.col("__next_bkt"))
-        .drop("__next_bkt")
-        .withColumn("__ctx", F.lit(1))
-    )
-    aug = d.unionByName(tails)
-
-    fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max, "count": F.count, "stddev": F.stddev}
-    if rows is not None:
-        upper = Window.currentRow if include_current else -1
-        lower = -(rows - 1) if include_current else -rows
-        w = Window.partitionBy(on, "__bkt").orderBy(ts, "__ctx").rowsBetween(lower, upper)
-    else:
-        w = (
-            Window.partitionBy(on, "__bkt")
-            .orderBy(F.unix_micros(F.col(ts)))
-            .rangeBetween(-range_seconds * 1_000_000, 0 if include_current else -1)
-        )
-    out = aug.withColumns({name: fns[fn](col).over(w) for name, (col, fn) in aggs.items()})
-    out = out.filter(F.col("__ctx") == 0).drop("__bkt", "__ctx")
-    if affected is not None:
-        from feathr_online_spark.operators.windows import rolling
-
-        out = out.unionByName(
-            rolling(sparse_src, aggs, on=on, ts=ts, rows=rows,
-                    include_current=include_current)
-        )
-    return out
+    """The skew-proof composite: strict-`<` as-of join, forward-fill,
+    rows- or time-range rolling and gap sessions in one (entity, bucket) pass
+    plus one summary/carry repair."""
+    return _pit_core(events, features, on=on, left_ts=left_ts, right_ts=right_ts, strict=strict,
+                     ffill_cols=ffill_cols or (), session_gap=session_gap, bucket_seconds=bucket_seconds,
+                     include_current=(rolling_spec or {}).get("include_current", False),
+                     **_rolling_kw(rolling_spec))

@@ -83,6 +83,15 @@ def rolling(
     return df.withColumns(out)
 
 
+def gap_micros(gap_seconds: float) -> Column:
+    """A session gap as a BIGINT microsecond literal.  ``F.lit(gap) * 1_000_000``
+    is int × int and wraps at 2148 s with ANSI off (3600 s became
+    −694,967,296 µs: every row a new session)."""
+    if isinstance(gap_seconds, bool) or not gap_seconds > 0 or gap_seconds != int(gap_seconds):
+        raise ValueError(f"session gap must be a positive whole number of seconds, got {gap_seconds!r}")
+    return F.lit(int(gap_seconds) * 1_000_000).cast("long")
+
+
 def sessionize(
     df: DataFrame,
     gap_seconds: int,
@@ -104,7 +113,7 @@ def sessionize(
     # gap boundaries).
     is_new = (
         prev.isNull()
-        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev) > F.lit(gap_seconds) * 1_000_000)
+        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev) > gap_micros(gap_seconds))
     ).cast("long")
     run = Window.partitionBy(on).orderBy(ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.withColumn(session_col, F.sum(is_new).over(run) - F.lit(1))

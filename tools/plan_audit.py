@@ -33,10 +33,13 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return df._jdf.queryExecution().executedPlan().toString()
 
-    def audit(name, df, checks: dict[str, str]):
+    def audit(name, df, checks: dict[str, str], counts: dict[str, tuple[int, int]] | None = None):
+        """``counts``: label → (measured, wanted) for checks made off the plan text."""
         p = plan_of(df)
         lines.append(f"## {name}")
         lines.append("")
+        for label, (got, want) in (counts or {}).items():
+            lines.append(f"- {label}: {'✅' if got == want else '❌'} ({got}, want {want})")
         for label, pattern in checks.items():
             # a "!"-prefixed pattern asserts ABSENCE (0 matches = pass)
             absent = pattern.startswith("!")
@@ -112,17 +115,31 @@ def main() -> None:
         "(entity, __bkt) exchange": r"Exchange hashpartitioning\(entity[^\n]*__bkt",
     })
 
-    # 10b. rolling_bucketed with the r5 sparse-bucket guard (on_sparse=
-    # fallback): window partitions stay (entity, bucket)-bounded; the
-    # affected-entity routing is semi/anti joins, never a cartesian; and the
-    # whole guard must not introduce a driver-side action (the plan builds
-    # lazily — audited implicitly by this being a plan, not a result)
-    audit("rolling_bucketed — bounded partitions + lazy sparse guard",
+    # 10b. rolling_bucketed (range mode): window partitions stay
+    # (entity, bucket)-bounded, the context rows are a filter (never a
+    # cartesian), and no Python runs per row
+    audit("rolling_bucketed — bounded partitions",
           qs["rolling_bucketed"](spark, SF), {
         "(entity, __bkt) window exchange": r"Exchange hashpartitioning\(entity[^\n]*__bkt",
         "no cartesian product": r"!CartesianProduct",
         "no python UDF in the plan": r"!BatchEvalPython|ArrowEvalPython",
     })
+
+    # 10c. pit_enrich's hot branch: the event∪feature stream crosses ONE
+    # exchange, keyed (entity, __bkt); the narrow summary pass and the carry
+    # move keys, times and rolled/filled values only — never the passenger
+    # column v nor the payload struct
+    from feathr_online_spark.operators.pit import pit_enrich
+    from tools.plan_shape import shuffle_exchanges
+
+    _ev = entry._t(spark, SF, "events")
+    hot = pit_enrich(entry._pit_left(_ev, null_inject=True), entry._pit_feat(_ev, alias="pv"),
+                     rolling_spec={"name": "hist", "col": "event_id", "fn": "count", "rows": 16},
+                     session_gap=3600, ffill_cols=["pv"], hot_threshold=0, bucket_seconds=86400)
+    wide = [p for p, cols in shuffle_exchanges(hot) if "__bkt" in cols and cols & {"v", "__pl"}]
+    audit("pit_enrich hot branch — one full-width exchange", hot, {
+        "(entity, __bkt) stream exchange": r"Exchange hashpartitioning\(entity[^\n]*__bkt",
+    }, counts={"full-width (entity, __bkt) exchanges": (len(wide), 1)})
 
     # 11. DSL-compiled pipeline: parse→compile adds ZERO runtime overhead —
     # the script must land in the same physical shapes hand-written code gets:
