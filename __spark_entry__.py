@@ -1010,7 +1010,8 @@ HAVING count(*) > 0
 # ---------------------------------------------------------------------------
 
 # Shared DuckDB prelude: word arrays and distinct 3-gram shingle sets per doc,
-# mirroring operators.dedup.with_shingles (lower → split → 3-gram → distinct).
+# mirroring operators.dedup._doc_frame (lower → split → 3-gram → distinct;
+# the engine keeps xxhash64s of the shingles, which changes no set size).
 _DUCK_SHINGLES = """
 WITH w AS (
   SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS ws FROM documents
@@ -1045,52 +1046,18 @@ FROM documents GROUP BY source
 """
 
 
-# suite-level shared tokenization (VERDICT r4 #8): the dedup gate family
-# (ngram / minhash / simhash / decontaminate) all consume the SAME
-# words(lower(text)) tokenization of the documents table; cache ONE
-# persisted (doc_id, source, text, __w) frame per (sf_dir) so the corpus is
-# scanned + tokenized once per bench RUN instead of once per gate × rep.
-# Engine cost only — gate semantics and output hashes are unchanged (the
-# oracle re-derives tokens from text either way).  The single pinned frame
-# is a few MB at gate scales and is the deliberate exception to the
-# unpersist-after-gate rule (ADVICE r4), documented here.
-_TOKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _shared_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from feathr_online_spark.operators.text import words
-
-    # keyed by (application, sf_dir): a driver that builds a FRESH session
-    # per query must not be handed a frame pinned to a stopped session
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TOKS_CACHE.get(key)
-    if df is None:
-        # evict entries from other (stopped) applications on insert — the
-        # cache would otherwise grow for the Python process lifetime
-        # (ADVICE r5); sf_dir contents must be immutable for the
-        # application lifetime (the persisted frame serves them verbatim)
-        for k in [k for k in _TOKS_CACHE if k[0] != spark.sparkContext.applicationId]:
-            _TOKS_CACHE.pop(k, None)
-        docs = _t(spark, sf_dir, "documents")
-        df = docs.select("doc_id", "source", "text",
-                         words(F.lower(F.col("text"))).alias("__w")).persist()
-        _TOKS_CACHE[key] = df
-    return df
-
-
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """near-dup pairs by exact word-3-gram Jaccard ≥ 0.5 (inverted index)."""
-    toks = _shared_toks(spark, sf_dir)
-    return ngram_jaccard_pairs(toks, "text", "doc_id", n=3, threshold=0.5,
-                               words_col="__w")
+    docs = _t(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """near-dup pairs via MinHash(128)+LSH(32 bands) with exact-Jaccard verify;
     at jaccard ≥ 0.5 LSH recall ≈ 1, so the oracle is the exact pair set."""
-    toks = _shared_toks(spark, sf_dir)
-    return minhash_lsh_pairs(toks, "text", "doc_id", n=3, k=128, bands=32,
-                             threshold=0.5, words_col="__w")
+    docs = _t(spark, sf_dir, "documents")
+    return minhash_lsh_pairs(docs, "text", "doc_id", n=3, k=128, bands=32,
+                             threshold=0.5)
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,14 +1068,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-independent quality bar — measured 0.93/1.0/0.93 at
     sf0.001/0.01/0.1, so the ≥ 0.85 gate has margin.  The oracle reproduces
     n_strong_pairs exactly and pins recall_ok = true."""
-    # both legs consume the SAME tokenization — the suite-level shared
-    # persisted frame (one scan+tokenize per bench run, not per gate × rep;
-    # VERDICT r3 #2 → r4 #8)
-    toks = _shared_toks(spark, sf_dir)
-    found = simhash_pairs(toks, "text", "doc_id", max_hamming=6,
-                          words_col="__w").select("a", "b")
-    strong = ngram_jaccard_pairs(toks, "text", "doc_id", n=3, threshold=0.8,
-                                 words_col="__w").select("a", "b")
+    docs = _t(spark, sf_dir, "documents")
+    found = simhash_pairs(docs, "text", "doc_id", max_hamming=6).select("a", "b")
+    strong = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8).select("a", "b")
     hit = strong.join(found.withColumn("__hit", F.lit(1)), ["a", "b"], "left")
     # the count()==0 arm keeps recall vacuously TRUE on an empty strong
     # set — sum() over zero rows is NULL and NULL >= 0 is NULL, which
@@ -1428,11 +1390,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with the eval slice (doc_id % 10 == 0), plus the drop flag."""
     from feathr_online_spark.operators.dedup import contamination_stats
 
-    toks = _shared_toks(spark, sf_dir)
-    evalset = toks.filter(F.col("doc_id") % 10 == 0)
-    train = toks.filter(F.col("doc_id") % 10 != 0)
-    return contamination_stats(train, evalset, "text", "doc_id", n=3,
-                               min_overlap=2, words_col="__w")
+    docs = _t(spark, sf_dir, "documents")
+    evalset = docs.filter(F.col("doc_id") % 10 == 0)
+    train = docs.filter(F.col("doc_id") % 10 != 0)
+    return contamination_stats(train, evalset, "text", "doc_id", n=3, min_overlap=2)
 
 
 ORACLE_DECONTAMINATE = """
@@ -1537,9 +1498,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE."""
     from feathr_online_spark.operators.dedup import dedup_clusters
 
-    toks = _shared_toks(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(toks, "text", "doc_id", n=3, threshold=0.5,
-                                words_col="__w")
+    docs = _t(spark, sf_dir, "documents")
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
     return dedup_clusters(pairs)
 
 
@@ -2094,9 +2054,8 @@ def engine_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def e_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-        toks = _shared_toks(spark, sf_dir)
-        return simhash_pairs(toks, "text", "doc_id", max_hamming=6,
-                             words_col="__w")
+        docs = _t(spark, sf_dir, "documents")
+        return simhash_pairs(docs, "text", "doc_id", max_hamming=6)
 
     def e_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         from feathr_online_spark.operators.similarity import knn_ivf

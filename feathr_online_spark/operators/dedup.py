@@ -18,8 +18,12 @@ Scale design notes (the point of each variant):
   pigeonhole band trick ((d+1) chunks, at least one must match exactly).
 - embedding-cosine near-dup lives in operators/similarity.py.
 
-All hashing is JVM xxhash64; shingling/banding are higher-order array
-functions — no Python in any hot path.
+All hashing is JVM xxhash64; shingling and banding are higher-order array
+functions.  The MinHash signature sweep and the SimHash bit vote run as
+vectorized numpy in ``mapInPandas`` (bit-identical to the JVM forms), so
+their ids must be integral.  Every near-dup operator starts from one
+per-document frame (``_doc_frame``) and both pair paths keep a pair by one
+exact-Jaccard rule (``_jaccard_pairs``).
 """
 
 from __future__ import annotations
@@ -27,23 +31,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from feathr_online_spark.operators.text import content_fingerprint, words
+from feathr_online_spark.operators.similarity import _require_integral_id
+from feathr_online_spark.operators.text import content_fingerprint, shingles, words
 
 
 # ---------------------------------------------------------------------------
-# Shingling
+# The per-document frame and the Jaccard rule
 # ---------------------------------------------------------------------------
-
-def shingles(word_arr: Column, n: int = 3, distinct: bool = True) -> Column:
-    """Word n-gram shingles from a token array: transform over a 0..len-n
-    index sequence, concat_ws each window.  Empty array when len < n.
-    (Guarded with when(): Spark's sequence(0, -1) counts BACKWARDS, it is not
-    empty, so the short-array case needs an explicit branch.)"""
-    idx = F.sequence(F.lit(0), F.size(word_arr) - n)
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(word_arr, i + 1, n)))
-    sh = F.when(F.size(word_arr) >= n, sh).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(sh) if distinct else sh
-
 
 def _widen(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's shuffle width.
@@ -58,24 +52,33 @@ def _widen(df: DataFrame) -> DataFrame:
     return df.repartition(width)
 
 
-def with_shingles(df: DataFrame, text_col: str, n: int = 3, out_col: str = "shingles") -> DataFrame:
-    return df.withColumn(out_col, shingles(words(F.lower(F.col(text_col))), n))
+def _doc_frame(df: DataFrame, text_col: str, id_col: str, n: int | None = None,
+               widen: bool = True) -> DataFrame:
+    """The per-document frame of every near-dup operator: (id, text)
+    projected BEFORE the widening repartition, so no other column rides
+    that exchange, then tokenized as ``words(lower(text))``.  ``n=None`` →
+    (id, w), the token array; otherwise (id, shingles, sz): the distinct
+    xxhash64 hashes of the word n-gram shingles and their count.  Every
+    comparison, join and MinHash then works on 8-byte longs (64-bit
+    collisions are ~n²/2⁶⁵); Jaccard over the hashes equals that over the
+    strings."""
+    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
+    if widen:
+        base = _widen(base)
+    w = words(F.lower(F.col("__t")))
+    if n is None:
+        return base.select("id", w.alias("w"))
+    sh = F.array_distinct(F.transform(shingles(w, n, distinct=False), lambda s: F.xxhash64(s)))
+    return base.select("id", sh.alias("shingles")).withColumn("sz", F.size("shingles"))
 
 
-def with_shingle_hashes(df: DataFrame, text_col: str, n: int = 3, out_col: str = "shingles",
-                        words_col: str | None = None) -> DataFrame:
-    """Distinct n-gram shingles hashed to xxhash64 longs — one string hash per
-    shingle, after which every downstream comparison/join/minhash works on
-    8-byte longs instead of ~25-byte strings (~2-3× cheaper end-to-end;
-    64-bit collisions are ~n²/2⁶⁵ — irrelevant at any corpus size that fits a
-    cluster).  Set equality/Jaccard over hashes equals that over strings.
-
-    ``words_col``: name of a pre-tokenized ``array<string>`` column to shingle
-    instead of re-tokenizing ``text_col`` — lets several dedup legs share one
-    (persisted) tokenization pass."""
-    base = F.col(words_col) if words_col else words(F.lower(F.col(text_col)))
-    sh = shingles(base, n)
-    return df.withColumn(out_col, F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s))))
+def _jaccard_pairs(pairs: DataFrame, inter: Column, size_a: Column, size_b: Column,
+                   threshold: float) -> DataFrame:
+    """(a, b, jaccard) rows of ``pairs`` with
+    ``round(inter / (|A| + |B| - inter), 4) >= threshold`` — exact Jaccard
+    of two distinct sets from their intersection size and their sizes."""
+    j = F.round(inter / (size_a + size_b - inter), 4)
+    return pairs.select("a", "b", j.alias("jaccard")).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -111,17 +114,16 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int = 100_000,
-    words_col: str | None = None,
 ) -> DataFrame:
     """All (a, b, jaccard) pairs with word-n-gram Jaccard ≥ threshold, a < b.
 
     Count-based exact algorithm — no per-pair array work:
     |A∩B| IS the number of co-occurrences in the inverted-index self-join
-    (shingle sets are distinct per doc), so
-    ``jaccard = inter / (|A| + |B| - inter)`` comes from one groupBy over the
-    join — the shuffle carries only (a, b) id pairs, never shingle arrays.
-    ~30× faster than verify-by-array-intersection at sf0.1 and the only shape
-    that scales: per-pair state is one counter.
+    (shingle sets are distinct per doc), so the Jaccard rule
+    (``_jaccard_pairs``) comes from one groupBy over the join — the shuffle
+    carries only (a, b) id pairs, never shingle arrays.  ~30× faster than
+    verify-by-array-intersection at sf0.1 and the only shape that scales:
+    per-pair state is one counter.
 
     ``max_df`` drops stop-shingles (df > cap) before pair expansion — a hot
     shingle contributes O(df²) candidate rows.  With a cap the computed
@@ -130,23 +132,19 @@ def ngram_jaccard_pairs(
     to share enough rare shingles — at web scale this is the standard trade;
     default cap is effectively off for test-sized corpora).
 
-    r6 note: the only change vs r5 is pre-projecting the input to
-    (id, tokens) before the widening repartition, so document text never
-    rides that exchange (−15% measured).  Two tempting "improvements" were
-    measured and REJECTED on the 50k-doc corpus (same-JVM A/B, min-of-2):
-    carrying (sza, szb) through the self-join to kill the post-aggregation
-    size joins widens the ~10⁸-row pair exchange from 16 to 32 bytes/row —
-    24 → 68 s; and replacing the self-join with a per-shingle collect_list
-    + array-expression pair expansion moves the bucket cross product from
-    codegen'd join machinery into interpreted HOF eval, which is quadratic
-    per HOT shingle (a boilerplate 3-gram shared by thousands of docs) and
-    took minutes.  The self-join does NOT re-run the shingling: both sides
-    read one ReusedExchange of the same repartition.
+    The input is projected to (id, text) before the widening repartition, so
+    no other column rides that exchange (−15% measured in r6).  Two tempting
+    "improvements" were measured and REJECTED on the 50k-doc corpus (same-JVM
+    A/B, min-of-2): carrying (sza, szb) through the self-join to kill the
+    post-aggregation size joins widens the ~10⁸-row pair exchange from 16 to
+    32 bytes/row — 24 → 68 s; and replacing the self-join with a per-shingle
+    collect_list + array-expression pair expansion moves the bucket cross
+    product from codegen'd join machinery into interpreted HOF eval, which is
+    quadratic per HOT shingle (a boilerplate 3-gram shared by thousands of
+    docs) and took minutes.  The self-join does NOT re-run the shingling: both
+    sides read one ReusedExchange of the same repartition.
     """
-    keep = [id_col, words_col or text_col]
-    sh = with_shingle_hashes(_widen(df.select(*keep)), text_col, n, words_col=words_col).select(
-        F.col(id_col).alias("id"), "shingles", F.size("shingles").alias("sz")
-    )
+    sh = _doc_frame(df, text_col, id_col, n)
     # (A high-threshold prefix-filter path — Bayardo-style all-pairs over a
     # hash-order prefix index with full-set verify — was measured and
     # REJECTED at t=0.8: the array-intersect verify over the candidate set
@@ -169,39 +167,24 @@ def ngram_jaccard_pairs(
     j = (
         inter.join(sizes.withColumnsRenamed({"id": "a", "sz": "__sza"}), "a")
         .join(sizes.withColumnsRenamed({"id": "b", "sz": "__szb"}), "b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("__inter") / (F.col("__sza") + F.col("__szb") - F.col("__inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
     )
-    return j
+    return _jaccard_pairs(j, F.col("__inter"), F.col("__sza"), F.col("__szb"), threshold)
 
 
 def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Join shingle sets onto candidate (a, b) pairs and keep jaccard ≥ t.
-
-    The candidate set is tiny relative to the corpus — broadcast it (and the
-    first join's result) so both attach joins stream the shingle table
-    map-side instead of shuffling it twice."""
-    a_sets = sh.select(F.col("id").alias("a"), F.col("shingles").alias("__sa"))
-    b_sets = sh.select(F.col("id").alias("b"), F.col("shingles").alias("__sb"))
-    j = F.broadcast(cand).join(a_sets, "a")
-    j = (
-        F.broadcast(j).join(b_sets, "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("__sa", "__sb"))
-                / F.size(F.array_union("__sa", "__sb")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return j
+    """Keep the candidate (a, b) pairs whose exact Jaccard passes the rule.
+    Only the bare candidate keys are broadcast; each side's shingle sets
+    stream past them, and the two halves meet in a sort-merge join on
+    (a, b) — hinted, so AQE cannot demote it to a broadcast of shingle
+    arrays (|candidates| × set size, unbounded)."""
+    keys = F.broadcast(cand.select("a", "b"))
+    sa = sh.select(F.col("id").alias("a"), F.col("shingles").alias("__sa"),
+                   F.col("sz").alias("__sza")).join(keys, "a")
+    sb = sh.select(F.col("id").alias("b"), F.col("shingles").alias("__sb"),
+                   F.col("sz").alias("__szb")).join(keys, "b")
+    j = sa.hint("merge").join(sb, ["a", "b"])
+    inter = F.size(F.array_intersect("__sa", "__sb"))
+    return _jaccard_pairs(j, inter, F.col("__sza"), F.col("__szb"), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -215,15 +198,6 @@ def _minhash_params(k: int, seed: int = 97531) -> list[tuple[int, int]]:
 
     r = random.Random(seed)
     return [(r.getrandbits(63) | 1, r.getrandbits(63)) for _ in range(k)]
-
-
-def _wrap64(e: Column) -> Column:
-    """Identity: non-ANSI Spark long arithmetic wraps like Java — documented
-    intent.  Under ANSI mode the same multiply-add would instead raise
-    ARITHMETIC_OVERFLOW on (essentially) every signature; minhash_signature
-    guards the session setting up front so external callers fail with a
-    clear message rather than a mid-job executor error."""
-    return e
 
 
 def _require_non_ansi() -> None:
@@ -241,7 +215,7 @@ def _require_non_ansi() -> None:
 
 def minhash_signature(shingle_arr: Column, k: int = 128) -> Column:
     """k-permutation MinHash signature over ALREADY-HASHED shingles (longs,
-    see with_shingle_hashes): permutation i is the affine map
+    see _doc_frame): permutation i is the affine map
     ``x → a_i·x + b_i`` on the wrap-around 64-bit ring (a_i odd → bijective),
     the datasketch-style construction.  One multiply-add per (element, perm)
     instead of one xxhash64 — measured 2.3× faster end-to-end at sf0.1 —
@@ -257,7 +231,10 @@ def minhash_signature(shingle_arr: Column, k: int = 128) -> Column:
     params = _minhash_params(k)
 
     def perm(a: int, b: int):
-        return lambda s: _wrap64(s * F.lit(a) + F.lit(b))
+        # non-ANSI long arithmetic wraps like Java: the wrap-around ring the
+        # permutation lives on (ANSI mode would raise ARITHMETIC_OVERFLOW on
+        # essentially every signature; _require_non_ansi fails first instead)
+        return lambda s: s * F.lit(a) + F.lit(b)
 
     return F.array(*[F.array_min(F.transform(shingle_arr, perm(a, b))) for a, b in params])
 
@@ -270,8 +247,8 @@ def _minhash_sigs_pd(sh: DataFrame, k: int) -> DataFrame:
     ``array_min``).  The k-permutation sweep was the minhash gate's dominant
     interpreted-HOF cost (k × |shingles| lambda evals per doc); here it is
     k vectorized passes over the batch's flattened shingle array with a
-    segmented ``minimum.reduceat``.  Ids must be integral (the gate's doc
-    ids are longs)."""
+    segmented ``minimum.reduceat``.  Documents with no shingles get no
+    signature.  Ids must be integral (the gate's doc ids are longs)."""
     import pandas as pd
 
     params = _minhash_params(k)
@@ -308,23 +285,24 @@ def minhash_lsh_pairs(
     k: int = 128,
     bands: int = 32,
     threshold: float = 0.5,
-    words_col: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash LSH banding, verified with exact Jaccard.
 
     r = k/bands rows per band; a pair lands in the same bucket with
     probability 1-(1-j^r)^bands — at (k=128, b=32, r=4) recall at j≥0.5 is
     ≈0.99 and ≈1.0 at j≥0.8.  Only same-bucket documents are compared, so
-    cost scales with collisions, not corpus².
+    cost scales with collisions, not corpus².  ``id_col`` must be integral
+    (the signature kernel carries ids as int64); other types raise
+    ValueError.
     """
     if k % bands != 0:
         raise ValueError("k must be divisible by bands")
+    _require_integral_id(df, id_col)
     r = k // bands
-    keep = [id_col, words_col or text_col]
     _require_non_ansi()   # documents the wrap-around contract for this path too
-    sh = with_shingle_hashes(_widen(df.select(*keep)), text_col, n, words_col=words_col).select(
-        F.col(id_col).alias("id"), "shingles"
-    ).filter(F.size("shingles") > 0)
+    # no size > 0 filter: the signature kernel skips empty sets, and a filter
+    # would be pushed into the unwidened scan and shingle every doc twice
+    sh = _doc_frame(df, text_col, id_col, n)
     sig = _minhash_sigs_pd(sh, k)
     # one row per (doc, band): bucket key = xxhash64 of the band's slice
     bucketed = sig.select(
@@ -359,7 +337,7 @@ def minhash_lsh_pairs(
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .distinct()
     )
-    return _verify_jaccard(cand, sh.select("id", "shingles"), threshold)
+    return _verify_jaccard(cand, sh, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -462,7 +440,6 @@ def contamination_stats(
     id_col: str,
     n: int = 3,
     min_overlap: int = 2,
-    words_col: str | None = None,
 ) -> DataFrame:
     """Per-train-document contamination against an eval corpus: the number of
     distinct word-n-gram shingles the document shares with ANY eval document
@@ -476,18 +453,13 @@ def contamination_stats(
     hashed longs — eval sets are small relative to the corpus) and the train
     side probes it with a semi-join per exploded shingle; the shuffle carries
     only (doc id, shingle hash) pairs, and Catalyst/AQE broadcasts the eval
-    set when it fits.  Never an all-pairs document comparison.
-
-    ``words_col``: pre-tokenized column on BOTH frames (see
-    with_shingle_hashes) so the train and eval legs can share one persisted
-    tokenization.
+    set when it fits.  Never an all-pairs document comparison.  The eval
+    side is not widened: it is small, and its distinct shingle set is what
+    gets broadcast.
     """
-    keep = [id_col, words_col or text_col]
-    tr = with_shingle_hashes(_widen(train.select(*keep)), text_col, n, words_col=words_col).select(
-        F.col(id_col).alias("id"), "shingles", F.size("shingles").alias("n_shingles")
-    )
+    tr = _doc_frame(train, text_col, id_col, n).withColumnRenamed("sz", "n_shingles")
     ev_sh = (
-        with_shingle_hashes(evalset.select(*keep), text_col, n, words_col=words_col)
+        _doc_frame(evalset, text_col, id_col, n, widen=False)
         .select(F.explode("shingles").alias("s"))
         .distinct()
     )
@@ -527,17 +499,14 @@ def decontaminate(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(df: DataFrame, text_col: str, id_col: str,
-              words_col: str | None = None) -> DataFrame:
+def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, simhash) — 64-bit SimHash over word hashes: per bit, majority vote
-    of word-hash bits.  Explode words → 64 conditional sums in ONE groupBy
-    (single shuffle of (id, word-hash)).  ``words_col``: pre-tokenized
-    array<string> column to use instead of tokenizing ``text_col``."""
+    of word-hash bits.  ``id_col`` must be integral (the vote kernel carries
+    ids as int64); other types raise ValueError."""
     import pandas as pd
 
-    base = F.col(words_col) if words_col else words(F.lower(F.col(text_col)))
-    keep = [id_col, words_col or text_col]
-    w = _widen(df.select(*keep)).select(F.col(id_col).alias("id"), F.explode(base).alias("w"))
+    _require_integral_id(df, id_col)
+    w = _doc_frame(df, text_col, id_col).select("id", F.explode("w").alias("w"))
     h = w.select("id", F.xxhash64("w").alias("h"))
 
     # r6: the per-bit majority vote runs as a segmented numpy reduction in
@@ -547,7 +516,7 @@ def simhash64(df: DataFrame, text_col: str, id_col: str,
     # a doc spanning two Arrow batches is handled by carrying its partial
     # bit counts.  Values are bit-identical: bit i set ⇔ Σ(±1) > 0 ⇔
     # 2·count_i > n, same xxhash64 word hashes (still computed codegen'd,
-    # JVM-side).  Ids must be integral (the gate's doc ids are longs).
+    # JVM-side).
     def gen(batches):
         import numpy as np
 
@@ -601,14 +570,14 @@ def simhash_pairs(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    words_col: str | None = None,
 ) -> DataFrame:
     """(a, b, hamming) pairs with Hamming(simhash_a, simhash_b) ≤ max_hamming.
 
     Pigeonhole banding: split 64 bits into (max_hamming+1) chunks; any pair
     within distance d agrees exactly on ≥1 chunk → equi-join per chunk, then
-    verify with bit_count(a XOR b)."""
-    sh = simhash64(df, text_col, id_col, words_col=words_col)
+    verify with bit_count(a XOR b).  ``id_col`` must be integral (see
+    simhash64)."""
+    sh = simhash64(df, text_col, id_col)
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
     chunk_structs = [

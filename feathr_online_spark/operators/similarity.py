@@ -2,16 +2,17 @@
 
 - ``cosine`` — pure-Column cosine similarity (zip_with dot product; doubles
   throughout so results are engine-portable).
-- ``knn_bruteforce`` — exact top-k: broadcast the (small) query set against
-  the corpus, one window per query.  The baseline and the verifier.
+- ``knn_bruteforce`` — exact top-k: the (small) query set is replicated to
+  every corpus block, one window per query.  The baseline and the verifier.
 - ``knn_lsh`` — random-hyperplane LSH: deterministic planes (seeded numpy)
   shipped as literal arrays; sign pattern = bucket; probe only the query's
   bucket (+ optional multi-probe).  The scale path: bucket join instead of
   corpus × query cross product.
 - ``embedding_topk_pairs`` — most-similar corpus pairs (embedding near-dup).
 
-No Python in the scoring path — the dot products are JVM higher-order
-functions; numpy appears only at plan-build time to generate plane literals.
+The LSH paths score with JVM higher-order functions; the exact scans
+(``knn_bruteforce*``, ``embedding_topk_pairs``) score blocks with numpy BLAS
+in ``applyInPandas``, so their ids must be integral.
 """
 
 from __future__ import annotations
@@ -38,6 +39,29 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(ad, bd) / (_norm(ad) * _norm(bd))
 
 
+def _require_integral_id(df: DataFrame, id_col: str) -> None:
+    """Raise ValueError naming ``id_col`` when its type is not integral: the
+    numpy kernels carry ids as int64 and would otherwise fail deep in an
+    executor or cast silently."""
+    from pyspark.sql.types import IntegralType
+
+    t = df.schema[id_col].dataType
+    if not isinstance(t, IntegralType):
+        raise ValueError(f"id column {id_col!r} must be an integral type "
+                         f"(tinyint/smallint/int/bigint), got {t.simpleString()}")
+
+
+def _round_half_up(x):
+    """Spark ``round(x)`` (HALF_UP: ties away from zero) over a numpy array,
+    as int64.  Not ``floor(|x| + 0.5)``: that sum rounds 0.49999999999999994
+    up to 1.0; the fractional part ``|x| - trunc(|x|)`` is exact."""
+    import numpy as np
+
+    ax = np.abs(x)
+    t = np.trunc(ax)
+    return np.copysign(t + (ax - t >= 0.5), x).astype(np.int64)
+
+
 def _blocked_knn_cand(
     queries: DataFrame,
     corpus: DataFrame,
@@ -62,7 +86,8 @@ def _blocked_knn_cand(
     ``quantized=True`` reproduces the SQ8 recipe of
     ``knn_bruteforce_quantized`` bit-for-bit in numpy: unit-normalize both
     sides, per-vector symmetric int8 quantization (scale = max|x|/127,
-    q = round(x/s)), exact integer dot, times the two scales."""
+    q = round(x/s) rounding half up — away from zero — like Spark's
+    ``round``), exact integer dot, times the two scales."""
     import pandas as pd
 
     width = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -99,8 +124,8 @@ def _blocked_knn_cand(
             csc = np.abs(cx).max(axis=1) / 127.0
             qsc = np.where(qsc > 0, qsc, 1.0)
             csc = np.where(csc > 0, csc, 1.0)
-            qq = np.round(qx / qsc[:, None]).astype(np.int64)
-            cq = np.round(cx / csc[:, None]).astype(np.int64)
+            qq = _round_half_up(qx / qsc[:, None])
+            cq = _round_half_up(cx / csc[:, None])
             m = (cq @ qq.T).astype(np.float64) * csc[:, None] * qsc[None, :]
         else:
             m = (cx @ qx.T) / (np.linalg.norm(cx, axis=1)[:, None]
@@ -135,7 +160,10 @@ def knn_bruteforce(
     (round(cos, 6) DESC, neighbor id ASC).  O(|Q|·|C|) scoring but the
     arithmetic runs as blocked BLAS matrix products (r6 — see
     _blocked_knn_cand); the final merge is a window over ≤ |Q|·width·k
-    candidate rows.  At 100 TB this is the verify/eval path, not serving."""
+    candidate rows.  At 100 TB this is the verify/eval path, not serving.
+    ``q_id`` and ``c_id`` must be integral; other types raise ValueError."""
+    _require_integral_id(queries, q_id)
+    _require_integral_id(corpus, c_id)
     cand = _blocked_knn_cand(queries, corpus, k, q_id, q_vec, c_id, c_vec)
     scored = cand.select(
         F.col("qid").alias(q_id),
@@ -195,11 +223,14 @@ def knn_bruteforce_quantized(
     sides (SQ8: per-vector symmetric scale), score with the integer dot
     (≈ cosine), per-query top-k.  Same blocked-BLAS shape as knn_bruteforce
     (r6 — _blocked_knn_cand(quantized=True) reproduces
-    quantize_vectors/dot_quantized in numpy: identical scales, identical
-    rounding grid, exact integer accumulation); 4× less data per candidate
-    at the storage layer is unchanged — quantization here models the scan
-    cost, the Column-expression recipe stays in quantize_vectors for
-    writers."""
+    quantize_vectors/dot_quantized in numpy: identical scales, the same
+    half-up rounding as Spark's ``round``, exact integer accumulation); 4×
+    less data per candidate at the storage layer is unchanged — quantization
+    here models the scan cost, the Column-expression recipe stays in
+    quantize_vectors for writers.  ``q_id`` and ``c_id`` must be integral;
+    other types raise ValueError."""
+    _require_integral_id(queries, q_id)
+    _require_integral_id(corpus, c_id)
     cand = _blocked_knn_cand(queries, corpus, k, q_id, q_vec, c_id, c_vec,
                              quantized=True)
     scored = cand.select(
@@ -510,9 +541,11 @@ def embedding_topk_pairs(
 
     Determinism: candidate selection inside a task orders by
     (round(dot, 6) DESC, a ASC, b ASC) — the same ordering the final Spark
-    sort applies — so the survivors are exactly the global top-k."""
+    sort applies — so the survivors are exactly the global top-k.  ``c_id``
+    must be integral; other types raise ValueError."""
     import pandas as pd
 
+    _require_integral_id(corpus, c_id)
     width = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     if n_blocks is None:
         # B(B+1)/2 group-tasks ≈ 2-4× the shuffle width keeps every core busy

@@ -23,19 +23,31 @@ def _col(c: ColumnOrName) -> Column:
 # ---------------------------------------------------------------------------
 
 def words(text: ColumnOrName) -> Column:
-    """Whitespace tokenization (collapses runs).  Empty/whitespace-only text
-    yields an EMPTY array — `split('')` returns [''] which would count as one
-    token and let empty documents through quality filters.
+    """Whitespace tokenization on Java's ``\\s`` class (``[ \\t\\n\\x0B\\f\\r]``;
+    U+00A0 and U+3000 stay inside their token), collapsing runs.  ``split``
+    leaves an empty token at a leading or trailing run and returns [''] for
+    empty text; ``array_remove`` drops them in one codegen'd pass, so
+    empty/whitespace-only text yields an EMPTY array."""
+    return F.array_remove(F.split(_col(text), r"\s+"), "")
 
-    r6 form: after ``trim``, ``split('\\s+')`` can only produce an empty
-    token for the empty string (leading runs are trimmed, trailing empties
-    are dropped by JDK split, interior runs collapse), so the empty-text
-    case is ONE length check instead of a per-token higher-order filter
-    pass — identical output, one fewer interpreted traversal everywhere
-    tokenization appears."""
-    t = F.trim(_col(text))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+"))
+
+def shingles(word_arr: Column, n: int = 3, distinct: bool = True) -> Column:
+    """Word n-grams of a token array, in order: the dedup shingle SET, or
+    with ``distinct=False`` the multiset the repetition metrics count.
+    Empty when len < n — guarded with when(), because Spark's
+    sequence(0, -1) counts BACKWARDS instead of being empty.
+
+    ``word_arr`` is bound once as a lambda variable (transform over a
+    one-element array): the n-gram lambda reads it per position, and an
+    unbound expression such as ``words(text)`` would be re-tokenized per
+    shingle — quadratic in the document's length."""
+    def grams(w: Column) -> Column:
+        idx = F.sequence(F.lit(0), F.size(w) - n)
+        sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)))
+        sh = F.when(F.size(w) >= n, sh).otherwise(F.array().cast("array<string>"))
+        return F.array_distinct(sh) if distinct else sh
+
+    return F.element_at(F.transform(F.array(word_arr), grams), 1)
 
 
 def token_count_ws(text: ColumnOrName) -> Column:
@@ -100,9 +112,9 @@ def quality_features(text: ColumnOrName) -> dict[str, Column]:
     n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop, F.lower(x))))
     n_punct = _punct_count(t)
     n_digit = F.size(F.regexp_extract_all(t, F.lit(r"[0-9]"), 0))
-    # mean word length over the TRIMMED text (words() trims; untrimmed
-    # n_chars would credit padding whitespace to the words).  Assumes
-    # single-space separation between the n_words tokens.
+    # mean word length over the TRIMMED text (words() drops edge
+    # whitespace; untrimmed n_chars would credit padding spaces to the
+    # words).  Assumes single-space separation between the n_words tokens.
     n_chars_trim = F.length(F.trim(t))
     return {
         "n_chars": n_chars,
@@ -175,15 +187,6 @@ def quality_features_bp(text: ColumnOrName,
     }
 
 
-def _word_ngrams(word_arr: Column, n: int) -> Column:
-    """Order-preserving word n-grams (duplicates kept — repetition metrics
-    need multiplicities, unlike the dedup shingles)."""
-    idx = F.sequence(F.lit(0), F.size(word_arr) - n)
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(word_arr, i + 1, n)))
-    return F.when(F.size(word_arr) >= n, grams).otherwise(
-        F.array().cast("array<string>"))
-
-
 # Rewrites of the n-gram legs over 64-bit gram hashes were measured and
 # REJECTED (r5 outlier attribution): higher-order array expressions
 # (transform/aggregate/filter) are evaluated INTERPRETED in Spark — not
@@ -223,7 +226,7 @@ def repetition_signals_bp(text: ColumnOrName | None,
     n_dist = F.size(F.array_distinct(w)).cast("long")
     dup_word = F.when(n > 0, F.floor((n - n_dist) * 10000 / n)).otherwise(0)
 
-    g2 = _word_ngrams(w, 2)
+    g2 = shingles(w, 2, distinct=False)
     # max multiplicity via sorted run-lengths — O(W log W) per doc.  The
     # obvious transform×filter count is O(W²) AND falls out of codegen into
     # interpreted eval on real documents (observed: a single 5k-doc
@@ -250,7 +253,7 @@ def repetition_signals_bp(text: ColumnOrName | None,
         F.least(F.floor(top2_cnt * 2 * 10000 / n), F.lit(10000).cast("long")),
     ).otherwise(0)
 
-    g5 = _word_ngrams(w, 5)
+    g5 = shingles(w, 5, distinct=False)
     g5n = F.size(g5).cast("long")
     g5d = F.size(F.array_distinct(g5)).cast("long")
     dup5 = F.when(g5n > 0, F.floor((g5n - g5d) * 10000 / g5n)).otherwise(0)
@@ -492,6 +495,4 @@ def content_fingerprint(text: ColumnOrName) -> Column:
 def rolling_fingerprint(text: ColumnOrName, n: int = 3) -> Column:
     """64-bit rolling fingerprint: min xxhash64 over word n-gram shingles —
     an order-sensitive near-dup key (Spark-native; no SQL oracle)."""
-    from feathr_online_spark.operators.dedup import shingles
-
     return F.array_min(F.transform(shingles(words(text), n), lambda s: F.xxhash64(s)))

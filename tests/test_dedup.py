@@ -9,9 +9,9 @@ from feathr_online_spark.operators.dedup import (
     exact_dup_stats,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    shingles,
     simhash_pairs,
 )
+from feathr_online_spark.operators.text import shingles
 
 
 BASE = (
@@ -156,19 +156,17 @@ def test_numpy_kernels_bit_identical(spark, docs):
     Arrow batch boundaries (tiny maxRecordsPerBatch exercises the simhash
     per-partition carry)."""
     from feathr_online_spark.operators.dedup import (
+        _doc_frame,
         _minhash_sigs_pd,
         _widen,
         minhash_signature,
         simhash64,
-        with_shingle_hashes,
     )
 
     old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
-        sh = with_shingle_hashes(_widen(docs), "text", 3).select(
-            F.col("doc_id").alias("id"), "shingles"
-        ).filter(F.size("shingles") > 0)
+        sh = _doc_frame(docs, "text", "doc_id", 3).filter(F.col("sz") > 0)
         jvm_sig = {r.id: list(r.sig) for r in
                    sh.select("id", minhash_signature(F.col("shingles"), 32).alias("sig")).collect()}
         np_sig = {r.id: list(r.sig) for r in _minhash_sigs_pd(sh, 32).collect()}
@@ -190,3 +188,79 @@ def test_numpy_kernels_bit_identical(spark, docs):
         assert got == ref
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
+
+
+def test_sq8_kernel_rounds_exact_halves_like_spark(spark):
+    """The numpy SQ8 kernel of knn_bruteforce_quantized must round an exact
+    x/scale = k + 0.5 half up (away from zero), as Spark's round in
+    quantize_vectors does — not half to even as np.round would.  Vectors
+    have norm 128 (a power of two) so unit-normalizing is exact, scale is
+    exactly 1/128 and x/scale is exactly the listed value."""
+    import numpy as np
+
+    from feathr_online_spark.operators.similarity import (
+        _blocked_knn_cand,
+        dot_quantized,
+        quantize_vectors,
+    )
+
+    raw = [[127, 0.5, 1.5, 2.5, -2.5, 8, 8, 8, 4, 4, 4],
+           [0.5, -127, -0.5, 3.5, 8, -8, 8, 4, 4, -4, 1.5],
+           [4, 4, 4, 8, 8, 8, -2.5, 2.5, 1.5, 0.5, 127]]
+    vecs = [[x / 128 for x in v] for v in raw]
+    for v in vecs:
+        assert sum(x * x for x in v) == 1.0
+    # the fixture really hits k + 0.5, and there the two rounding rules differ
+    ratios = np.array([x / (max(abs(y) for y in v) / 127.0) for v in vecs for x in v])
+    halves = ratios[np.abs(ratios) % 1 == 0.5]
+    assert len(halves) >= 4
+    assert (np.round(halves) != np.copysign(np.floor(np.abs(halves) + 0.5), halves)).any()
+
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], "id long, v array<double>")
+    got = {(r.qid, r.cid): r.dot for r in _blocked_knn_cand(
+        df.selectExpr("id AS qid", "v AS qv"), df, len(vecs), "qid", "qv", "id", "v",
+        quantized=True).collect()}
+    q = quantize_vectors(df, "v")
+    ref = {(r.qid, r.cid): r.dot for r in q.alias("c").crossJoin(q.alias("q")).select(
+        F.col("q.id").alias("qid"), F.col("c.id").alias("cid"),
+        dot_quantized(F.col("c.q_vec8"), F.col("c.q_scale"),
+                      F.col("q.q_vec8"), F.col("q.q_scale")).alias("dot")).collect()}
+    assert got == ref
+
+
+@pytest.mark.parametrize("call", ["knn_bruteforce", "knn_bruteforce_quantized",
+                                  "embedding_topk_pairs", "minhash_lsh_pairs",
+                                  "simhash64", "simhash_pairs"])
+def test_non_integral_ids_rejected(spark, call):
+    """The public entries of the numpy kernels reject a string id column up
+    front, naming it, instead of failing or casting inside an executor."""
+    from feathr_online_spark.operators import dedup, similarity
+
+    emb = spark.createDataFrame([("x", [1.0, 0.0])], "vec_id string, embedding array<double>")
+    qs = emb.selectExpr("vec_id AS q_id", "embedding AS q_vec")
+    txt = spark.createDataFrame([("x", "one two three four")], "doc_id string, text string")
+    calls = {
+        "knn_bruteforce": lambda: similarity.knn_bruteforce(qs, emb),
+        "knn_bruteforce_quantized": lambda: similarity.knn_bruteforce_quantized(qs, emb),
+        "embedding_topk_pairs": lambda: similarity.embedding_topk_pairs(emb),
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(txt, "text", "doc_id"),
+        "simhash64": lambda: dedup.simhash64(txt, "text", "doc_id"),
+        "simhash_pairs": lambda: dedup.simhash_pairs(txt, "text", "doc_id"),
+    }
+    with pytest.raises(ValueError, match="'(q_id|vec_id|doc_id)'.*integral"):
+        calls[call]()
+
+
+def test_minhash_verify_broadcasts_no_shingle_arrays(docs):
+    """The MinHash verify broadcasts only bare candidate keys: no broadcast
+    exchange outputs an array column, in the plan as planned nor in AQE's
+    final plan after it ran."""
+    from tools.plan_shape import broadcast_outputs
+
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5)
+    planned = broadcast_outputs(pairs)
+    pairs.collect()
+    final = broadcast_outputs(pairs)
+    assert planned and final          # the candidate keys are broadcast
+    for cols in planned + final:
+        assert "array" not in cols.values(), cols

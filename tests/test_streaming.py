@@ -244,8 +244,8 @@ def test_stateful_ops_correct_across_arrow_chunks(spark, tmp_path):
 def test_stream_batch_equivalence_summary(spark, tmp_path):
     """The replay harness (streaming/equiv.py): all five streaming surfaces
     must be row-exactly batch-equivalent on the time-ordered multi-micro-batch
-    replay of the sf0.001 events table (2 time slices + the late-duplicate
-    file = 3 triggers since r6) — the claim the stream_equiv gate
+    replay of the sf0.001 events table (1 time slice + the late-duplicate
+    file = 2 triggers) — the claim the stream_equiv gate
     enforces per-round."""
     from feathr_online_spark.streaming.equiv import stream_equivalence_summary
 

@@ -121,3 +121,32 @@ def test_repetition_signals_golden(spark):
     assert {r.name: r.r for r in flagged}["loop"] is True
     assert got["short"] == (0, 0, 0, False)
     assert got["empty"] == (0, 0, 0, False)
+
+
+def _java_ws_words(s: str) -> list[str]:
+    """Reference tokenizer: split on Java's ``\\s`` class [ \\t\\n\\x0B\\f\\r]
+    and drop empty tokens."""
+    import re
+
+    return [t for t in re.split(r"[ \t\n\x0b\f\r]+", s) if t]
+
+
+def test_words_matches_java_whitespace_reference(spark):
+    """words() against a pure-Python reference on the inputs the gates do
+    not cover: every ``\\s`` character as runs and at both edges, empty and
+    whitespace-only text, and unicode spaces (U+00A0, U+3000) that Java's
+    ``\\s`` does not split — they stay inside a token."""
+    from feathr_online_spark.operators.text import words
+
+    inputs = ["", " ", "\t", "\n", "  \t\n\r\x0b\x0c  ", "foo", "foo bar"]
+    for ws in [" ", "\t", "\n", "\r", "\x0c", "\x0b"]:
+        for run in (ws, ws * 3, ws + " " + ws):
+            inputs += [run + "foo bar", "foo bar" + run, "foo" + run + "bar",
+                       run + "foo" + run + "bar" + run, run]
+    inputs += ["a b c", " foo ", "x\u00a0y", "\u00a0", "x\u3000y", "\u3000",
+               "\u00a0foo\u3000", " \u3000 z\t\u00a0"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(inputs)], "i int, t string")
+    got = {r.i: list(r.w) for r in df.select("i", words("t").alias("w")).collect()}
+    want = {i: _java_ws_words(t) for i, t in enumerate(inputs)}
+    bad = {repr(inputs[i]): (got[i], want[i]) for i in want if got[i] != want[i]}
+    assert not bad, bad
