@@ -33,7 +33,7 @@ from feathr_online_spark.operators.dedup import (
 from feathr_online_spark.operators.multimodal import extract_features, synth_assets
 from feathr_online_spark.operators.pipeline import Pipeline
 from feathr_online_spark.operators.similarity import embedding_topk_pairs, knn_bruteforce
-from feathr_online_spark.operators.text import lang_id, quality_features, quality_score
+from feathr_online_spark.operators.text import lang_id
 from feathr_online_spark.operators.windows import rolling, sessionize
 
 
@@ -1041,7 +1041,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DEDUP_EXACT = """
 SELECT source, count(*) AS n_docs,
-       count(DISTINCT md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))) AS n_unique
+       count(DISTINCT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))) AS n_unique
 FROM documents GROUP BY source
 """
 
@@ -1457,7 +1457,7 @@ ORACLE_PREPARE_CORPUS = _duck_lang_ctes() + """, q AS (
   WHERE p.lang_pred = 'en' AND b.quality_bp >= 6500
 ), surv AS (
   SELECT min(doc_id) AS doc_id FROM kept
-  GROUP BY md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))
+  GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
 )
 SELECT k.doc_id, k.lang_pred, k.quality_bp FROM kept k JOIN surv USING (doc_id)
 """

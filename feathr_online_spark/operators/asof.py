@@ -30,8 +30,9 @@ Two physical strategies behind one API:
     already sorted on (entity, event_time).
 
 At 100 TB: both strategies shuffle each side exactly once on the entity key.
-Feed them inputs bucketed/sorted by entity (see plans/io notes) and AQE will
-coalesce; hot entities should be pre-split with plans.salting helpers.
+Feed them inputs bucketed/sorted by entity and AQE will coalesce; hot
+entities belong on ``operators.pit.pit_enrich``'s bucketed hot branch, which
+splits them by (entity, time bucket).
 """
 
 from __future__ import annotations
@@ -51,7 +52,6 @@ def asof_join(
     right_ts: str = "feature_time",
     strict: bool = True,
     strategy: str = "union",
-    right_tiebreak: str | None = None,
     match_indicator: str | None = None,
 ) -> DataFrame:
     """Attach to each event row the latest feature row of the same entity with
@@ -61,9 +61,9 @@ def asof_join(
     Events with no qualifying feature row keep nulls (left-outer semantics,
     like the reference's lookup miss behaviour, lookup_transformation.rs:218-231).
 
-    ``right_tiebreak``: when several feature rows share (entity, right_ts), the
-    row with the greatest tiebreak wins; defaults to a hash of the payload so
-    results are deterministic regardless of input order.
+    When several feature rows share (entity, right_ts), the row with the
+    greatest ``xxhash64`` of its payload wins, so results are deterministic
+    regardless of input order.
 
     ``match_indicator``: name of an extra boolean output column that is true
     iff a feature row attached.  This distinguishes a left-outer MISS from an
@@ -90,10 +90,10 @@ def asof_join(
                          f"collides with an existing column")
     if strategy == "union":
         return _asof_union(events, features, on, left_ts, right_ts, strict,
-                           right_tiebreak, match_indicator)
+                           match_indicator)
     if strategy == "cogroup":
         return _asof_cogroup(events, features, on, left_ts, right_ts, strict,
-                             right_tiebreak, match_indicator)
+                             match_indicator)
     raise ValueError(f"unknown asof strategy: {strategy}")
 
 
@@ -108,24 +108,17 @@ def _asof_union(
     left_ts: str,
     right_ts: str,
     strict: bool,
-    right_tiebreak: str | None,
     match_indicator: str | None = None,
 ) -> DataFrame:
     from pyspark.sql.types import StructType
 
     event_cols = [c for c in events.columns if c not in (on, left_ts)]
     payload = _payload_cols(features, on, right_ts)
-    overlap = set(payload) & set(events.columns)
-    if overlap:
-        raise ValueError(f"asof_join: feature columns collide with event columns: {sorted(overlap)}")
 
     # Tag order encodes the leakage rule: at equal ts, events (tag 0) sort
     # before features (tag 1) so a feature at exactly the event time is not yet
     # visible to the running last() — strict '<'.  Non-strict flips the tag.
     feat_tag, event_tag = (1, 0) if strict else (0, 1)
-
-    # Deterministic winner among same-(entity, ts) feature rows.
-    tiebreak = F.col(right_tiebreak) if right_tiebreak else F.xxhash64(*[F.col(c) for c in payload])
 
     # WHOLE-ROW attach: the payload travels as ONE struct so a null field in
     # the most recent qualifying feature row stays null in the output (per-
@@ -145,7 +138,8 @@ def _asof_union(
         F.col(on),
         F.col(right_ts).alias("__ts"),
         F.lit(feat_tag).alias("__tag"),
-        tiebreak.cast("long").alias("__tb"),
+        # deterministic winner among same-(entity, ts) feature rows
+        F.xxhash64(*[F.col(c) for c in payload]).alias("__tb"),
         *[F.lit(None).cast(events.schema[c].dataType).alias(c) for c in event_cols],
         F.struct(*[F.col(c) for c in payload]).alias("__pl"),
     )
@@ -182,7 +176,6 @@ def _asof_cogroup(
     left_ts: str,
     right_ts: str,
     strict: bool,
-    right_tiebreak: str | None,
     match_indicator: str | None = None,
 ) -> DataFrame:
     import pandas as pd  # local import: executors need it, driver may not
@@ -212,8 +205,7 @@ def _asof_cogroup(
     # union strategy: greatest tiebreak wins.  The hash is computed JVM-side;
     # pandas merge_asof takes the LAST duplicate after a stable sort, so
     # sorting by (ts, tiebreak) yields the max-tiebreak row.
-    tiebreak = F.col(right_tiebreak) if right_tiebreak else F.xxhash64(*[F.col(c) for c in payload])
-    ft = features.withColumn("__tb", tiebreak.cast("long"))
+    ft = features.withColumn("__tb", F.xxhash64(*[F.col(c) for c in payload]))
 
     def merge_one(left: pd.DataFrame, right: pd.DataFrame, by) -> pd.DataFrame:
         """merge_asof of one sorted slice; ``by`` adds per-entity grouping

@@ -101,42 +101,6 @@ def _punct_count(t: Column) -> Column:
     return F.length(F.translate(t, _ALNUM_WS, ""))
 
 
-def quality_features(text: ColumnOrName) -> dict[str, Column]:
-    """Raw quality signals: char/word counts, mean word length, punctuation
-    and digit ratios, stopword ratio.  Returned as a dict for withColumns."""
-    t = _col(text)
-    w = words(text)
-    n_chars = F.length(t)
-    n_words = F.size(w)
-    stop = F.array([F.lit(s) for s in EN_STOPWORDS])
-    n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop, F.lower(x))))
-    n_punct = _punct_count(t)
-    n_digit = F.size(F.regexp_extract_all(t, F.lit(r"[0-9]"), 0))
-    # mean word length over the TRIMMED text (words() drops edge
-    # whitespace; untrimmed n_chars would credit padding spaces to the
-    # words).  Assumes single-space separation between the n_words tokens.
-    n_chars_trim = F.length(F.trim(t))
-    return {
-        "n_chars": n_chars,
-        "n_words": n_words,
-        "mean_word_len": F.round((n_chars_trim - n_words + 1) / n_words, 4),
-        "punct_ratio": F.round(n_punct / n_chars, 4),
-        "digit_ratio": F.round(n_digit / n_chars, 4),
-        "stopword_ratio": F.round(n_stop / n_words, 4),
-    }
-
-
-def quality_score(text: ColumnOrName) -> Column:
-    """Composite [0,1] quality heuristic: rewards mid-length documents and
-    stopword presence, penalizes punctuation/digit noise.  A Gopher-rules-like
-    filter reduced to deterministic arithmetic."""
-    f = quality_features(text)
-    len_score = F.least(f["n_words"] / 50.0, F.lit(1.0))
-    stop_score = F.least(f["stopword_ratio"] * 5.0, F.lit(1.0))
-    noise_pen = F.greatest(F.lit(0.0), F.lit(1.0) - f["punct_ratio"] * 3.0 - f["digit_ratio"] * 2.0)
-    return F.round((len_score * 0.4 + stop_score * 0.3 + noise_pen * 0.3), 4)
-
-
 def _digit_count(t: Column) -> Column:
     """Digit-char count.  Positive-class regex, NOT translate-deletion: the
     JDK slow path the ``_punct_count`` translate trick dodges is specific
@@ -163,13 +127,15 @@ def _wc_stop_agg(w: Column, finish) -> Column:
 
 def quality_features_bp(text: ColumnOrName,
                         words_arr: Column | None = None) -> dict[str, Column]:
-    """Engine-portable integer variant: ratios in basis points (1/10000) via
-    exact integer arithmetic — ``floor(a*10000 / b)`` with operands < 2^53 is
-    bit-exact in every engine, unlike ``round(double, 4)`` whose half-way
-    behaviour differs between Spark (HALF_UP on the binary double) and e.g.
-    DuckDB (scaled multiply-round).  Use these for cross-engine comparisons.
+    """Raw quality signals: char/word counts, and punctuation, digit and
+    stopword ratios in basis points (1/10000) via exact integer arithmetic —
+    ``floor(a*10000 / b)`` with operands < 2^53 is bit-exact in every
+    engine, unlike ``round(double, 4)`` whose half-way behaviour differs
+    between Spark (HALF_UP on the binary double) and e.g. DuckDB (scaled
+    multiply-round).
 
-    Digit counting is translate-deletion, not regex.  ``words_arr``:
+    Punctuation counting is translate-deletion, digit counting a
+    positive-class regex (see ``_digit_count``).  ``words_arr``:
     already-evaluated token array (see repetition_signals_bp) so every
     entry shares ONE tokenization."""
     t = _col(text)
@@ -487,8 +453,10 @@ def write_lang_fixture(path: str) -> str:
 def content_fingerprint(text: ColumnOrName) -> Column:
     """Deterministic content fingerprint: md5 of the whitespace-normalized,
     lower-cased text — the exact-dedup key (md5 exists in every engine, so
-    oracles replicate it)."""
-    norm = F.lower(F.regexp_replace(F.trim(_col(text)), r"\s+", " "))
+    oracles replicate it).  Collapse before trim: ``trim`` strips spaces
+    only, and after the ``\\s+`` → ' ' collapse every edge run is one space,
+    so tab- or newline-bounded copies hash like the bare text."""
+    norm = F.lower(F.trim(F.regexp_replace(_col(text), r"\s+", " ")))
     return F.md5(norm)
 
 

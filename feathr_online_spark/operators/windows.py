@@ -9,8 +9,9 @@ exec, no Python.
 
 Scale: each helper shuffles once on the entity key (or reuses an existing
 entity partitioning — consecutive window ops over the same (partitionBy,
-orderBy) share one sort in the physical plan).  Skewed entities are the
-salting helpers' job (plans.salting).
+orderBy) share one sort in the physical plan).  Skewed entities belong on
+``operators.pit.pit_enrich``'s bucketed hot branch, which splits them by
+(entity, time bucket).
 """
 
 from __future__ import annotations

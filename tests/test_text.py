@@ -1,13 +1,12 @@
 """Text analysis: token counts, quality features, language ID, fingerprints."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from feathr_online_spark.operators.text import (
     content_fingerprint,
     lang_id,
-    quality_features,
-    quality_score,
+    quality_features_bp,
+    quality_score_bp,
     rolling_fingerprint,
     token_count_bpe,
     token_count_ws,
@@ -25,12 +24,12 @@ def test_token_counts(spark):
 
 def test_quality_features_and_score(spark):
     df = spark.createDataFrame([("The cat and the dog sat on the mat.",)], "t string")
-    feats = df.withColumns(quality_features("t")).collect()[0]
+    feats = df.withColumns(quality_features_bp("t")).collect()[0]
     assert feats.n_words == 9
-    # stopwords: The, and, the, on, the → 5 of 9
-    assert feats.stopword_ratio == pytest.approx(5 / 9, abs=1e-3)
-    score = df.select(quality_score("t").alias("s")).collect()[0]["s"]
-    assert 0.0 <= score <= 1.0
+    # stopwords: The, and, the, on, the → 5 of 9 = floor(50000 / 9) bp
+    assert feats.stopword_bp == 5555
+    score = df.select(quality_score_bp("t").alias("s")).collect()[0]["s"]
+    assert 0 <= score <= 10000
 
 
 def test_lang_id(spark):
@@ -75,6 +74,16 @@ def test_content_fingerprint_normalizes(spark):
     df = spark.createDataFrame([("Hello  World",), ("hello world",), ("other",)], "t string")
     fps = [r.f for r in df.select(content_fingerprint("t").alias("f")).collect()]
     assert fps[0] == fps[1] != fps[2]
+
+
+def test_exact_dedup_ignores_edge_whitespace(spark):
+    """Tab- or newline-bounded copies are the same content: the fingerprint
+    collapses every ``\\s`` run before trimming, so one id survives."""
+    from feathr_online_spark.operators.dedup import exact_dedup
+
+    df = spark.createDataFrame([(1, "foo bar"), (2, "\tfoo bar"), (3, "foo bar\n")],
+                               "id int, t string")
+    assert [r.id for r in exact_dedup(df, "t", "id").collect()] == [1]
 
 
 def test_rolling_fingerprint_near_dup_stability(spark):

@@ -29,9 +29,15 @@ def main() -> None:
     lines = ["# PLANS — physical-plan audit (auto-generated by tools/plan_audit.py)", ""]
 
     def plan_of(df) -> str:
-        # execute first so AQE's FINAL plan (with codegen ids) is what we audit
-        df.write.format("noop").mode("overwrite").save()
-        return df._jdf.queryExecution().executedPlan().toString()
+        # run df's OWN QueryExecution (a write or count() would plan a new
+        # one), so AQE's FINAL plan (isFinalPlan=true, codegen ids) is what
+        # the checks read; its root also prints the initial plan, which
+        # would double every count, so only the final tree is returned
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        return plan.toString()
 
     def audit(name, df, checks: dict[str, str], counts: dict[str, tuple[int, int]] | None = None):
         """``counts``: label → (measured, wanted) for checks made off the plan text."""
