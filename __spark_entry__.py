@@ -677,19 +677,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 """
 
 
-def q_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """the cogroup/merge_asof (pandas/Arrow) as-of strategy — same semantics,
-    same oracle as the union-window strategy."""
-    events = _t(spark, sf_dir, "events")
-    left = _pit_left(events)
-    feat = _pit_feat(events)
-    out = asof_join(left, feat, strategy="cogroup", strict=True)
-    return out.select(
-        "event_id", F.col("entity").alias("user_id"),
-        F.unix_micros("event_time").alias("ts_us"), "value", "purchase_value",
-    )
-
-
 def q_tpch_join3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-table join + agg + top (TPC-H Q3 shape): broadcast dims, one shuffle."""
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -1009,12 +996,18 @@ HAVING count(*) > 0
 # Training-data ops: dedup / similarity / text analysis (SURVEY.md §7 + brief)
 # ---------------------------------------------------------------------------
 
+# Java's regex \s (words(), content_fingerprint, the punct count) is
+# [ \t\n\x0B\f\r]; RE2's \s lacks the vertical tab \x0B, so every DuckDB
+# whitespace class adds \v: this run pattern, and the oracles' punct class
+# [^A-Za-z0-9\s\v].
+_DUCK_WS = '[\\s\\v]+'
+
 # Shared DuckDB prelude: word arrays and distinct 3-gram shingle sets per doc,
 # mirroring operators.dedup._doc_frame (lower → split → 3-gram → distinct;
 # the engine keeps xxhash64s of the shingles, which changes no set size).
 _DUCK_SHINGLES = """
 WITH w AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS ws FROM documents
+  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '""" + _DUCK_WS + """'), x -> x <> '') AS ws FROM documents
 ), sh AS (
   SELECT doc_id,
          list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -1041,7 +1034,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DEDUP_EXACT = """
 SELECT source, count(*) AS n_docs,
-       count(DISTINCT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))) AS n_unique
+       count(DISTINCT md5(lower(trim(regexp_replace(text, '""" + _DUCK_WS + """', ' ', 'g'))))) AS n_unique
 FROM documents GROUP BY source
 """
 
@@ -1120,7 +1113,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _duck_lang_ctes(src: str = "SELECT doc_id, text FROM documents") -> str:
     return """
 WITH s AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS ws, text FROM (""" + src + """)
+  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '""" + _DUCK_WS + """'), x -> x <> '') AS ws, text FROM (""" + src + """)
 ), sc AS (
   SELECT doc_id,
     len(list_filter(ws, x -> list_contains(['the','and','of','to','is','in','that','with','for','it'], x))) AS s_en,
@@ -1202,10 +1195,10 @@ ORACLE_TEXT_QUALITY = """
 WITH q AS (
   SELECT doc_id, text,
          length(text)::BIGINT AS n_chars,
-         len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))::BIGINT AS n_words,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::BIGINT AS n_punct,
+         len(list_filter(string_split_regex(trim(text), '""" + _DUCK_WS + """'), x -> x <> ''))::BIGINT AS n_words,
+         len(regexp_extract_all(text, '[^A-Za-z0-9\\s\\v]'))::BIGINT AS n_punct,
          len(regexp_extract_all(text, '[0-9]'))::BIGINT AS n_digit,
-         len(list_filter(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''),
+         len(list_filter(list_filter(string_split_regex(trim(text), '""" + _DUCK_WS + """'), x -> x <> ''),
              x -> list_contains(['the','a','an','and','or','of','to','in','is','are','was',
                                  'for','on','with','as','by','at','it','that','this','be'], lower(x))))::BIGINT AS n_stop
   FROM documents
@@ -1398,7 +1391,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DECONTAMINATE = """
 WITH w AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS ws FROM documents
+  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '""" + _DUCK_WS + """'), x -> x <> '') AS ws FROM documents
 ), sh AS (
   SELECT doc_id,
          CASE WHEN len(ws) >= 3
@@ -1437,10 +1430,10 @@ def q_prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_PREPARE_CORPUS = _duck_lang_ctes() + """, q AS (
   SELECT doc_id, text,
          length(text)::BIGINT AS n_chars,
-         len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))::BIGINT AS n_words,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::BIGINT AS n_punct,
+         len(list_filter(string_split_regex(trim(text), '""" + _DUCK_WS + """'), x -> x <> ''))::BIGINT AS n_words,
+         len(regexp_extract_all(text, '[^A-Za-z0-9\\s\\v]'))::BIGINT AS n_punct,
          len(regexp_extract_all(text, '[0-9]'))::BIGINT AS n_digit,
-         len(list_filter(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''),
+         len(list_filter(list_filter(string_split_regex(trim(text), '""" + _DUCK_WS + """'), x -> x <> ''),
              x -> list_contains(['the','a','an','and','or','of','to','in','is','are','was',
                                  'for','on','with','as','by','at','it','that','this','be'], lower(x))))::BIGINT AS n_stop
   FROM documents
@@ -1457,7 +1450,7 @@ ORACLE_PREPARE_CORPUS = _duck_lang_ctes() + """, q AS (
   WHERE p.lang_pred = 'en' AND b.quality_bp >= 6500
 ), surv AS (
   SELECT min(doc_id) AS doc_id FROM kept
-  GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+  GROUP BY md5(lower(trim(regexp_replace(text, '""" + _DUCK_WS + """', ' ', 'g'))))
 )
 SELECT k.doc_id, k.lang_pred, k.quality_bp FROM kept k JOIN surv USING (doc_id)
 """
@@ -1505,7 +1498,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_DEDUP_CLUSTERS = """
 WITH RECURSIVE w AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '') AS ws FROM documents
+  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '""" + _DUCK_WS + """'), x -> x <> '') AS ws FROM documents
 ), sh AS (
   SELECT doc_id,
          list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -1810,7 +1803,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_TEXT_REPETITION = """
 WITH w AS (
   SELECT source,
-         list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS ws
+         list_filter(string_split_regex(trim(text), '""" + _DUCK_WS + """'), x -> x <> '') AS ws
   FROM documents
 ), g AS (
   SELECT source,
@@ -1997,7 +1990,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bitwise_map_funcs": q_bitwise_map_funcs,
         "agg_funcs": q_agg_funcs,
         "lag_lead_ffill": q_lag_lead_ffill,
-        "asof_cogroup": q_asof_cogroup,
+        # the gate key predates the removal of the cogroup as-of strategy;
+        # it now runs the one as-of join, against the same oracle
+        "asof_cogroup": q_asof_purchase,
         "tpch_join3": q_tpch_join3,
         "validation": q_validation,
         "collect_errors": q_collect_errors,

@@ -134,6 +134,3 @@ def agg_fn(name: str):
         raise KeyError(f"unknown aggregation function '{name}'")
     return _AGG_REGISTRY[key]
 
-
-def agg_names() -> list[str]:
-    return sorted(_AGG_REGISTRY)

@@ -9,10 +9,6 @@ PIL/libav (JPEG, PNG, MP3, H.264) raise a clear error naming the missing
 dependency — that is this container's honest boundary, and the mime check
 happens metadata-side BEFORE any payload is touched.
 
-``decoder="fake"`` remains available: a deterministic byte-fold feature for
-pipelines over arbitrary payloads (and for benchmarks that should not pay
-decode cost).
-
 Design for 100 TB of media:
 - payloads stay ``binary`` columns; metadata travels in sibling columns so
   filters (mime, width, duration) prune BEFORE any decode;
@@ -65,22 +61,6 @@ FEATURES_SCHEMA = StructType(
 _DECODABLE = {"image/bmp", "audio/wav", "video/x-rawv"}
 
 
-def _fake_decode_batch(payloads, dim: int):
-    """Deterministic stand-in feature: fold payload bytes into a float
-    vector.  Vectorized numpy over the whole Arrow batch."""
-    import numpy as np
-
-    out = np.zeros((len(payloads), dim), dtype=np.float32)
-    for i, p in enumerate(payloads):  # byte-string loop, not a row-wise UDF call
-        arr = np.frombuffer(p, dtype=np.uint8)
-        if len(arr) == 0:
-            continue
-        pad = (-len(arr)) % dim
-        folded = np.pad(arr, (0, pad)).reshape(-1, dim).sum(axis=0)
-        out[i] = folded.astype(np.float32) / max(float(arr.sum()), 1.0)
-    return out
-
-
 def _real_features(kind: str, mime: str, payload: bytes, dim: int):
     """Decode one asset and emit a fixed-width feature vector:
 
@@ -122,26 +102,21 @@ def _real_features(kind: str, mime: str, payload: bytes, dim: int):
     return out
 
 
-def extract_features(df: DataFrame, decoder: str = "real", dim: int = FEATURE_DIM) -> DataFrame:
-    """binary payload → fixed-width feature vector via mapInPandas.
-
-    ``decoder="real"`` decodes BMP/WAV/RAWV payloads with the stdlib codecs;
-    ``decoder="fake"`` is the deterministic byte-fold."""
+def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
+    """binary payload → fixed-width feature vector via mapInPandas; BMP/WAV/RAWV
+    payloads decode with the stdlib codecs."""
 
     def run(batches: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            if decoder == "fake":
-                feats = _fake_decode_batch(pdf["payload"].tolist(), dim)
-            else:
-                feats = np.stack(
-                    [
-                        _real_features(k, m, p, dim)
-                        for k, m, p in zip(pdf["kind"], pdf["mime"], pdf["payload"])
-                    ]
-                ) if len(pdf) else np.zeros((0, dim), dtype=np.float32)
+            feats = np.stack(
+                [
+                    _real_features(k, m, p, dim)
+                    for k, m, p in zip(pdf["kind"], pdf["mime"], pdf["payload"])
+                ]
+            ) if len(pdf) else np.zeros((0, dim), dtype=np.float32)
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],

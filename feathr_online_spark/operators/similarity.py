@@ -8,11 +8,17 @@
   shipped as literal arrays; sign pattern = bucket; probe only the query's
   bucket (+ optional multi-probe).  The scale path: bucket join instead of
   corpus × query cross product.
-- ``embedding_topk_pairs`` — most-similar corpus pairs (embedding near-dup).
+- ``knn_ivf`` — inverted-file index: k-means cells, probe the query's
+  nearest cells.
+- ``embedding_topk_pairs`` — most-similar corpus pairs (embedding near-dup);
+  ``embedding_lsh_pairs`` is its LSH scale path.
 
-The LSH paths score with JVM higher-order functions; the exact scans
-(``knn_bruteforce*``, ``embedding_topk_pairs``) score blocks with numpy BLAS
-in ``applyInPandas``, so their ids must be integral.
+``knn_lsh`` and ``knn_ivf`` score their probe-join candidates with a
+vectorized numpy cosine (``_cosine_pd``, a pandas UDF);
+``embedding_lsh_pairs`` verifies its candidates with a JVM higher-order-
+function dot over unit vectors; the exact scans (``knn_bruteforce*``,
+``embedding_topk_pairs``) score blocks with numpy BLAS in ``applyInPandas``,
+so their ids must be integral.
 """
 
 from __future__ import annotations
@@ -438,20 +444,11 @@ def train_ivf_centroids(
     return [list(map(float, c)) for c in cents]
 
 
-def assign_cell(vec: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid id as a Column: lexicographic min over
-    (distance, cell-id) structs — deterministic argmin, row-local."""
-    structs = [
-        F.struct(_dist2(vec, c).alias("d"), F.lit(i).alias("c")) for i, c in enumerate(centroids)
-    ]
-    return F.least(*structs)["c"]
-
-
 def _assign_cell_pd(centroids: list[list[float]]) -> "Column":
     """Vectorized (Arrow/pandas) nearest-centroid assignment — one numpy
     distance matrix per batch instead of n_cells interpreted _dist2 folds
-    per row.  np.argmin ties break low-index, matching assign_cell's
-    lexicographic (distance, cell) min."""
+    per row.  Ties go to the lowest cell id (np.argmin takes the first
+    minimum)."""
     import pandas as pd
 
     @F.pandas_udf("int")

@@ -308,25 +308,6 @@ SCRIPT_PATTERNS: dict[str, str] = {
     "hi": r"[ऀ-ॿ]",     # devanagari U+0900-097F
 }
 
-#: kept for callers/tests of the r2-r4 surface
-CJK_PATTERN = SCRIPT_PATTERNS["zh"]
-
-
-def lang_scores(text: ColumnOrName) -> dict[str, Column]:
-    """Per-language scores: marker-word hit counts for the Latin-script
-    languages, per-character script-range counts for zh/ja/ko/ru/ar/hi.
-    Everything is a pure Column (filter over the shared tokenization +
-    regexp_extract_all) — map-side, no shuffle, oracle-replicable."""
-    w = words(text)
-    out: dict[str, Column] = {}
-    for lang, markers in LANG_MARKERS.items():
-        marker_arr = F.array([F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(w, lambda x: F.array_contains(marker_arr, F.lower(x))))
-    for lang, pat in SCRIPT_PATTERNS.items():
-        out[lang] = F.size(F.regexp_extract_all(_col(text), F.lit(pat), 0))
-    return out
-
-
 def lang_id(text: ColumnOrName, default: str = "unknown",
             words_arr: Column | None = None) -> Column:
     """argmax language by marker score; deterministic tie-break = language

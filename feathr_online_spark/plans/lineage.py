@@ -1,107 +1,43 @@
-"""Per-partition lineage/metrics emission (north_star requirement).
+"""Per-unit lineage/metrics emission (north_star requirement).
 
 Every production run records one row per work unit in a metrics table:
-``partition_lineage(df)`` → one row per TASK partition
-(``(partition_id, rows, checksum, wall_time_s)``, a single Arrow-batched
-``mapInPandas`` pass, no extra shuffle); ``partition_lineage(df, by=col)``
-→ one row per LOGICAL unit (e.g. the checkpoint bucket), fully JVM-side
-(``groupBy`` + the ``bit_xor`` aggregate) — the form the production job
-keys its idempotent metrics writes by.
+``partition_lineage(df, by=col)`` → one row per LOGICAL unit (e.g. the
+checkpoint bucket), fully JVM-side (``groupBy`` + the ``bit_xor`` aggregate)
+— the form the production job keys its idempotent metrics writes by.
 
 The checksum is an order-insensitive XOR-fold of per-row xxhash64 so it is
 stable under any task scheduling, making it usable for resume verification
-(same input partition → same checksum).
+(same input unit → same checksum).
 
-Checksum definition v2 (r4): BOTH forms hash ALL columns (the grouped form
-previously excluded the ``by`` column), so the two forms are comparable —
-XOR-folding grouped checksums equals XOR-folding task-partition checksums of
-the same data.  Metrics tables written under the v1 definition are NOT
-comparable to v2 checksums for the grouped form; since r5 every emitted row
+Checksum definition v2 (r4): the row hash covers ALL columns (v1 excluded the
+``by`` column), so XOR-folding the grouped checksums equals XOR-folding the
+per-row hashes of the whole table.  Metrics tables written under the v1
+definition are NOT comparable to v2 checksums; since r5 every emitted row
 carries a ``checksum_version`` column, so a long-lived metrics store can
 distinguish v1 rows (which predate the column — read absent as 1) from v2
 rows instead of relying on this migration note."""
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType, DoubleType
 
 #: bump when the checksum input definition changes; consumers persisting
 #: checksums should record it alongside (see docstring migration note)
 CHECKSUM_VERSION = 2
 
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("partition_id", LongType(), False),
-        StructField("rows", LongType(), False),
-        StructField("checksum", LongType(), False),
-        StructField("checksum_version", LongType(), False),
-        StructField("wall_time_s", DoubleType(), False),
-    ]
-)
 
-
-def partition_lineage(df: DataFrame, by: str | None = None) -> DataFrame:
-    """Compute the lineage/metrics DataFrame for ``df``: one row per task
-    partition, or — with ``by`` — one row per logical group
-    ``(by, rows, checksum)``, computed entirely JVM-side with the
-    ``bit_xor`` aggregate (same order-insensitive checksum definition).
-
-    Row hash is computed JVM-side (xxhash64 over all columns) before any
-    fold, so Python (in the per-partition form) only sees one long column —
-    the hot path stays vectorized.
-    """
-    if by is not None:
-        # hash ALL columns (including ``by``), exactly like the per-partition
-        # form, so the two forms' checksums are comparable: XOR-folding the
-        # grouped checksums equals XOR-folding the task-partition checksums
-        # of the same data
-        return (
-            df.select(F.col(by), F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h"))
-            .groupBy(by)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.expr("bit_xor(__h)").alias("checksum"),
-            )
-            .withColumn("checksum_version", F.lit(CHECKSUM_VERSION).cast("long"))
+def partition_lineage(df: DataFrame, by: str) -> DataFrame:
+    """Compute the lineage/metrics DataFrame for ``df``: one row per logical
+    group ``(by, rows, checksum, checksum_version)``, computed entirely
+    JVM-side — the row hash is xxhash64 over all columns (including ``by``),
+    folded per group with the ``bit_xor`` aggregate."""
+    return (
+        df.select(F.col(by), F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h"))
+        .groupBy(by)
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.expr("bit_xor(__h)").alias("checksum"),
         )
-    hashed = df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h")).withColumn(
-        "__pid", F.spark_partition_id().cast("long")
+        .withColumn("checksum_version", F.lit(CHECKSUM_VERSION).cast("long"))
     )
-
-    def fold(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        t0 = time.time()
-        pid = -1
-        n = 0
-        acc = 0
-        for pdf in batches:
-            if len(pdf):
-                pid = int(pdf["__pid"].iloc[0])
-                n += len(pdf)
-                # XOR-fold: order-insensitive, associative — scheduler-stable
-                acc = _xor_fold(pdf["__h"].to_numpy(), acc)
-        if pid >= 0:
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid],
-                    "rows": [n],
-                    "checksum": [acc],
-                    "checksum_version": [CHECKSUM_VERSION],
-                    "wall_time_s": [time.time() - t0],
-                }
-            )
-
-    return hashed.mapInPandas(fold, LINEAGE_SCHEMA)
-
-
-def _xor_fold(arr, seed: int) -> int:
-    import numpy as np
-
-    v = np.bitwise_xor.reduce(arr.astype(np.int64)) if len(arr) else 0
-    return int(v) ^ seed

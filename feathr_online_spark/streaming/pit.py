@@ -114,7 +114,7 @@ def stream_asof_enrich(
     ``right_ts < left_ts`` (strict).
 
     Construction: both streams are tagged and unioned (same trick as the
-    batch union strategy, operators/asof.py), grouped by entity through
+    batch as-of join, operators/asof.py), grouped by entity through
     ``applyInPandasWithState``.  Within a micro-batch the merge is
     ``pandas.merge_asof`` (vectorized C); across batches the GroupState
     carries the entity's latest feature row, seeded into the next batch's

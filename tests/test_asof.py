@@ -1,5 +1,6 @@
-"""As-of join: strict-< semantics, tie handling, strategy equivalence, and the
-zero-leakage property test (SURVEY.md §5.2 items 3-4)."""
+"""As-of join: strict-< semantics, tie handling, parity with an independent
+pandas merge_asof, and the zero-leakage property test (SURVEY.md §5.2 items
+3-4)."""
 
 from datetime import datetime
 
@@ -7,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from feathr_online_spark.operators.asof import asof_join, leakage_check
-from tests.conftest import rows
 
 
 def ts(s):
@@ -55,18 +55,16 @@ EXPECTED_NONSTRICT = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
-def test_strict_semantics(pair, strategy):
+def test_strict_semantics(pair):
     events, features = pair
-    out = asof_join(events, features, strategy=strategy)
+    out = asof_join(events, features)
     got = sorted([(r.eid, r.f) for r in out.collect()])
     assert got == sorted(EXPECTED_STRICT)
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
-def test_nonstrict_semantics(pair, strategy):
+def test_nonstrict_semantics(pair):
     events, features = pair
-    out = asof_join(events, features, strict=False, strategy=strategy)
+    out = asof_join(events, features, strict=False)
     got = sorted([(r.eid, r.f) for r in out.collect()])
     assert got == sorted(EXPECTED_NONSTRICT)
 
@@ -82,6 +80,7 @@ def test_leakage_property_randomized(spark):
     """Zero-leakage invariant over randomized timestamp layouts with heavy
     tie probability (minute granularity)."""
     import numpy as np
+    import pandas as pd
 
     rng = np.random.default_rng(7)
     n_e, n_f = 400, 300
@@ -100,9 +99,28 @@ def test_leakage_property_randomized(spark):
     # per output row: the matched feature's earliest stamping must be < event_time
     assert leakage_check(joined.filter(F.col("f").isNotNull()), features) == 0
 
-    # and both strategies agree exactly
-    alt = asof_join(events, features, strategy="cogroup")
-    assert rows(joined) == rows(alt)
+    # and every row matches an independent per-entity pandas merge_asof
+    # (strict '<').  Several feature rows may share (entity, ts); the
+    # reference keeps all their values and the engine's pick must be one.
+    fp = pd.DataFrame(ft, columns=["entity", "feature_time", "f"])
+    cands = (fp.groupby(["entity", "feature_time"])["f"].agg(frozenset)
+             .rename("cands").reset_index().sort_values("feature_time", kind="mergesort"))
+    evp = pd.DataFrame(ev, columns=["entity", "event_time", "eid"])
+    ref = pd.merge_asof(evp.sort_values("event_time", kind="mergesort"), cands,
+                        by="entity", left_on="event_time", right_on="feature_time",
+                        allow_exact_matches=False, direction="backward")
+    got = {r.eid: r for r in joined.collect()}
+    assert len(got) == n_e
+    n_matched = 0
+    for eid, entity, event_time, c in zip(ref.eid, ref.entity, ref.event_time, ref.cands):
+        r = got[eid]
+        assert (r.entity, r.event_time) == (entity, event_time.to_pydatetime())
+        if isinstance(c, frozenset):
+            assert r.f in c, f"eid {eid}: got {r.f}, reference allows {sorted(c)}"
+            n_matched += 1
+        else:
+            assert r.f is None, f"eid {eid}: got {r.f}, reference finds no earlier feature"
+    assert n_matched > 200
 
 
 def test_chained_multi_feature_tables(spark):
@@ -141,8 +159,8 @@ def test_deterministic_among_equal_ts_features(spark):
 def test_whole_row_attach_nulls_preserved(spark):
     """When the most recent qualifying feature row has a null in one payload
     column, the output must keep that null — NOT graft the older row's value
-    into the gap.  All three physical strategies must agree (whole-row
-    semantics: the payload travels as one struct / merge_asof row)."""
+    into the gap.  The plain and the bucketed as-of join must agree (whole-row
+    semantics: the payload travels as one struct)."""
     from feathr_online_spark.operators.skew import asof_join_bucketed
 
     events = spark.createDataFrame(
@@ -156,10 +174,9 @@ def test_whole_row_attach_nulls_preserved(spark):
         ],
         "entity long, feature_time timestamp, f1 double, f2 double",
     )
-    for strategy in ("union", "cogroup"):
-        row = asof_join(events, features, strategy=strategy).collect()[0]
-        assert row.f1 is None, f"{strategy}: expected null f1, got {row.f1}"
-        assert row.f2 == 200.0
+    row = asof_join(events, features).collect()[0]
+    assert row.f1 is None, f"expected null f1, got {row.f1}"
+    assert row.f2 == 200.0
     row = asof_join_bucketed(events, features).collect()[0]
     assert row.f1 is None and row.f2 == 200.0
 
@@ -186,8 +203,7 @@ def test_whole_row_carry_across_buckets(spark):
     assert row.f1 is None and row.f2 == 200.0
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
-def test_match_indicator_distinguishes_miss_from_allnull_payload(spark, strategy):
+def test_match_indicator_distinguishes_miss_from_allnull_payload(spark):
     """asof_join(match_indicator=...) is true iff a feature row attached —
     including one whose payload is entirely null (ADVICE r3: payload nullness
     alone cannot tell that apart from a left-outer miss)."""
@@ -202,12 +218,12 @@ def test_match_indicator_distinguishes_miss_from_allnull_payload(spark, strategy
         [(1, ts("2024-01-01 09:00:00"), None)],
         "entity long, feature_time timestamp, f double",
     )
-    out = asof_join(events, features, strategy=strategy, match_indicator="matched")
+    out = asof_join(events, features, match_indicator="matched")
     got = {r.eid: (r.matched, r.f) for r in out.collect()}
     assert got == {"hit_allnull": (True, None), "miss": (False, None)}
     # indicator collision with an existing column raises
     with pytest.raises(ValueError):
-        asof_join(events, features, strategy=strategy, match_indicator="eid")
+        asof_join(events, features, match_indicator="eid")
 
 
 def test_leakage_check_matched_col_closes_allnull_blind_spot(spark):

@@ -49,7 +49,7 @@ def test_resize_nearest_shape_and_identity():
 
 def test_extract_features_real_decode(spark):
     assets = synth_assets(spark, n=30)
-    out = extract_features(assets)   # decoder="real" is the default now
+    out = extract_features(assets)
     rows = out.collect()
     assert len(rows) == 30
     assert all(len(r.features) == FEATURE_DIM for r in rows)
@@ -66,12 +66,6 @@ def test_extract_features_real_decode(spark):
     # deterministic: same payload → same features
     rows2 = extract_features(synth_assets(spark, n=30)).collect()
     assert {r.asset_id: r.features for r in rows} == {r.asset_id: r.features for r in rows2}
-
-
-def test_fake_decoder_still_available(spark):
-    assets = synth_assets(spark, n=9)
-    rows = extract_features(assets, decoder="fake").collect()
-    assert len(rows) == 9 and all(len(r.features) == FEATURE_DIM for r in rows)
 
 
 def test_features_feed_similarity(spark):

@@ -1,0 +1,29 @@
+"""The gate contract of ``__spark_entry__``: every query has a DuckDB oracle
+and every oracle a query, and the oracles' whitespace classes match Java's.
+Spark-free: it reads the two dicts and the SQL text, and runs nothing."""
+
+import re
+
+import __spark_entry__ as entry
+
+N_GATES = 53
+
+
+def test_queries_and_oracles_share_the_gate_keys():
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    assert set(qs) == set(oracles)
+    assert len(qs) == N_GATES
+    assert all(callable(fn) for fn in qs.values())
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+    # the asof_cogroup key outlived its strategy: it runs the as-of gate
+    assert qs["asof_cogroup"] is qs["asof_purchase"]
+    assert oracles["asof_cogroup"] == oracles["asof_purchase"]
+
+
+def test_oracle_whitespace_classes_include_vertical_tab():
+    """RE2's ``\\s`` lacks U+000B, which Java's ``\\s`` (the engine's
+    tokenizer and fingerprint) includes; each oracle ``\\s`` must sit next
+    to ``\\v`` in its class."""
+    bare = {name: sql for name, sql in entry.oracle_sql().items()
+            if re.search(r"\\s(?!\\v)", sql)}
+    assert not bare, sorted(bare)

@@ -284,13 +284,9 @@ def test_bucketed_ops_keep_null_ts_and_null_entity_rows(spark):
     assert sess.count() == 4                       # null rows retained
 
 
-def test_asof_cogroup_null_ts_matches_union(spark):
-    """Null-ts feature rows are dropped in BOTH strategies; null-ts events
-    get a null payload in both (merge_asof used to crash the whole group)."""
-    from datetime import datetime
-
-    from feathr_online_spark.operators.asof import asof_join
-
+def test_asof_null_ts_plain_matches_bucketed(spark):
+    """Null-ts feature rows are dropped by both the plain and the bucketed
+    as-of join; null-ts events get a null payload in both."""
     t = lambda m: datetime(2024, 1, 1, 0, m)
     events = spark.createDataFrame(
         [(1, t(10), 1), (1, None, 2)], "entity long, event_time timestamp, eid long"
@@ -298,6 +294,6 @@ def test_asof_cogroup_null_ts_matches_union(spark):
     features = spark.createDataFrame(
         [(1, t(5), 7.0), (1, None, 99.0)], "entity long, feature_time timestamp, f double"
     )
-    for strategy in ("union", "cogroup"):
-        got = {r.eid: r.f for r in asof_join(events, features, strategy=strategy).collect()}
-        assert got == {1: 7.0, 2: None}, strategy
+    for name, join in (("plain", asof_join), ("bucketed", asof_join_bucketed)):
+        got = {r.eid: r.f for r in join(events, features).collect()}
+        assert got == {1: 7.0, 2: None}, name

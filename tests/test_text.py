@@ -1,5 +1,6 @@
 """Text analysis: token counts, quality features, language ID, fingerprints."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from feathr_online_spark.operators.text import (
@@ -84,6 +85,47 @@ def test_exact_dedup_ignores_edge_whitespace(spark):
     df = spark.createDataFrame([(1, "foo bar"), (2, "\tfoo bar"), (3, "foo bar\n")],
                                "id int, t string")
     assert [r.id for r in exact_dedup(df, "t", "id").collect()] == [1]
+
+
+@pytest.fixture(scope="module")
+def vt_corpus(sf_dir, tmp_path_factory):
+    """A documents table whose copies are bounded or word-split by vertical
+    tabs (U+000B): Java's ``\\s`` includes it, RE2's does not."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = f"{sf_dir}/documents.parquet"
+    base = pq.read_table(src).slice(0, 60).to_pylist()
+    vt = chr(11)
+    rows = list(base)
+    for i in range(20):
+        rows.append(dict(base[i], doc_id=1000 + i, text=vt + base[i]["text"]))
+        rows.append(dict(base[i], doc_id=2000 + i, text=base[i]["text"] + vt))
+        rows.append(dict(base[20 + i], doc_id=3000 + i,
+                         text=base[20 + i]["text"].replace(" ", vt)))
+    out = tmp_path_factory.mktemp("vt_corpus")
+    pq.write_table(pa.Table.from_pylist(rows, schema=pq.read_schema(src).remove_metadata()),
+                   out / "documents.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("gate", ["dedup_exact", "text_quality", "text_repetition",
+                                  "dedup_ngram"])
+def test_vertical_tab_text_matches_duckdb_oracle(spark, vt_corpus, gate):
+    """Engine and DuckDB oracle agree on text holding vertical tabs: the
+    oracles' whitespace class must include U+000B like Java's ``\\s``."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from tools.check_oracle import canon
+
+    got = entry.queries()[gate](spark, vt_corpus).toPandas()
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{vt_corpus}/documents.parquet')")
+        want = con.execute(entry.oracle_sql()[gate]).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert (canon(got.itertuples(index=False), list(got.columns))
+            == canon(want.itertuples(index=False), list(want.columns)))
 
 
 def test_rolling_fingerprint_near_dup_stability(spark):
