@@ -25,12 +25,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from feathr_online_spark.operators.asof import asof_join
 from feathr_online_spark.operators.dedup import (
+    _widen,
     exact_dup_stats,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from feathr_online_spark.operators.multimodal import extract_features, synth_assets
+from feathr_online_spark.operators.multimodal import extract_features
 from feathr_online_spark.operators.pipeline import Pipeline
 from feathr_online_spark.operators.similarity import embedding_topk_pairs, knn_bruteforce
 from feathr_online_spark.operators.text import lang_id
@@ -1749,11 +1750,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions: one corpus pass, no shuffle beyond the tiny groupBy."""
     from feathr_online_spark.operators.text import repetition_signals_bp, words
 
-    docs = _t(spark, sf_dir, "documents")
     # widen: the corpus arrives as ONE scan partition locally and the
     # signals are CPU-dense, byte-light (the dedup _widen rationale)
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    docs = docs.select("source", "text").repartition(width)
+    docs = _widen(_t(spark, sf_dir, "documents").select("source", "text"))
 
     # let-binding via transform-over-singleton (r6): the token array is a
     # lambda variable, so all four signals read ONE tokenization — as

@@ -13,9 +13,12 @@ surface Spark-first:
                    core (as-of join, lag/lead/rolling, sessionize, forward-fill);
                    training-data ops (dedup, similarity search, text analysis)
 - ``sources``    — lookup-source registry backed by DataFrames
-- ``plans``      — scale helpers: salting, AQE presets, lineage, checkpoint/resume
-- ``streaming``  — intentionally empty in v1 (the reference has no streaming
-                   semantics; see SURVEY.md §2.6)
+- ``plans``      — scale helpers: salting, lineage, checkpoint/resume
+- ``streaming``  — the point-in-time core over Structured Streaming (windowed
+                   features, sessions, forward-fill, as-of enrichment, exact
+                   dedup) and the stream-vs-batch equivalence harness; the
+                   reference has no streaming semantics (SURVEY.md §2.6)
+- ``session``    — the SparkSession factory and its AQE/Arrow/UTC presets
 
 Everything is declarative DataFrame/Column work so Catalyst owns pushdown,
 pruning, join selection and whole-stage codegen; Python appears only in

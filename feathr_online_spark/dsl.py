@@ -612,6 +612,13 @@ class CompiledPipeline:
 
         Dynamic columns (no ``as type``) accept ANY python value; it rides in
         the JSON-string carrier and is parsed on use by the compiler."""
+        return self.run_with_types(spark, rows, sources)[0]
+
+    def run_with_types(
+        self, spark: SparkSession, rows: list[dict], sources=None
+    ) -> tuple[DataFrame, dict[str, str | None]]:
+        """run() plus the tracked static piper type per output column (see
+        apply_with_types)."""
         import json
 
         schema = ", ".join(f"{n} {_SPARK_TYPES[t]}" for n, t in self.input_schema)
@@ -623,7 +630,7 @@ class CompiledPipeline:
 
         data = [tuple(enc(r.get(n), t) for n, t in self.input_schema) for r in rows]
         df = spark.createDataFrame(data, schema)
-        return self.apply(df, sources)
+        return self.apply_with_types(df, sources)
 
 
 def _apply_stage(p: Pipeline, col_types: dict, verb: str, payload, sources) -> tuple[Pipeline, dict]:

@@ -29,8 +29,6 @@ from __future__ import annotations
 import json
 import re
 
-from pyspark.sql import Column
-
 _TOKEN_RE = re.compile(
     r"""
     \.\.(?P<rec_field>[A-Za-z_][\w\-]*|\*)        # ..field or ..*

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from feathr_online_spark.operators.similarity import _require_integral_id
+from feathr_online_spark.operators.similarity import _require_integral_id, _shuffle_width
 from feathr_online_spark.operators.text import content_fingerprint, shingles, words
 
 
@@ -48,8 +48,7 @@ def _widen(df: DataFrame) -> DataFrame:
     parallelism — at real scale the input is already wide and this is a
     no-op-cost safety, locally it is the difference between 1 and 32 cores.
     """
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.repartition(width)
+    return df.repartition(_shuffle_width(df))
 
 
 def _doc_frame(df: DataFrame, text_col: str, id_col: str, n: int | None = None,
@@ -152,14 +151,13 @@ def ngram_jaccard_pairs(
     inv = sh.select("id", F.explode("shingles").alias("s")).repartition("s")
     rare = inv.groupBy("s").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") <= max_df)
     inv = inv.join(rare.select("s"), "s", "left_semi")
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     inter = (
         inv.alias("x")
         .join(inv.alias("y"), (F.col("x.s") == F.col("y.s")) & (F.col("x.id") < F.col("y.id")))
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         # explicit exchange: the (a, b) pair space is large but byte-small —
         # AQE would coalesce the groupBy reduce stage to ~1 task otherwise
-        .repartition(width, "a", "b")
+        .repartition(_shuffle_width(df), "a", "b")
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("__inter"))
     )
@@ -169,6 +167,34 @@ def ngram_jaccard_pairs(
         .join(sizes.withColumnsRenamed({"id": "b", "sz": "__szb"}), "b")
     )
     return _jaccard_pairs(j, F.col("__inter"), F.col("__sza"), F.col("__szb"), threshold)
+
+
+def _colliding_pairs(rows: DataFrame, part: str, key: str, carry: str | None = None) -> DataFrame:
+    """Distinct (a, b) id pairs, a < b, of the ``rows`` that agree on
+    (``part``, ``key``) — a MinHash (band, bucket) or a SimHash (chunk,
+    key).  ``carry`` also brings that column from both sides as (ha, hb).
+
+    A SELF-join: both sides read ONE ReusedExchange of ``rows`` (the
+    signature pass before it is not duplicated), and the cross product per
+    key runs inside codegen'd join machinery — an interpreted posting-list
+    expansion was tried and loses badly on hot keys.  No explicit
+    repartition: a user-specified distribution would be preserved by AQE
+    and disable its skew-join splitting, which is exactly what protects the
+    hot keys."""
+    cols = [F.col("x.id").alias("a"), F.col("y.id").alias("b")]
+    if carry is not None:
+        cols += [F.col(f"x.{carry}").alias("ha"), F.col(f"y.{carry}").alias("hb")]
+    return (
+        rows.alias("x")
+        .join(
+            rows.alias("y"),
+            (F.col(f"x.{part}") == F.col(f"y.{part}"))
+            & (F.col(f"x.{key}") == F.col(f"y.{key}"))
+            & (F.col("x.id") < F.col("y.id")),
+        )
+        .select(*cols)
+        .distinct()
+    )
 
 
 def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
@@ -319,24 +345,7 @@ def minhash_lsh_pairs(
             )
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # bucket SELF-join: both sides read ONE ReusedExchange of the bucketed
-    # rows (the k-permutation signature pass is not duplicated), and the
-    # cross product per bucket runs inside codegen'd join machinery — an
-    # interpreted posting-list expansion was tried and loses badly on hot
-    # buckets.  No explicit repartition here: a user-specified distribution
-    # would be preserved by AQE and disable its skew-join splitting, which
-    # is exactly what protects the hot buckets.
-    cand = (
-        bucketed.alias("x")
-        .join(
-            bucketed.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
+    cand = _colliding_pairs(bucketed, "band", "bucket")
     return _verify_jaccard(cand, sh, threshold)
 
 
@@ -591,26 +600,7 @@ def simhash_pairs(
     chunks = sh.select(
         "id", "simhash", F.explode(F.array(*chunk_structs)).alias("ck")
     ).select("id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"))
-    # chunk SELF-join: both sides read ONE ReusedExchange of the chunk rows
-    # (the simhash aggregation — the dominant cost — is not duplicated), and
-    # the per-bucket cross product stays in codegen'd join machinery — an
-    # interpreted posting-list expansion was tried and loses badly on hot
-    # chunk keys.  No explicit repartition: it would pin a user distribution
-    # and disable AQE skew-join splitting of hot chunk keys.
-    cand = (
-        chunks.alias("x")
-        .join(
-            chunks.alias("y"),
-            (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(
-            F.col("x.id").alias("a"), F.col("y.id").alias("b"),
-            F.col("x.simhash").alias("ha"), F.col("y.simhash").alias("hb"),
-        )
-        .distinct()
-    )
+    cand = _colliding_pairs(chunks, "chunk", "key", carry="simhash")
     return (
         cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
         .filter(F.col("hamming") <= max_hamming)

@@ -6,9 +6,9 @@
 - **cold entities** (the overwhelming majority): the fused plain path — ONE
   shuffle on entity, ONE sort, every window function sharing it (verified:
   single Exchange in the physical plan).
-- **hot entities** (count > hot_threshold): ONE call into the time-bucketed
-  core of operators.skew — one (entity, bucket) pass plus one tiny
-  summary/carry repair, so no task ever sees a whole hot entity.
+- **hot entities** (count > hot_threshold): ONE call to
+  operators.skew.pit_fused_bucketed — one (entity, bucket) pass plus one
+  tiny summary/carry repair, so no task ever sees a whole hot entity.
 - results unioned; both branches read the same scan (Spark reuses it).
 
 The planner is one per-entity count aggregate that picks the hot set.
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feathr_online_spark.operators.asof import asof_join
-from feathr_online_spark.operators.skew import _pit_core, _rolling_kw
+from feathr_online_spark.operators.skew import _rolling_kw, pit_fused_bucketed
 from feathr_online_spark.operators.windows import forward_fill, rolling, sessionize
 
 
@@ -44,7 +44,7 @@ def pit_enrich(
     left_ts: str = "event_time",
     right_ts: str = "feature_time",
     strict: bool = True,
-    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows": N | "range_seconds": S}
+    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows" | "range_seconds"}
     session_gap: int | None = None,
     ffill_cols: list[str] | None = None,
     hot_threshold: int = 100_000,
@@ -75,7 +75,7 @@ def pit_enrich(
     if ffill_cols:
         cold = forward_fill(cold, ffill_cols, on=on, ts=left_ts)
 
-    hot_out = _pit_core(ev_hot, ft_hot, on=on, left_ts=left_ts, right_ts=right_ts, strict=strict,
-                        ffill_cols=ffill_cols or (), session_gap=session_gap,
-                        bucket_seconds=bucket_seconds, **roll)
+    hot_out = pit_fused_bucketed(ev_hot, ft_hot, on=on, left_ts=left_ts, right_ts=right_ts,
+                                 strict=strict, ffill_cols=ffill_cols, rolling_spec=rolling_spec,
+                                 session_gap=session_gap, bucket_seconds=bucket_seconds)
     return cold.select(*cold.columns).unionByName(hot_out.select(*cold.columns))

@@ -57,6 +57,31 @@ def _require_integral_id(df: DataFrame, id_col: str) -> None:
                          f"(tinyint/smallint/int/bigint), got {t.simpleString()}")
 
 
+def _shuffle_width(df: DataFrame) -> int:
+    """The session's shuffle width (``spark.sql.shuffle.partitions``)."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def _desc_key(d):
+    """numpy sort key whose ascending order is Spark's
+    (round(d, 6) DESC) order, NaN (a zero-norm vector) greatest, so first."""
+    import numpy as np
+
+    key = np.round(d, 6)
+    return -np.where(np.isnan(key), np.inf, key)
+
+
+def _top_k(scored: DataFrame, q_id: str, k: int) -> DataFrame:
+    """The k best (q_id, neighbor_id, cos_sim) rows per query, ranked by
+    (cos_sim DESC, neighbor_id ASC)."""
+    w = Window.partitionBy(q_id).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(q_id, "neighbor_id", "cos_sim", "rank")
+    )
+
+
 def _round_half_up(x):
     """Spark ``round(x)`` (HALF_UP: ties away from zero) over a numpy array,
     as int64.  Not ``floor(|x| + 0.5)``: that sum rounds 0.49999999999999994
@@ -76,7 +101,7 @@ def _blocked_knn_cand(
     q_vec: str,
     c_id: str,
     c_vec: str,
-    quantized: bool = False,
+    quantized: bool,
 ) -> DataFrame:
     """Per-(corpus block, query) top-k candidates for an exact KNN scan,
     computed with BLAS: the corpus is hashed into `width` blocks, the (few)
@@ -94,9 +119,7 @@ def _blocked_knn_cand(
     sides, per-vector symmetric int8 quantization (scale = max|x|/127,
     q = round(x/s) rounding half up — away from zero — like Spark's
     ``round``), exact integer dot, times the two scales."""
-    import pandas as pd
-
-    width = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = _shuffle_width(corpus)
     cb = corpus.select(
         F.pmod(F.xxhash64(F.col(c_id)), F.lit(width)).cast("int").alias("blk"),
         F.lit(0).alias("side"),
@@ -138,10 +161,9 @@ def _blocked_knn_cand(
                                * np.linalg.norm(qx, axis=1)[None, :])
         out_q, out_c, out_d = [], [], []
         kk = min(k, len(ci))
-        key = np.round(m, 6)
-        key = np.where(np.isnan(key), np.inf, key)   # Spark sorts NaN greatest
+        key = _desc_key(m)
         for j in range(len(qi)):
-            idx = np.lexsort((ci, -key[:, j]))[:kk]
+            idx = np.lexsort((ci, key[:, j]))[:kk]
             out_q.append(np.full(kk, qi[j]))
             out_c.append(ci[idx])
             out_d.append(m[idx, j])
@@ -151,6 +173,21 @@ def _blocked_knn_cand(
 
     return cb.unionByName(qb).groupBy("blk").applyInPandas(
         score_block, schema="qid long, cid long, dot double")
+
+
+def _blocked_knn(queries: DataFrame, corpus: DataFrame, k: int, q_id: str, q_vec: str,
+                 c_id: str, c_vec: str, quantized: bool) -> DataFrame:
+    """The exact scan of both ``knn_bruteforce*``: integral-id checks, the
+    blocked candidates, then the per-query ``_top_k`` merge."""
+    _require_integral_id(queries, q_id)
+    _require_integral_id(corpus, c_id)
+    cand = _blocked_knn_cand(queries, corpus, k, q_id, q_vec, c_id, c_vec, quantized)
+    scored = cand.select(
+        F.col("qid").alias(q_id),
+        F.col("cid").alias("neighbor_id"),
+        F.round("dot", 6).alias("cos_sim"),
+    )
+    return _top_k(scored, q_id, k)
 
 
 def knn_bruteforce(
@@ -168,20 +205,7 @@ def knn_bruteforce(
     _blocked_knn_cand); the final merge is a window over ≤ |Q|·width·k
     candidate rows.  At 100 TB this is the verify/eval path, not serving.
     ``q_id`` and ``c_id`` must be integral; other types raise ValueError."""
-    _require_integral_id(queries, q_id)
-    _require_integral_id(corpus, c_id)
-    cand = _blocked_knn_cand(queries, corpus, k, q_id, q_vec, c_id, c_vec)
-    scored = cand.select(
-        F.col("qid").alias(q_id),
-        F.col("cid").alias("neighbor_id"),
-        F.round("dot", 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "neighbor_id", "cos_sim", "rank")
-    )
+    return _blocked_knn(queries, corpus, k, q_id, q_vec, c_id, c_vec, quantized=False)
 
 
 def quantize_vectors(df: DataFrame, vec_col: str = "embedding",
@@ -235,31 +259,21 @@ def knn_bruteforce_quantized(
     here models the scan cost, the Column-expression recipe stays in
     quantize_vectors for writers.  ``q_id`` and ``c_id`` must be integral;
     other types raise ValueError."""
-    _require_integral_id(queries, q_id)
-    _require_integral_id(corpus, c_id)
-    cand = _blocked_knn_cand(queries, corpus, k, q_id, q_vec, c_id, c_vec,
-                             quantized=True)
-    scored = cand.select(
-        F.col("qid").alias(q_id),
-        F.col("cid").alias("neighbor_id"),
-        F.round("dot", 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "neighbor_id", "cos_sim", "rank")
-    )
+    return _blocked_knn(queries, corpus, k, q_id, q_vec, c_id, c_vec, quantized=True)
 
 
-def _plane_literals(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+def _planes(df: DataFrame, vec_col: str, dim: int | None, n_planes: int) -> list[list[float]]:
+    """``n_planes`` seeded random hyperplanes in ``dim`` dimensions, shipped
+    as plan literals; ``dim=None`` infers it from ``vec_col`` with one
+    bounded ``.first()``."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
+    if dim is None:
+        dim = len(df.select(vec_col).first()[0])
+    return np.random.default_rng(42).standard_normal((n_planes, dim)).tolist()
 
 
-def bucket_of(vec: Column, planes: list[list[float]]) -> Column:
+def _lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """LSH bucket id: sign bits of the vector against each hyperplane, packed
     into a long."""
     vd = vec.cast("array<double>")
@@ -271,13 +285,41 @@ def bucket_of(vec: Column, planes: list[list[float]]) -> Column:
     return b
 
 
+def _probe_buckets(b0: Column, n_planes: int, multiprobe: int) -> Column:
+    """The array of buckets a query in bucket ``b0`` probes: ``b0`` itself,
+    then (``multiprobe >= 1``) every single sign-flip, then
+    (``multiprobe >= 2``) every double flip."""
+    def flip(i):
+        return F.shiftleft(F.lit(1).cast("long"), i)
+
+    probes = [b0]
+    if multiprobe >= 1:
+        probes += [b0.bitwiseXOR(flip(i)) for i in range(n_planes)]
+    if multiprobe >= 2:
+        probes += [b0.bitwiseXOR(flip(i)).bitwiseXOR(flip(j))
+                   for i in range(n_planes) for j in range(i + 1, n_planes)]
+    return F.array(*probes)
+
+
+def _probe_top_k(cb: DataFrame, qb: DataFrame, key: str, k: int, q_id: str, q_vec: str,
+                 c_id: str, c_vec: str) -> DataFrame:
+    """Top-k of a probe index: broadcast the probing queries into an
+    equi-join with the corpus on ``key``, score each candidate with
+    ``_cosine_pd``, rank with ``_top_k``."""
+    scored = cb.join(F.broadcast(qb), key).select(
+        F.col(q_id),
+        F.col(c_id).alias("neighbor_id"),
+        F.round(_cosine_pd()(F.col(q_vec), F.col(c_vec)), 6).alias("cos_sim"),
+    )
+    return _top_k(scored, q_id, k)
+
+
 def knn_lsh(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
     n_planes: int = 8,
     multiprobe: int = 1,
-    seed: int = 42,
     q_id: str = "q_id",
     q_vec: str = "q_vec",
     c_id: str = "vec_id",
@@ -294,39 +336,14 @@ def knn_lsh(
 
     Pass ``dim`` explicitly to keep plan-build free of driver actions; when
     omitted it is inferred with one bounded ``.first()`` on the query side."""
-    if dim is None:
-        dim = len(queries.select(q_vec).first()[0])
-    planes = _plane_literals(dim, n_planes, seed)
-    cb = corpus.withColumn("__bucket", bucket_of(F.col(c_vec), planes))
-    qb = queries.withColumn("__b0", bucket_of(F.col(q_vec), planes))
-    probe_buckets = [F.col("__b0")]
-    if multiprobe >= 1:
-        probe_buckets += [
-            F.col("__b0").bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i)) for i in range(n_planes)
-        ]
-    if multiprobe >= 2:
-        probe_buckets += [
-            F.col("__b0")
-            .bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
-            .bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), j))
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        ]
-    qb = qb.withColumn("__bucket", F.explode(F.array(*probe_buckets))).drop("__b0")
+    planes = _planes(queries, q_vec, dim, n_planes)
+    cb = corpus.withColumn("__bucket", _lsh_bucket(F.col(c_vec), planes))
+    qb = queries.withColumn("__b0", _lsh_bucket(F.col(q_vec), planes))
+    qb = qb.withColumn("__bucket", F.explode(_probe_buckets(F.col("__b0"), n_planes, multiprobe))).drop("__b0")
     # vectorized cosine over the bucket-join candidates (r6; bucket
     # assignment stays the JVM plan-literal expression on BOTH sides so a
     # sign-boundary ulp can never split a query from its own bucket)
-    scored = cb.join(F.broadcast(qb), "__bucket").select(
-        F.col(q_id),
-        F.col(c_id).alias("neighbor_id"),
-        F.round(_cosine_pd()(F.col(q_vec), F.col(c_vec)), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "neighbor_id", "cos_sim", "rank")
-    )
+    return _probe_top_k(cb, qb, "__bucket", k, q_id, q_vec, c_id, c_vec)
 
 
 def _cosine_pd() -> "Column":
@@ -335,8 +352,6 @@ def _cosine_pd() -> "Column":
     joins whose pair volume makes the interpreted zip_with/aggregate dot the
     bottleneck (HOFs are CodegenFallback); values agree with the JVM fold to
     well past the round(·, 6) grid every consumer applies."""
-    import pandas as pd
-
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
         import numpy as np
@@ -371,10 +386,8 @@ def _dist2(vec: Column, lits: list[float]) -> Column:
 def train_ivf_centroids(
     corpus: DataFrame,
     n_cells: int = 16,
-    iters: int = 10,
     c_id: str = "vec_id",
     c_vec: str = "embedding",
-    sample_cap: int = 4096,
 ) -> list[list[float]]:
     """Coarse quantizer: k-means trained driver-side on a BOUNDED sample —
     the standard IVF recipe (faiss trains its quantizer on a sample too):
@@ -387,13 +400,13 @@ def train_ivf_centroids(
     a fixed cost that dominated the gate wall (measured ~4 s at sf0.001
     where the data itself is trivial).  Sampling moves training to numpy
     (deterministic, µs per iteration), cuts the Spark actions from
-    iters+1 to ONE bounded collect (≤ sample_cap × dim doubles — ~2 MB at
-    the defaults), and affords 10 iterations instead of 2.  The
-    DISTRIBUTED path is unchanged: cell assignment stays a map-side
+    iters+1 to ONE bounded collect (≤ 4096 × dim doubles — ~2 MB at
+    dim 64).  The index trains 2 Lloyd iterations, as the cluster loop
+    did.  The DISTRIBUTED path is unchanged: cell assignment stays a map-side
     expression over the scan, probes stay an equi-join; centroids remain
     plan metadata, exactly like the LSH planes.
 
-    Sample choice (ADVICE r4): the first ``sample_cap`` vectors ordered by
+    Sample choice (ADVICE r4): the first 4096 vectors ordered by
     ``xxhash64(id)`` — a deterministic pseudo-random draw.  Ordering by raw
     id would bias the sample on any id-correlated corpus (ids assigned by
     source or ingest time → the quantizer sees only the oldest shard and
@@ -414,7 +427,7 @@ def train_ivf_centroids(
 
     rows = (corpus.select(c_id, c_vec)
             .orderBy(F.xxhash64(F.col(c_id).cast("string")), c_id)
-            .limit(sample_cap).select(c_vec).collect())
+            .limit(4096).select(c_vec).collect())
     x = np.array([list(map(float, r[0])) for r in rows], dtype=np.float64)
     if len(x) == 0:
         # ADVICE r5: x[0] would raise an inscrutable IndexError
@@ -433,7 +446,7 @@ def train_ivf_centroids(
         d_min = np.minimum(d_min, ((x - x[nxt]) ** 2).sum(axis=1))
     n_cells = len(picked)
     cents = x[picked].copy()
-    for _ in range(iters):
+    for _ in range(2):
         # (n, k) squared distances; argmin ties → lowest cell id
         d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
@@ -449,8 +462,6 @@ def _assign_cell_pd(centroids: list[list[float]]) -> "Column":
     distance matrix per batch instead of n_cells interpreted _dist2 folds
     per row.  Ties go to the lowest cell id (np.argmin takes the first
     minimum)."""
-    import pandas as pd
-
     @F.pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
         import numpy as np
@@ -469,7 +480,6 @@ def knn_ivf(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 2,
-    iters: int = 2,
     q_id: str = "q_id",
     q_vec: str = "q_vec",
     c_id: str = "vec_id",
@@ -482,7 +492,7 @@ def knn_ivf(
     scan; the probe is an equi-join on cell id, so scoring cost shrinks
     ~n_cells/n_probe-fold vs brute force.  At 100 TB the cell column is
     written once at ingest (partition-by-cell) and probes prune partitions."""
-    cents = train_ivf_centroids(corpus, n_cells, iters, c_id, c_vec)
+    cents = train_ivf_centroids(corpus, n_cells, c_id, c_vec)
     # cell assignment + probe scoring run vectorized (Arrow/numpy, r6): the
     # per-row n_cells×dim interpreted distance folds and the per-pair
     # interpreted cosine were ~6 s of the gate at 20k×64 — same argmin
@@ -496,17 +506,7 @@ def knn_ivf(
     qb = queries.withColumn(
         "__cell", F.explode(F.transform(F.slice(F.array_sort(probe_structs), 1, n_probe), lambda s: s["c"]))
     )
-    scored = cb.join(F.broadcast(qb), "__cell").select(
-        F.col(q_id),
-        F.col(c_id).alias("neighbor_id"),
-        F.round(_cosine_pd()(F.col(q_vec), F.col(c_vec)), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "neighbor_id", "cos_sim", "rank")
-    )
+    return _probe_top_k(cb, qb, "__cell", k, q_id, q_vec, c_id, c_vec)
 
 
 def embedding_topk_pairs(
@@ -514,7 +514,6 @@ def embedding_topk_pairs(
     k: int = 20,
     c_id: str = "vec_id",
     c_vec: str = "embedding",
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Global top-k most-similar (a, b) corpus pairs by cosine — the
     embedding near-dup report (exact).
@@ -540,15 +539,10 @@ def embedding_topk_pairs(
     (round(dot, 6) DESC, a ASC, b ASC) — the same ordering the final Spark
     sort applies — so the survivors are exactly the global top-k.  ``c_id``
     must be integral; other types raise ValueError."""
-    import pandas as pd
-
     _require_integral_id(corpus, c_id)
-    width = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    if n_blocks is None:
-        # B(B+1)/2 group-tasks ≈ 2-4× the shuffle width keeps every core busy
-        # without replicating vectors more than ~B+1 times
-        n_blocks = max(2, int(round((4 * width) ** 0.5)))
-    B = n_blocks
+    # B(B+1)/2 group-tasks ≈ 2-4× the shuffle width keeps every core busy
+    # without replicating vectors more than ~B+1 times
+    B = max(2, int(round((4 * _shuffle_width(corpus)) ** 0.5)))
 
     base = corpus.select(F.col(c_id).alias("id"), F.col(c_vec).alias("v"),
                          F.pmod(F.xxhash64(F.col(c_id)), F.lit(B)).cast("int").alias("blk"))
@@ -604,11 +598,8 @@ def embedding_topk_pairs(
             a = np.minimum(ai, bi_)   # blocks are disjoint id sets: a < b
             b = np.maximum(ai, bi_)
         if len(d) > k:
-            # order = (round6 DESC, a ASC, b ASC) — NaN (zero-norm vector)
-            # sorts FIRST to match Spark's NaN-greatest descending order
-            key = np.round(d, 6)
-            key = np.where(np.isnan(key), np.inf, key)
-            idx = np.lexsort((b, a, -key))[:k]
+            # order = (round6 DESC, a ASC, b ASC)
+            idx = np.lexsort((b, a, _desc_key(d)))[:k]
             a, b, d = a[idx], b[idx], d[idx]
         return pd.DataFrame({"a": a, "b": b, "dot": d})
 
@@ -623,7 +614,6 @@ def embedding_lsh_pairs(
     threshold: float = 0.99,
     n_planes: int = 8,
     multiprobe: int = 2,
-    seed: int = 42,
     c_id: str = "vec_id",
     c_vec: str = "embedding",
     dim: int | None = None,
@@ -641,30 +631,15 @@ def embedding_lsh_pairs(
     normalized map-side so verification is a bare dot product, and the
     candidate join is explicitly widened against AQE's byte-based coalescing
     (the pair space is CPU-heavy but byte-small)."""
-    if dim is None:
-        dim = len(corpus.select(c_vec).first()[0])
-    planes = _plane_literals(dim, n_planes, seed)
-    width = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    planes = _planes(corpus, c_vec, dim, n_planes)
     unit = corpus.select(F.col(c_id).alias("__id"), normalized(F.col(c_vec)).alias("__v"))
-    unit = unit.withColumn("__b0", bucket_of(F.col("__v"), planes))
+    unit = unit.withColumn("__b0", _lsh_bucket(F.col("__v"), planes))
     right = unit.select(F.col("__id").alias("b"), F.col("__v").alias("__vb"),
                         F.col("__b0").alias("__bucket"))
-    probes = [F.col("__b0")]
-    if multiprobe >= 1:
-        probes += [F.col("__b0").bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
-                   for i in range(n_planes)]
-    if multiprobe >= 2:
-        probes += [
-            F.col("__b0")
-            .bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
-            .bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), j))
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        ]
     left = (
-        unit.withColumn("__bucket", F.explode(F.array(*probes)))
+        unit.withColumn("__bucket", F.explode(_probe_buckets(F.col("__b0"), n_planes, multiprobe)))
         .select(F.col("__id").alias("a"), F.col("__v").alias("__va"), "__bucket")
-        .repartition(width, "__bucket")
+        .repartition(_shuffle_width(corpus), "__bucket")
     )
     cand = (
         left.join(right, "__bucket")

@@ -81,9 +81,13 @@ def _ns_join(left: DataFrame, right: DataFrame, on: str, how: str = "inner") -> 
 
 def _rolling_kw(rolling_spec: dict | None) -> dict:
     """``{"name", "col", "fn", "rows" | "range_seconds"}`` → the core's
-    rolling keywords."""
+    rolling keywords.  The composites roll over history strictly before the
+    row, so a true ``include_current`` is refused rather than ignored."""
     if rolling_spec is None:
         return {}
+    if rolling_spec.get("include_current"):
+        raise ValueError("rolling_spec rolls over history strictly before the row; "
+                         "include_current=True is not supported")
     return {"aggs": {rolling_spec["name"]: (rolling_spec["col"], rolling_spec["fn"])},
             "rows": rolling_spec.get("rows"), "range_seconds": rolling_spec.get("range_seconds")}
 
@@ -109,7 +113,8 @@ def _pit_core(
     column per ``aggs`` name, ``session_col`` if ``session_gap``), equal to
     the plain composition as-of → rolling → sessionize → forward-fill.
     Rolling reads unfilled event columns; ``ffill_cols`` may name event or
-    payload columns."""
+    payload columns.  A rows frame ends before the row; ``include_current``
+    applies to the range frame only."""
     event_cols = [c for c in events.columns if c not in (on, left_ts)]
     payload = [] if features is None else [c for c in features.columns if c not in (on, right_ts)]
     if features is not None and not payload:
@@ -251,7 +256,7 @@ def _pit_core(
     kept = d.filter(F.col("__tag") == ev_tag)
     if aggs:
         if rows is not None:
-            frame = w.rowsBetween(-(rows - 1) if include_current else -rows, 0 if include_current else -1)
+            frame = w.rowsBetween(-rows, -1)
         else:
             frame = Window.partitionBy(on, "__bkt").orderBy("__us").rangeBetween(
                 -range_seconds * 1_000_000, 0 if include_current else -1)
@@ -336,7 +341,7 @@ def pit_fused_bucketed(
     right_ts: str = "feature_time",
     strict: bool = True,
     ffill_cols: list[str] | None = None,
-    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows" | "range_seconds", "include_current": False}
+    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows" | "range_seconds"}
     session_gap: int | None = None,
     bucket_seconds: int = 86400,
 ) -> DataFrame:
@@ -345,5 +350,4 @@ def pit_fused_bucketed(
     plus one summary/carry repair."""
     return _pit_core(events, features, on=on, left_ts=left_ts, right_ts=right_ts, strict=strict,
                      ffill_cols=ffill_cols or (), session_gap=session_gap, bucket_seconds=bucket_seconds,
-                     include_current=(rolling_spec or {}).get("include_current", False),
                      **_rolling_kw(rolling_spec))

@@ -110,6 +110,18 @@ def _digit_count(t: Column) -> Column:
     return F.size(F.regexp_extract_all(t, F.lit(r"[0-9]"), 0))
 
 
+def _char_mix_bp(t: Column) -> tuple[Column, Column, Column]:
+    """(n_chars, punct_bp, digit_bp) of a text column: its length and its
+    punctuation and digit shares in basis points, ``floor(n * 10000 /
+    n_chars)``."""
+    n_chars = F.length(t).cast("long")
+
+    def bp(count: Column) -> Column:
+        return F.floor(count.cast("long") * 10000 / n_chars).cast("long")
+
+    return n_chars, bp(_punct_count(t)), bp(_digit_count(t))
+
+
 def _wc_stop_agg(w: Column, finish) -> Column:
     """(token count, stopword count) over a token array, reduced by
     ``finish(n, s)``.  Pass an already-evaluated array (lambda variable /
@@ -138,16 +150,13 @@ def quality_features_bp(text: ColumnOrName,
     positive-class regex (see ``_digit_count``).  ``words_arr``:
     already-evaluated token array (see repetition_signals_bp) so every
     entry shares ONE tokenization."""
-    t = _col(text)
     w = words_arr if words_arr is not None else words(text)
-    n_chars = F.length(t).cast("long")
-    n_punct = _punct_count(t).cast("long")
-    n_digit = _digit_count(t).cast("long")
+    n_chars, punct_bp, digit_bp = _char_mix_bp(_col(text))
     return {
         "n_chars": n_chars,
         "n_words": F.size(w).cast("long"),
-        "punct_bp": F.floor(n_punct * 10000 / n_chars).cast("long"),
-        "digit_bp": F.floor(n_digit * 10000 / n_chars).cast("long"),
+        "punct_bp": punct_bp,
+        "digit_bp": digit_bp,
         "stopword_bp": _wc_stop_agg(
             w, lambda n, s: F.floor(s * 10000 / n).cast("long")),
     }
@@ -259,12 +268,10 @@ def quality_score_bp(text: ColumnOrName,
     0.4·len + 0.3·stopword + 0.3·(1 − noise), all in integer arithmetic.
 
     With ``words_arr`` bound by the caller the composite costs one size()
-    and one filter pass over the shared token array plus the translate-based
-    punct/digit counts — no re-tokenization anywhere."""
-    t = _col(text)
-    n_chars = F.length(t).cast("long")
-    punct_bp = F.floor(_punct_count(t).cast("long") * 10000 / n_chars).cast("long")
-    digit_bp = F.floor(_digit_count(t).cast("long") * 10000 / n_chars).cast("long")
+    and one filter pass over the shared token array plus the punct count
+    (translate-deletion) and the digit count (a positive-class regex, see
+    ``_digit_count``) — no re-tokenization anywhere."""
+    _, punct_bp, digit_bp = _char_mix_bp(_col(text))
     noise_bp = F.greatest(
         F.lit(0).cast("long"),
         F.lit(10000).cast("long") - punct_bp * 3 - digit_bp * 2,

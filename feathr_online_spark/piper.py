@@ -155,7 +155,7 @@ class Piper:
         # build the request DataFrame keeping the per-column piper types so
         # dynamic carriers decode back to python values — the reference's
         # rows are runtime-typed, not JSON text
-        df, types = self._run_with_types(pipe, rows_in)
+        df, types = pipe.run_with_types(self.spark, rows_in, self.sources)
         collected = df.collect()
         err_cols = [c for c in df.columns if c.startswith("_err_")]
         dyn_cols = [c for c in df.columns if types.get(c) == "dynamic"]
@@ -175,23 +175,6 @@ class Piper:
                         pass  # unquoted JsonPath-derived text stays a string
             rows.append(d)
         return rows, errors
-
-    def _run_with_types(self, pipe, rows_in):
-        """CompiledPipeline.run, but returning (df, output piper types)."""
-        import json as _json
-
-        from feathr_online_spark.dsl import _SPARK_TYPES as _ST
-
-        schema = ", ".join(f"{n} {_ST[t]}" for n, t in pipe.input_schema)
-
-        def enc(v, t):
-            if t == "dynamic" and v is not None:
-                return _json.dumps(v, separators=(",", ":"))
-            return v
-
-        data = [tuple(enc(r.get(n), t) for n, t in pipe.input_schema) for r in rows_in]
-        df = self.spark.createDataFrame(data, schema)
-        return pipe.apply_with_types(df, self.sources)
 
     async def process_async(self, pipeline_name: str, data, error_report: bool = True):
         """Async face for async webframeworks (fastapi_example.py shape); the

@@ -176,38 +176,37 @@ def stream_asof_enrich(
             return
         last = list(state.get) if state.exists else None
         whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        for pdf in (whole,):
-            pdf = pdf.sort_values(["__ts", "__tag", "__tb"], kind="mergesort")
-            ev = pdf[pdf["__tag"] == 0]
-            ft = pdf[pdf["__tag"] == 1][["__ts", "__tb"] + payload]
-            if last is not None and last[0] is not None:
-                seed = pd.DataFrame(
-                    [[pd.Timestamp(last[0], unit="us"), last[1]] + list(last[2:])],
-                    columns=["__ts", "__tb"] + payload,
-                )
-                ft = pd.concat([seed, ft], ignore_index=True)
+        pdf = whole.sort_values(["__ts", "__tag", "__tb"], kind="mergesort")
+        ev = pdf[pdf["__tag"] == 0]
+        ft = pdf[pdf["__tag"] == 1][["__ts", "__tb"] + payload]
+        if last is not None and last[0] is not None:
+            seed = pd.DataFrame(
+                [[pd.Timestamp(last[0], unit="us"), last[1]] + list(last[2:])],
+                columns=["__ts", "__tb"] + payload,
+            )
+            ft = pd.concat([seed, ft], ignore_index=True)
+        if len(ft):
+            # re-sort: the carried state row (or out-of-order arrivals)
+            # may break ordering, and merge_asof demands sorted keys; the
+            # (ts, tb) sort puts the max-tiebreak row last among equal
+            # timestamps — exactly the batch winner
+            ft = ft.sort_values(["__ts", "__tb"], kind="mergesort")
+            newest = ft.iloc[-1]
+            last = ([int(newest["__ts"].value // 1000), int(newest["__tb"])]
+                    + [newest[c] for c in payload])
+        if len(ev):
+            ev = ev[[on, "__ts"] + event_cols]
             if len(ft):
-                # re-sort: the carried state row (or out-of-order arrivals)
-                # may break ordering, and merge_asof demands sorted keys; the
-                # (ts, tb) sort puts the max-tiebreak row last among equal
-                # timestamps — exactly the batch winner
-                ft = ft.sort_values(["__ts", "__tb"], kind="mergesort")
-                newest = ft.iloc[-1]
-                last = ([int(newest["__ts"].value // 1000), int(newest["__tb"])]
-                        + [newest[c] for c in payload])
-            if len(ev):
-                ev = ev[[on, "__ts"] + event_cols]
-                if len(ft):
-                    merged = pd.merge_asof(
-                        ev, ft, on="__ts",
-                        allow_exact_matches=allow_exact, direction="backward",
-                    )
-                else:
-                    merged = ev.copy()
-                    for c in payload:
-                        merged[c] = None
-                merged = merged.rename(columns={"__ts": left_ts})
-                yield merged[[on, left_ts] + event_cols + payload]
+                merged = pd.merge_asof(
+                    ev, ft, on="__ts",
+                    allow_exact_matches=allow_exact, direction="backward",
+                )
+            else:
+                merged = ev.copy()
+                for c in payload:
+                    merged[c] = None
+            merged = merged.rename(columns={"__ts": left_ts})
+            yield merged[[on, left_ts] + event_cols + payload]
         if last is not None:
             state.update(tuple(last))
 

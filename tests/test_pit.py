@@ -4,10 +4,12 @@ import re
 from datetime import datetime, timedelta
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from feathr_online_spark.operators.asof import asof_join
 from feathr_online_spark.operators.pit import hot_entities, pit_enrich
+from feathr_online_spark.operators.skew import pit_fused_bucketed
 from feathr_online_spark.operators.windows import forward_fill, rolling, sessionize
 from tests.conftest import rows
 
@@ -51,6 +53,20 @@ def test_pit_enrich_equals_plain(spark):
                     range_seconds=3600, include_current=False)
     cols = sorted(plain.columns)
     assert rows(ranged.select(cols)) == rows(plain.select(cols))
+
+
+def test_composites_refuse_include_current(spark):
+    """The composites roll over history strictly before the row: a true
+    ``rolling_spec["include_current"]`` is refused on both pit_enrich
+    branches and by pit_fused_bucketed instead of being ignored."""
+    events = spark.createDataFrame([(0, BASE, 0)], "entity long, event_time timestamp, eid long")
+    features = spark.createDataFrame([(0, BASE, 1.0)], "entity long, feature_time timestamp, fv double")
+    spec = {"name": "hist_n", "col": "eid", "fn": "count", "rows": 4, "include_current": True}
+    for threshold in (0, 10**9):
+        with pytest.raises(ValueError, match="include_current"):
+            pit_enrich(events, features, rolling_spec=spec, hot_threshold=threshold)
+    with pytest.raises(ValueError, match="include_current"):
+        pit_fused_bucketed(events, features, rolling_spec=spec)
 
 
 def test_hot_entities_detection(spark):

@@ -70,6 +70,22 @@ def test_lsh_recall(corpus, queries):
     assert all(r.rank >= 1 for r in approx.collect())
 
 
+@pytest.mark.parametrize("multiprobe", [0, 1, 2])
+def test_probe_buckets_multiprobe_contract(spark, multiprobe):
+    """``multiprobe=L`` probes exactly the buckets within L sign flips of
+    the query's own: 1, n+1 and 1 + n + n(n-1)/2 distinct buckets."""
+    from feathr_online_spark.operators.similarity import _probe_buckets
+
+    n, b0 = 8, 0b10110010
+    row = spark.createDataFrame([(b0,)], "b0 long").select(
+        _probe_buckets(F.col("b0"), n, multiprobe).alias("p")).first()
+    probes = set(row.p)
+    assert len(probes) == [1, n + 1, 1 + n + n * (n - 1) // 2][multiprobe]
+    assert len(probes) == len(row.p)
+    assert all(bin(p ^ b0).count("1") <= multiprobe for p in probes)
+    assert b0 in probes
+
+
 def test_ivf_recall_on_clustered_data(spark):
     """IVF shines on clustered corpora: recall vs brute force must be high
     when queries sit in well-separated clusters."""
@@ -88,7 +104,7 @@ def test_ivf_recall_on_clustered_data(spark):
     from feathr_online_spark.operators.similarity import knn_ivf
 
     exact = knn_bruteforce(queries, corpus, k=10)
-    approx = knn_ivf(queries, corpus, k=10, n_cells=8, n_probe=2, iters=2)
+    approx = knn_ivf(queries, corpus, k=10, n_cells=8, n_probe=2)
     e = {(r.q_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.q_id, r.neighbor_id) for r in approx.collect()}
     assert len(e & a) / len(e) >= 0.9

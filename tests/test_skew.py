@@ -143,19 +143,15 @@ def _feats(spark, extra=()):
 def _rows_mode_vs_plain(df, feats, rows_frame, bucket):
     """Rows-mode rolling sums through the bucketed core next to the plain
     composition, as {eid: (hist, f)} pairs: pit_enrich(hot_threshold=0)
-    rolls history strictly before the row, pit_fused_bucketed is run with
-    ``include_current``."""
+    rolls history strictly before the row."""
     spec = {"name": "hist", "col": "v", "fn": "sum", "rows": rows_frame}
     joined = asof_join(df, feats)
     as_map = lambda out: {r.eid: (r.hist, r.f) for r in out.collect()}
-    plain = lambda inc: as_map(rolling(joined, {"hist": ("v", "sum")}, rows=rows_frame,
-                                       include_current=inc))
     return {
         "pit_enrich": (as_map(pit_enrich(df, feats, rolling_spec=spec, hot_threshold=0,
-                                         bucket_seconds=bucket)), plain(False)),
-        "pit_fused_bucketed include_current": (
-            as_map(pit_fused_bucketed(df, feats, rolling_spec={**spec, "include_current": True},
-                                      bucket_seconds=bucket)), plain(True)),
+                                         bucket_seconds=bucket)),
+                       as_map(rolling(joined, {"hist": ("v", "sum")}, rows=rows_frame,
+                                      include_current=False))),
     }
 
 

@@ -53,6 +53,54 @@ def pandas_hash(df: pd.DataFrame):
     return pd.util.hash_pandas_object(d, index=False).sum()
 
 
+def check(spark, con, sf_dir, fn, oracle):
+    """(ok, report lines) of one query against its oracle SQL (None: the
+    rows-only check).  Unindented lines are printed after the gate key."""
+    sdf = fn(spark, sf_dir)
+    scols = sdf.columns
+    spdf = sdf.toPandas()
+    srows = [tuple(r) for r in spdf.itertuples(index=False)]
+    if oracle is None:
+        # rows-only, but still exercise the driver's canonicalizer so
+        # ndarray cells crash HERE, not in the driver
+        try:
+            pandas_hash(spdf)
+            return True, [f"rows-only check — {len(srows)} rows (canon ok)"]
+        except Exception as e:
+            return False, [f"rows-only CANON CRASH — {type(e).__name__}: {e}"]
+    lines = []
+    dpdf = con.execute(oracle).df()
+    dcols = list(dpdf.columns)
+    drows = [tuple(r) for r in dpdf.itertuples(index=False)]
+    ok_schema = sorted(scols) == sorted(dcols)
+    ok_count = len(srows) == len(drows)
+    ok_vals = False
+    ok_hash = False
+    if ok_schema and ok_count:
+        ok_vals = canon(srows, scols) == canon(drows, dcols)
+        try:
+            ok_hash = pandas_hash(spdf) == pandas_hash(dpdf)
+        except Exception as e:
+            lines.append(f"CANON CRASH — {type(e).__name__}: {e}")
+    ok = ok_schema and ok_count and ok_vals and ok_hash
+    lines.append(f"{'OK' if ok else 'FAIL'}  rows={len(srows)}/{len(drows)} "
+                 f"schema={'✓' if ok_schema else f'{sorted(scols)} vs {sorted(dcols)}'} "
+                 f"vals={'✓' if ok_vals else '✗'} hash={'✓' if ok_hash else '✗'}")
+    if not ok and ok_schema and ok_count:
+        if not ok_vals:
+            a, b = canon(srows, scols), canon(drows, dcols)
+            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            for x, y in diffs:
+                lines.append(f"    spark: {x}\n    duck:  {y}")
+        elif not ok_hash:
+            sd = spdf[sorted(spdf.columns)].dtypes
+            dd = dpdf[sorted(dpdf.columns)].dtypes
+            for c in sorted(spdf.columns):
+                if str(sd[c]) != str(dd[c]):
+                    lines.append(f"    dtype {c}: spark={sd[c]} duck={dd[c]}")
+    return ok, lines
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -70,55 +118,19 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    # gate keys that alias one (query, oracle) pair run once and share lines
+    results = {}
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir)
-        scols = sdf.columns
-        spdf = sdf.toPandas()
-        srows = [tuple(r) for r in spdf.itertuples(index=False)]
-        if name not in oracles:
-            # rows-only, but still exercise the driver's canonicalizer so
-            # ndarray cells crash HERE, not in the driver
-            try:
-                pandas_hash(spdf)
-                print(f"{name:>22}: rows-only check — {len(srows)} rows (canon ok)")
-            except Exception as e:
-                failures += 1
-                print(f"{name:>22}: rows-only CANON CRASH — {type(e).__name__}: {e}")
-            continue
-        dpdf = con.execute(oracles[name]).df()
-        dcols = list(dpdf.columns)
-        drows = [tuple(r) for r in dpdf.itertuples(index=False)]
-        ok_schema = sorted(scols) == sorted(dcols)
-        ok_count = len(srows) == len(drows)
-        ok_vals = False
-        ok_hash = False
-        if ok_schema and ok_count:
-            ok_vals = canon(srows, scols) == canon(drows, dcols)
-            try:
-                ok_hash = pandas_hash(spdf) == pandas_hash(dpdf)
-            except Exception as e:
-                print(f"{name:>22}: CANON CRASH — {type(e).__name__}: {e}")
-        status = "OK" if (ok_schema and ok_count and ok_vals and ok_hash) else "FAIL"
-        if status == "FAIL":
-            failures += 1
-        print(f"{name:>22}: {status}  rows={len(srows)}/{len(drows)} "
-              f"schema={'✓' if ok_schema else f'{sorted(scols)} vs {sorted(dcols)}'} "
-              f"vals={'✓' if ok_vals else '✗'} hash={'✓' if ok_hash else '✗'}")
-        if status == "FAIL" and ok_schema and ok_count:
-            if not ok_vals:
-                a, b = canon(srows, scols), canon(drows, dcols)
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                for x, y in diffs:
-                    print(f"    spark: {x}\n    duck:  {y}")
-            elif not ok_hash:
-                sd = spdf[sorted(spdf.columns)].dtypes
-                dd = dpdf[sorted(dpdf.columns)].dtypes
-                for c in sorted(spdf.columns):
-                    if str(sd[c]) != str(dd[c]):
-                        print(f"    dtype {c}: spark={sd[c]} duck={dd[c]}")
+        key = (fn, oracles.get(name))
+        if key not in results:
+            results[key] = check(spark, con, sf_dir, fn, key[1])
+        ok, lines = results[key]
+        failures += not ok
+        for line in lines:
+            print(line if line.startswith(" ") else f"{name:>22}: {line}")
     sys.exit(1 if failures else 0)
 
 
