@@ -1,9 +1,10 @@
 """Piper DSL front end: tokenizer + recursive-descent parser + compiler to
 DataFrame transformations.
 
-Grammar: /root/reference/DSL-syntax.txt; operator precedence reproduced from
-the reference's precedence-climbing parser (piper/src/pipeline/parser/
-dsl_parser.rs:169-219), which is unusual — lowest to highest:
+Grammar: the reference's DSL-syntax.txt; operator precedence reproduced from
+its precedence-climbing parser (piper/src/pipeline/parser/dsl_parser.rs:
+169-219) as the ``_BINARY_LEVELS`` table below, which is unusual — lowest to
+highest:
 
     comparison (> < >= <= == != <>)
     additive   (+ - or)
@@ -25,6 +26,7 @@ over hand-written DataFrame code.
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass, field
 
@@ -40,13 +42,13 @@ from feathr_online_spark.operators.pipeline import Pipeline
 # Tokenizer
 # ---------------------------------------------------------------------------
 
+# group names are the token kinds.  The first num alternative that matches
+# wins, so float precedes dec (`1.5` is one token) and hex/bin precede dec
+# (`0x1F` is not `0` followed by an identifier).
 _TOKEN_RE = re.compile(
     r"""
     (?P<ws>\s+|\#[^\r\n]*)
-  | (?P<float>\d+\.\d*|\.\d+)
-  | (?P<hex>0[xX][0-9a-fA-F]+)
-  | (?P<bin>0[bB][01]+)
-  | (?P<dec>\d+)
+  | (?P<num>\d+\.\d*|\.\d+|0[xX][0-9a-fA-F]+|0[bB][01]+|\d+)
   | (?P<id>[a-zA-Z][a-zA-Z0-9_]*(?:-(?:rename|remove|keep|inner|outer|error|expand))*)
   | (?P<str>"(?:[^"\\\r\n]|\\["\\rnt])*")
   | (?P<op><>|!=|>=|<=|==|&&|[|;,()\[\]=<>+\-*/%&~!.])
@@ -78,24 +80,27 @@ def tokenize(src: str) -> list[Tok]:
         if not m:
             raise SyntaxError(f"DSL tokenize error at {i}: {src[i:i+30]!r}")
         i = m.end()
-        kind = m.lastgroup
-        if kind == "ws":
-            continue
-        text = m.group()
-        if kind in ("float", "hex", "bin", "dec"):
-            out.append(Tok("num", text, m.start()))
-        elif kind == "id":
-            out.append(Tok("id", text, m.start()))
-        elif kind == "str":
-            out.append(Tok("str", text, m.start()))
-        else:
-            out.append(Tok("op", text, m.start()))
+        if m.lastgroup != "ws":
+            out.append(Tok(m.lastgroup, m.group(), m.start()))
     return out
 
 
 # ---------------------------------------------------------------------------
 # Parser (recursive descent mirroring the reference precedence table)
 # ---------------------------------------------------------------------------
+
+# binary operator levels, lowest precedence first: operator token (word
+# operators lowercased) → AST op
+_BINARY_LEVELS = (
+    {">": ">", "<": "<", ">=": ">=", "<=": "<=", "==": "==", "!=": "!=", "<>": "!="},
+    {"+": "+", "-": "-", "or": "or"},
+    {"*": "*", "/": "/", "%": "%", "&": "&", "&&": "and", "div": "div", "and": "and"},
+)
+
+
+def _is_kw(t: Tok | None, *words: str) -> bool:
+    return t is not None and t.kind == "id" and t.text.lower() in words
+
 
 @dataclass
 class Parser:
@@ -111,8 +116,7 @@ class Parser:
         return t is not None and t.text == text
 
     def at_kw(self, *words: str) -> bool:
-        t = self.peek()
-        return t is not None and t.kind == "id" and t.text.lower() in words
+        return _is_kw(self.peek(), *words)
 
     def take(self, text: str | None = None) -> Tok:
         t = self.peek()
@@ -123,6 +127,13 @@ class Parser:
         self.i += 1
         return t
 
+    def skip(self, text: str) -> bool:
+        """Consume an optional ``text`` token; whether it was there."""
+        if self.at(text):
+            self.i += 1
+            return True
+        return False
+
     def take_id(self) -> str:
         t = self.peek()
         if t is None or t.kind != "id":
@@ -130,50 +141,58 @@ class Parser:
         self.i += 1
         return t.text
 
+    def take_int(self) -> int:
+        t = self.take()
+        if t.kind != "num" or not t.text.isdecimal():
+            raise SyntaxError(f"expected an integer at {t.pos}, got {t.text!r}")
+        return int(t.text)
+
+    def take_kw(self, word: str) -> None:
+        """Consume the required keyword ``word`` (any case)."""
+        if not self.at_kw(word):
+            t = self.peek()
+            raise SyntaxError(f"expected {word!r} at {t.pos}, got {t.text!r}" if t
+                              else f"expected {word!r}, got EOF")
+        self.i += 1
+
+    def skip_kw(self, *words: str) -> str | None:
+        """Consume an optional keyword; its lowercased text, or None."""
+        return self.take().text.lower() if self.at_kw(*words) else None
+
+    def items(self, item) -> list:
+        """``item (, item)*`` → the item() results."""
+        out = [item()]
+        while self.skip(","):
+            out.append(item())
+        return out
+
+    def call_args(self) -> list:
+        """``( [expr (, expr)*] )``"""
+        self.take("(")
+        args = [] if self.at(")") else self.items(self.expr)
+        self.take(")")
+        return args
+
     # -- expressions ---------------------------------------------------------
 
-    def expr(self):
-        return self._cmp()
-
-    def _cmp(self):
-        left = self._add()
+    def expr(self, level: int = 0):
+        """Left-associative binary operators of ``_BINARY_LEVELS[level]``
+        and above; past the last level come the unary operators."""
+        if level == len(_BINARY_LEVELS):
+            return self._unary()
+        ops = _BINARY_LEVELS[level]
+        left = self.expr(level + 1)
         while True:
             t = self.peek()
-            if t and t.text in (">", "<", ">=", "<=", "==", "!=", "<>"):
-                self.take()
-                right = self._add()
-                op = "!=" if t.text == "<>" else t.text
-                left = ("bin", op, left, right)
-            else:
+            op = t and ops.get(t.text.lower() if t.kind == "id" else t.text)
+            if op is None:
                 return left
-
-    def _add(self):
-        left = self._mul()
-        while True:
-            t = self.peek()
-            if t and (t.text in ("+", "-") or (t.kind == "id" and t.text.lower() == "or")):
-                self.take()
-                left = ("bin", t.text.lower(), left, self._mul())
-            else:
-                return left
-
-    def _mul(self):
-        left = self._unary()
-        while True:
-            t = self.peek()
-            if t and (
-                t.text in ("*", "/", "%", "&", "&&")
-                or (t.kind == "id" and t.text.lower() in ("div", "and"))
-            ):
-                self.take()
-                op = "and" if t.text == "&&" else t.text.lower()
-                left = ("bin", op, left, self._unary())
-            else:
-                return left
+            self.take()
+            left = ("bin", op, left, self.expr(level + 1))
 
     def _unary(self):
         t = self.peek()
-        if t and (t.text in ("+", "-", "~", "!") or (t.kind == "id" and t.text.lower() == "not")):
+        if t and (t.text in ("+", "-", "~", "!") or _is_kw(t, "not")):
             self.take()
             return ("un", t.text.lower(), self._unary())
         return self._postfix()
@@ -182,37 +201,22 @@ class Parser:
         e = self._primary()
         while True:
             if self.at_kw("is"):
-                # is null / is not null
-                save = self.i
-                self.take()
-                if self.at_kw("not"):
-                    self.take()
-                    if self.at_kw("null"):
-                        self.take()
-                        e = ("un", "is not null", e)
-                        continue
-                    self.i = save
+                negated = _is_kw(self.peek(1), "not")
+                if not _is_kw(self.peek(1 + negated), "null"):
                     return e
-                if self.at_kw("null"):
-                    self.take()
-                    e = ("un", "is null", e)
-                    continue
-                self.i = save
-                return e
-            if self.at("["):
-                self.take()
-                idx = self.expr()
+                self.i += 2 + negated
+                e = ("un", "is not null" if negated else "is null", e)
+            elif self.skip("["):
+                e = ("index", e, self.expr())
                 self.take("]")
-                e = ("index", e, idx)
-                continue
-            return e
+            else:
+                return e
 
     def _primary(self):
         t = self.peek()
         if t is None:
             raise SyntaxError("unexpected end of expression")
-        if t.text == "(":
-            self.take()
+        if self.skip("("):
             e = self.expr()
             self.take(")")
             return e
@@ -224,13 +228,13 @@ class Parser:
             return ("str", _unescape(t.text))
         if t.kind == "id":
             low = t.text.lower()
-            if low == "case":
-                # `case when ... end` is syntax; `case(cond, val, ...)` is the
-                # function-call form (reference registers BOTH: dsl_parser.rs
-                # case_clause + CaseFunction at function/mod.rs:431)
-                nxt = self.peek(1)
-                if nxt is None or nxt.text != "(":
-                    return self._case()
+            nxt = self.peek(1)
+            called = nxt is not None and nxt.text == "("
+            # `case when ... end` is syntax; `case(cond, val, ...)` is the
+            # function-call form (reference registers BOTH: dsl_parser.rs
+            # case_clause + CaseFunction at function/mod.rs:431)
+            if low == "case" and not called:
+                return self._case()
             if low in ("true", "false"):
                 self.take()
                 return ("bool", low == "true")
@@ -240,23 +244,11 @@ class Parser:
             if low == "null":
                 self.take()
                 return ("null",)
-            nxt = self.peek(1)
-            if nxt is not None and nxt.text == "(":
-                name = self.take_id()
-                self.take("(")
-                args = []
-                if not self.at(")"):
-                    args.append(self.expr())
-                    while self.at(","):
-                        self.take(",")
-                        args.append(self.expr())
-                self.take(")")
-                return ("call", name, args)
+            if called:
+                return ("call", self.take_id(), self.call_args())
             # dot member chain
-            name = self.take_id()
-            segs = [name]
-            while self.at("."):
-                self.take(".")
+            segs = [self.take_id()]
+            while self.skip("."):
                 segs.append(self.take_id())
             return ("col", segs)
         raise SyntaxError(f"unexpected token {t.text!r} at {t.pos}")
@@ -264,20 +256,12 @@ class Parser:
     def _case(self):
         self.take()  # case
         whens = []
-        while self.at_kw("when"):
-            self.take()
+        while self.skip_kw("when"):
             cond = self.expr()
-            if not self.at_kw("then"):
-                raise SyntaxError("expected 'then' in case expression")
-            self.take()
+            self.take_kw("then")
             whens.append((cond, self.expr()))
-        other = None
-        if self.at_kw("else"):
-            self.take()
-            other = self.expr()
-        if not self.at_kw("end"):
-            raise SyntaxError("expected 'end' in case expression")
-        self.take()
+        other = self.expr() if self.skip_kw("else") else None
+        self.take_kw("end")
         return ("case", whens, other)
 
 
@@ -325,6 +309,38 @@ def _dyn_as(e: Column, t: str | None, want: str) -> Column:
     if want == "bool":
         return txt.cast("boolean")
     return txt
+
+
+# Column operator of each arithmetic, boolean and comparison AST op
+_COLUMN_OPS = {
+    "+": operator.add, "-": operator.sub, "*": operator.mul, "/": operator.truediv,
+    "and": operator.and_, "or": operator.or_,
+    ">": operator.gt, "<": operator.lt, ">=": operator.ge,
+    "<=": operator.le, "==": operator.eq, "!=": operator.ne,
+}
+
+
+def _dyn_dispatch(a: Column, b: Column, num_op, text_op) -> Column:
+    """Runtime Value dispatch over two dynamic carriers: ``num_op`` on the
+    numeric views when BOTH payloads parse as numbers, ``text_op`` on the
+    scalar texts otherwise."""
+    at, bt = _dyn_text(a), _dyn_text(b)
+    an, bn = at.cast("double"), bt.cast("double")
+    return F.when(an.isNotNull() & bn.isNotNull(), num_op(an, bn)).otherwise(text_op(at, bt))
+
+
+def _sum_text(an: Column, bn: Column) -> Column:
+    s = an + bn
+    return F.when(s == F.floor(s), s.cast("long").cast("string")).otherwise(s.cast("string"))
+
+
+def _dyn_order_key(c: Column) -> Column:
+    """Runtime-typed sort key of a dynamic carrier: numbers numerically,
+    then text after all numbers, as an (is-text, number, text) struct —
+    the carrier text alone would rank '9' > '10'."""
+    txt = _dyn_text(c)
+    num = txt.cast("double")
+    return F.struct(num.isNull().cast("int"), num, txt)
 
 
 class ExprCompiler:
@@ -392,10 +408,9 @@ class ExprCompiler:
         if kind == "un":
             op = ast[1]
             e, t = self.compile(ast[2])
-            if op == "-":
-                return -_dyn_as(e, t, "num"), ("double" if t == "dynamic" else t)
-            if op == "+":
-                return _dyn_as(e, t, "num") if t == "dynamic" else e, ("double" if t == "dynamic" else t)
+            if op in ("-", "+"):
+                x = _dyn_as(e, t, "num")
+                return (-x if op == "-" else x), ("double" if t == "dynamic" else t)
             if op in ("!", "not"):
                 return ~_dyn_as(e, t, "bool"), "boolean"
             if op == "~":
@@ -408,69 +423,43 @@ class ExprCompiler:
             op = ast[1]
             a, ta = self.compile(ast[2])
             b, tb = self.compile(ast[3])
-            if op == "+":
-                if ta == "string" or tb == "string":
-                    return F.concat(_dyn_as(a, ta, "text").cast("string"),
-                                    _dyn_as(b, tb, "text").cast("string")), "string"
-                if ta == "dynamic" and tb == "dynamic":
-                    # runtime dispatch like the reference Value model
-                    # (math_op.rs:82): numeric add when both payloads are
-                    # numbers, string concat otherwise.  One Spark column =
-                    # one type, so the result is a string; integral sums
-                    # render without the trailing '.0'.
-                    at, bt = _dyn_text(a), _dyn_text(b)
-                    an, bn = at.cast("double"), bt.cast("double")
-                    s = an + bn
-                    s_str = F.when(s == F.floor(s), s.cast("long").cast("string")).otherwise(s.cast("string"))
-                    return (
-                        F.when(an.isNotNull() & bn.isNotNull(), s_str)
-                        .otherwise(F.concat(at, bt)),
-                        "string",
-                    )
-                a, b = _dyn_as(a, ta, "num"), _dyn_as(b, tb, "num")
-                return a + b, _promote(ta, tb)
-            if op == "-":
-                return _dyn_as(a, ta, "num") - _dyn_as(b, tb, "num"), _promote(ta, tb)
-            if op == "*":
-                return _dyn_as(a, ta, "num") * _dyn_as(b, tb, "num"), _promote(ta, tb)
-            if op == "/":
+            pyop = _COLUMN_OPS.get(op)
+            if op == "+" and "string" in (ta, tb):
+                return F.concat(_dyn_as(a, ta, "text").cast("string"),
+                                _dyn_as(b, tb, "text").cast("string")), "string"
+            if op == "+" and ta == tb == "dynamic":
+                # runtime dispatch like the reference Value model
+                # (math_op.rs:82): numeric add when both payloads are
+                # numbers, string concat otherwise.  One Spark column =
+                # one type, so the result is a string; integral sums
+                # render without the trailing '.0'.
+                return _dyn_dispatch(a, b, _sum_text, F.concat), "string"
+            if op == "/" and ta in ("int", "long") and tb in ("int", "long"):
                 # DivideOperator (math_op.rs:197 via binary_math_op) is typed:
                 # Int/Int → Int, Int|Long/Long → Long, both Rust-truncated;
                 # any float operand promotes to true double division.  The
                 # integral branch uses SQL `div` — exact i64, never a double
                 # round-trip (which rounds operands above 2^53).
-                if ta in ("int", "long") and tb in ("int", "long"):
-                    out_t = "long" if "long" in (ta, tb) else "int"
-                    q = F.call_function("div", a.cast("long"), b.cast("long"))
-                    return (q if out_t == "long" else q.cast("int")), out_t
-                return _dyn_as(a, ta, "num") / _dyn_as(b, tb, "num"), "double"
-            if op == "div":
-                return P.div(_dyn_as(a, ta, "num"), _dyn_as(b, tb, "num")), "long"
-            if op == "%":
-                return P.mod_long(_dyn_as(a, ta, "num"), _dyn_as(b, tb, "num")), "long"
+                out_t = "long" if "long" in (ta, tb) else "int"
+                q = F.call_function("div", a.cast("long"), b.cast("long"))
+                return (q if out_t == "long" else q.cast("int")), out_t
+            if op in ("+", "-", "*", "/"):
+                out_t = "double" if op == "/" else _promote(ta, tb)
+                return pyop(_dyn_as(a, ta, "num"), _dyn_as(b, tb, "num")), out_t
+            if op in ("div", "%"):
+                f = P.div if op == "div" else P.mod_long
+                return f(_dyn_as(a, ta, "num"), _dyn_as(b, tb, "num")), "long"
             if op == "&":
                 return lookup_fn("bit_and")(a, b), _promote(ta, tb)
-            if op == "and":
-                return _dyn_as(a, ta, "bool") & _dyn_as(b, tb, "bool"), "boolean"
-            if op == "or":
-                return _dyn_as(a, ta, "bool") | _dyn_as(b, tb, "bool"), "boolean"
+            if op in ("and", "or"):
+                return pyop(_dyn_as(a, ta, "bool"), _dyn_as(b, tb, "bool")), "boolean"
             if op in (">", "<", ">=", "<=", "==", "!="):
-                import operator as _op
-
-                pyop = {">": _op.gt, "<": _op.lt, ">=": _op.ge,
-                        "<=": _op.le, "==": _op.eq, "!=": _op.ne}[op]
-                if ta == "dynamic" and tb == "dynamic":
+                if ta == tb == "dynamic":
                     # runtime dispatch (reference Value::partial_cmp,
                     # value.rs:301-338): numeric comparison when BOTH
                     # payloads are numbers — text compare would order '9' >
                     # '10' — text comparison otherwise.
-                    at, bt = _dyn_text(a), _dyn_text(b)
-                    an, bn = at.cast("double"), bt.cast("double")
-                    return (
-                        F.when(an.isNotNull() & bn.isNotNull(), pyop(an, bn))
-                        .otherwise(pyop(at, bt)),
-                        "boolean",
-                    )
+                    return _dyn_dispatch(a, b, pyop, pyop), "boolean"
                 if "dynamic" in (ta, tb):
                     # one typed side: the dynamic operand adopts its shape
                     other = tb if ta == "dynamic" else ta
@@ -504,18 +493,6 @@ class ExprCompiler:
                         "string",
                     )
                 return lookup_fn("to_json")(c), "string"
-            # strftime-format functions take the format as a python string
-            if name.lower() in ("to_unix_timestamp", "unix_timestamp", "timestamp") and len(ast[2]) == 2 and ast[2][1][0] == "str":
-                first, _ = self.compile(ast[2][0])
-                base = F.to_timestamp(first, P.strftime_to_java(ast[2][1][1]))
-                if name.lower() == "timestamp":
-                    # reference timestamp() = to_timestamp via var_fn
-                    # (mod.rs:366, datetime_functions.rs:52-79): a DATETIME
-                    # value, NOT epoch seconds
-                    return base, "datetime"
-                # unix_timestamp/to_unix_timestamp = TimestampFunction →
-                # DOUBLE epoch seconds (timestamp.rs get_output_type)
-                return F.unix_timestamp(base).cast("double"), "double"
             # Literal args: numeric/bool natives are safe everywhere (they
             # can't name a column), but a native python STRING is a
             # ColumnOrName to most Spark functions — upper("abc") would read
@@ -528,13 +505,15 @@ class ExprCompiler:
             # forward these params raw to the JVM as java.lang.String — a
             # Column there raises NOT_ITERABLE at plan build; empirically
             # audited across the registry, tests/test_dsl.py str-literal
-            # regression tests)
+            # regression tests).  The strftime formats of timestamp/
+            # unix_timestamp are translated to Java patterns at plan build.
             native_str = {
                 "get_json_object": {1}, "get_json_array": {1},
                 "regexp_extract": {1}, "regexp_replace": {1, 2},
                 "split": {1}, "split_part": {1}, "translate": {1, 2},
                 "concat_ws": {0}, "array_join": {1, 2},
                 "substring_index": {1},
+                "timestamp": {1}, "unix_timestamp": {1}, "to_unix_timestamp": {1},
             }.get(name.lower(), set())
             args = []
             for pos, x in enumerate(ast[2]):
@@ -550,9 +529,7 @@ class ExprCompiler:
                     # dynamic args reach registry functions as scalar text —
                     # the functions' casts take it from there
                     args.append(_dyn_text(c) if ct == "dynamic" else c)
-            f = lookup_fn(name)
-            out_t = "string" if name.lower() in ("string", "concat", "upper", "lower", "translate", "trim") else None
-            return f(*args), out_t
+            return lookup_fn(name)(*args), _CALL_TYPES.get(name.lower())
         if kind == "case":
             whens, other = ast[1], ast[2]
             expr = None
@@ -565,6 +542,18 @@ class ExprCompiler:
                 expr = expr.otherwise(o)
             return expr, None
         raise SyntaxError(f"cannot compile AST node {ast!r}")
+
+
+# static result types of calls the compiler must track: string-`+` concat,
+# and the reference's timestamp() = to_timestamp via var_fn (mod.rs:366,
+# datetime_functions.rs:52-79) → a DATETIME value, NOT epoch seconds, while
+# unix_timestamp/to_unix_timestamp = TimestampFunction → DOUBLE epoch
+# seconds (timestamp.rs get_output_type)
+_CALL_TYPES = {
+    "string": "string", "concat": "string", "upper": "string",
+    "lower": "string", "translate": "string", "trim": "string",
+    "timestamp": "datetime", "unix_timestamp": "double", "to_unix_timestamp": "double",
+}
 
 
 def _promote(a: str | None, b: str | None) -> str | None:
@@ -651,10 +640,7 @@ def _apply_stage(p: Pipeline, col_types: dict, verb: str, payload, sources) -> t
             # cross-type order is unspecified there — this one is stable).
             # The struct must stay SQL-NULL for null carriers, or the verb's
             # nulls first/last flag would be silently inert
-            txt = _dyn_text(c)
-            num = txt.cast("double")
-            key = F.struct(num.isNull().cast("int"), num, txt)
-            c = F.when(c.isNotNull() & txt.isNotNull(), key)
+            c = F.when(c.isNotNull() & _dyn_text(c).isNotNull(), _dyn_order_key(c))
         return p.top(n, c, ascending=asc, nulls_first=nulls_first), col_types
     if verb == "project":
         cols = {}
@@ -693,11 +679,10 @@ def _apply_stage(p: Pipeline, col_types: dict, verb: str, payload, sources) -> t
             )
             arr = F.when(n > 0, elems)  # null/empty/non-array → null → rows drop (inner explode)
             p = Pipeline(p.df.withColumn(col, arr))
-            col_types[col] = cast if cast else "dynamic"
-            return p.explode(col, cast=_SPARK_TYPES.get(cast) if cast else None), col_types
-        if cast:
+            col_types[col] = cast or "dynamic"
+        elif cast:
             col_types[col] = cast
-        return p.explode(col, cast=_SPARK_TYPES.get(cast) if cast else None), col_types
+        return p.explode(col, cast=_SPARK_TYPES.get(cast)), col_types
     if verb == "ignore-error":
         return p.ignore_error(), col_types
     if verb == "distinct":
@@ -718,17 +703,15 @@ def _apply_stage(p: Pipeline, col_types: dict, verb: str, payload, sources) -> t
             if compiled and compiled[0][1] == "dynamic":
                 # runtime-typed aggregation input (reference feeds Values):
                 # numeric folds take the numeric view; min/max order numbers
-                # numerically THEN text (carrier text would rank '9' > '10')
-                # via min_by/max_by over a (is-text, number, text) struct,
-                # returning the carrier; everything else aggregates the
-                # scalar-text carrier as-is.
+                # numerically THEN text via min_by/max_by over the
+                # _dyn_order_key, returning the carrier; everything else
+                # aggregates the scalar-text carrier as-is.
                 c = args[0]
                 txt = _dyn_text(c)
-                num = txt.cast("double")
                 if fl in ("sum", "avg", "mean"):
-                    args = [num, *args[1:]]
+                    args = [txt.cast("double"), *args[1:]]
                 elif fl in ("min", "max", "least", "greatest"):
-                    key = F.struct(num.isNull().cast("int"), num, txt)
+                    key = _dyn_order_key(c)
                     expr = F.min_by(txt, key) if fl in ("min", "least") else F.max_by(txt, key)
                     aggs[name] = expr
                     agg_types[name] = "dynamic"
@@ -740,16 +723,14 @@ def _apply_stage(p: Pipeline, col_types: dict, verb: str, payload, sources) -> t
             # column yields Long/Long → Rust-truncated long (sum.rs:51-92 +
             # math_op.rs:197); replicate where the static type is known,
             # using exact integral div (null-counting denominator preserved).
-            if fn_name.lower() in ("avg", "mean") and compiled and compiled[0][1] in ("int", "long"):
+            if fl in ("avg", "mean") and compiled and compiled[0][1] in ("int", "long"):
                 expr = F.call_function(
                     "div", F.sum(args[0]).cast("long"), F.count(F.lit(1))
                 )
             aggs[name] = expr
             agg_types[name] = None
         if keys_ast:
-            by = {}
-            for kname, kast in keys_ast:
-                by[kname] = ec.compile(kast)[0] if kast is not None else F.col(kname)
+            by = {k: F.col(k) if kast is None else ec.compile(kast)[0] for k, kast in keys_ast}
             out_types = dict(agg_types)
             out_types.update({k: col_types.get(k) for k in by})
             return p.summarize(aggs, by=by), out_types
@@ -765,10 +746,8 @@ def _apply_stage(p: Pipeline, col_types: dict, verb: str, payload, sources) -> t
             src_df, src_key = entry, entry.key
         else:
             src_df, src_key = entry
-        fmap = {}
-        for dst, src_f, ftype in fields:
-            fmap[dst] = src_f
-            col_types[dst] = ftype
+        fmap = {dst: src_f for dst, src_f, _ in fields}
+        col_types.update({dst: ftype for dst, _, ftype in fields})
         key_expr = ec.compile(key_ast)[0]
         if verb == "lookup":
             newp = p.lookup(src_df, on=key_expr, key=src_key, fields=fmap)
@@ -795,27 +774,32 @@ def parse_pipelines(src: str) -> dict[str, CompiledPipeline]:
 def _parse_pipeline(ps: Parser) -> CompiledPipeline:
     name = ps.take_id()
     ps.take("(")
-    schema: list[tuple[str, str]] = []
-    while True:
-        col = ps.take_id()
-        ctype = "dynamic"
-        if ps.at_kw("as"):
-            ps.take()
-            ctype = ps.take_id().lower()
-            if ctype not in _TYPES:
-                raise SyntaxError(f"unknown type {ctype}")
-        schema.append((col, ctype))
-        if ps.at(","):
-            ps.take(",")
-            continue
-        break
+
+    def column():
+        col, ctype = ps.take_id(), _as_type(ps) or "dynamic"
+        if ctype not in _TYPES:
+            raise SyntaxError(f"unknown type {ctype}")
+        return col, ctype
+
+    schema = ps.items(column)
     ps.take(")")
     stages = []
-    while ps.at("|"):
-        ps.take("|")
+    while ps.skip("|"):
         stages.append(_parse_stage(ps))
     ps.take(";")
     return CompiledPipeline(name, schema, stages)
+
+
+def _as_type(ps: Parser) -> str | None:
+    """Optional ``as <type>`` suffix → the lowercased type name."""
+    return ps.take_id().lower() if ps.skip_kw("as") else None
+
+
+def _assign(ps: Parser, rhs):
+    """``name = rhs`` → (name, rhs())."""
+    name = ps.take_id()
+    ps.take("=")
+    return name, rhs()
 
 
 def _parse_stage(ps: Parser):
@@ -823,134 +807,47 @@ def _parse_stage(ps: Parser):
     if verb == "where":
         return ("where", ps.expr())
     if verb == "take":
-        return ("take", int(ps.take().text))
+        return ("take", ps.take_int())
     if verb == "top":
-        n = int(ps.take().text)
-        if not ps.at_kw("by"):
-            raise SyntaxError("expected 'by' after top N")
-        ps.take()
+        n = ps.take_int()
+        ps.take_kw("by")
         e = ps.expr()
-        asc = False
-        nulls_first = None
-        if ps.at_kw("asc", "desc"):
-            asc = ps.take().text.lower() == "asc"
-        if ps.at_kw("nulls"):
-            ps.take()
-            nulls_first = ps.take_id().lower() == "first"
+        asc = ps.skip_kw("asc", "desc") == "asc"
+        nulls_first = ps.take_id().lower() == "first" if ps.skip_kw("nulls") else None
         return ("top", (n, e, asc, nulls_first))
     if verb == "project":
-        cols = []
-        while True:
-            cname = ps.take_id()
-            ps.take("=")
-            cols.append((cname, ps.expr()))
-            if ps.at(","):
-                ps.take(",")
-                continue
-            break
-        return ("project", cols)
+        return ("project", ps.items(lambda: _assign(ps, ps.expr)))
     if verb == "project-rename":
-        pairs = []
-        while True:
-            new = ps.take_id()
-            ps.take("=")
-            old = ps.take_id()
-            pairs.append((new, old))
-            if ps.at(","):
-                ps.take(",")
-                continue
-            break
-        return ("project-rename", pairs)
+        return ("project-rename", ps.items(lambda: _assign(ps, ps.take_id)))
     if verb in ("project-remove", "project-keep"):
-        cols = [ps.take_id()]
-        while ps.at(","):
-            ps.take(",")
-            cols.append(ps.take_id())
-        return (verb, cols)
+        return (verb, ps.items(ps.take_id))
     if verb in ("explode", "mv-expand"):
-        col = ps.take_id()
-        cast = None
-        if ps.at_kw("as"):
-            ps.take()
-            cast = ps.take_id().lower()
-        return ("explode", (col, cast))
+        return ("explode", (ps.take_id(), _as_type(ps)))
     if verb == "ignore-error":
         return ("ignore-error", None)
     if verb == "distinct":
-        cols = []
-        if ps.at_kw("by"):
-            ps.take()
-            cols.append(ps.take_id())
-            while ps.at(","):
-                ps.take(",")
-                cols.append(ps.take_id())
-        return ("distinct", cols)
+        return ("distinct", ps.items(ps.take_id) if ps.skip_kw("by") else [])
     if verb == "summarize":
-        aggs = []
-        while True:
-            aname = ps.take_id()
-            ps.take("=")
-            fn_name = ps.take_id()
-            ps.take("(")
-            args = []
-            if not ps.at(")"):
-                args.append(ps.expr())
-                while ps.at(","):
-                    ps.take(",")
-                    args.append(ps.expr())
-            ps.take(")")
-            aggs.append((aname, fn_name, args))
-            if ps.at(","):
-                ps.take(",")
-                continue
-            break
+        aggs = ps.items(lambda: (*_assign(ps, ps.take_id), ps.call_args()))
         keys = []
-        if ps.at_kw("by"):
-            ps.take()
-            while True:
-                kname = ps.take_id()
-                kast = None
-                if ps.at("="):
-                    ps.take("=")
-                    kast = ps.expr()
-                keys.append((kname, kast))
-                if ps.at(","):
-                    ps.take(",")
-                    continue
-                break
+        if ps.skip_kw("by"):
+            keys = ps.items(lambda: (ps.take_id(), ps.expr() if ps.skip("=") else None))
         return ("summarize", (aggs, keys))
     if verb in ("lookup", "join"):
         kind = None
         if verb == "join":
-            if not ps.at_kw("kind"):
-                raise SyntaxError("expected kind= after join")
-            ps.take()
+            ps.take_kw("kind")
             ps.take("=")
             kind = ps.take_id().lower()
-        fields = []
-        while True:
-            a = ps.take_id()
-            dst, src_f = a, a
-            if ps.at("="):
-                ps.take("=")
-                src_f = ps.take_id()
-                dst = a
-            ftype = None
-            if ps.at_kw("as"):
-                ps.take()
-                ftype = ps.take_id().lower()
-            fields.append((dst, src_f, ftype))
-            if ps.at(","):
-                ps.take(",")
-                continue
-            break
-        if not ps.at_kw("from"):
-            raise SyntaxError("expected 'from' in lookup/join")
-        ps.take()
+
+        def lookup_field():
+            dst = ps.take_id()
+            src_f = ps.take_id() if ps.skip("=") else dst
+            return dst, src_f, _as_type(ps)
+
+        fields = ps.items(lookup_field)
+        ps.take_kw("from")
         src_name = ps.take_id()
-        if not ps.at_kw("on"):
-            raise SyntaxError("expected 'on' in lookup/join")
-        ps.take()
-        key_ast = ps.expr()
-        return (verb, (fields, src_name, key_ast, kind))
+        ps.take_kw("on")
+        return (verb, (fields, src_name, ps.expr(), kind))
     raise SyntaxError(f"unknown transformation verb {verb!r}")

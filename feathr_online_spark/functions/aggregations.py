@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from feathr_online_spark.functions import piper as P
+
 
 def _count(*args) -> Column:
     return F.count(F.lit(1))
@@ -33,15 +35,6 @@ def _count_if(cond) -> Column:
 
 def _distinct_count(*cols) -> Column:
     return F.countDistinct(*cols)
-
-
-def _avg(x) -> Column:
-    # piper denominator counts nulls (sum.rs:67-79).  NB: the reference also
-    # TRUNCATES integer-column avg (Long sum / Long count via DivideOperator,
-    # math_op.rs:197); a Column builder can't see input types, so the typed
-    # DSL path (dsl.py summarize) appends .cast("long") — direct callers with
-    # integer columns wanting exact reference parity should do the same.
-    return F.sum(x) / F.count(F.lit(1))
 
 
 def _every(b) -> Column:
@@ -103,8 +96,8 @@ _AGG_REGISTRY: dict[str, object] = {
     "count_if": _count_if,
     "distinct_count": _distinct_count,
     "sum": F.sum,
-    "avg": _avg,
-    "mean": _avg,
+    "avg": P.piper_avg,
+    "mean": P.piper_avg,
     "min": F.min,
     "least": F.min,
     "max": F.max,

@@ -148,7 +148,13 @@ def distance_km(lat1, lng1, lat2, lng2) -> Column:
 def piper_avg(x: ColumnOrName) -> Column:
     """Reference ``avg`` counts null rows in the denominator
     (aggregation/sum.rs:51-92 increments the count unconditionally), unlike
-    Spark ``avg`` which ignores nulls.  sum(x)/count(*) reproduces it."""
+    Spark ``avg`` which ignores nulls.  sum(x)/count(*) reproduces it.
+
+    The reference also TRUNCATES integer-column avg (Long sum / Long count
+    via DivideOperator, math_op.rs:197); a Column builder can't see input
+    types, so the typed DSL path (dsl.py summarize) switches to exact
+    integral ``div`` — direct callers with integer columns wanting exact
+    reference parity should do the same."""
     return F.sum(_col(x)) / F.count(F.lit(1))
 
 

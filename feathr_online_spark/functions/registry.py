@@ -31,18 +31,6 @@ def _c(x) -> Column:
     return x if isinstance(x, Column) else F.lit(x)
 
 
-def _cot(x):  # reference registers cot/csc/sec (function/mod.rs) — Spark has cot since 3.3
-    return F.cot(x) if hasattr(F, "cot") else F.lit(1.0) / F.tan(x)
-
-
-def _csc(x):
-    return F.csc(x) if hasattr(F, "csc") else F.lit(1.0) / F.sin(x)
-
-
-def _sec(x):
-    return F.sec(x) if hasattr(F, "sec") else F.lit(1.0) / F.cos(x)
-
-
 def _log_piper(x, base=None):
     """Reference ``log(x, base)`` is strictly binary with the VALUE first
     (mod.rs:235 binary_fn(f64::log) — Rust's self.log(base) = ln(self)/
@@ -322,7 +310,7 @@ _REGISTRY: dict[str, object] = {
     "abs": F.abs, "acos": F.acos, "acosh": F.acosh, "asin": F.asin, "asinh": F.asinh,
     "atan": F.atan, "atan2": F.atan2, "atanh": F.atanh, "cbrt": F.cbrt,
     "ceil": F.ceil, "ceiling": F.ceil, "cos": F.cos, "cosh": F.cosh,
-    "cot": _cot, "csc": _csc, "sec": _sec, "degrees": F.degrees,
+    "cot": F.cot, "csc": F.csc, "sec": F.sec, "degrees": F.degrees,
     "e": lambda: F.lit(math.e), "pi": lambda: F.lit(math.pi), "tau": lambda: F.lit(math.tau),
     "exp": F.exp, "expm1": F.expm1, "factorial": F.factorial, "floor": F.floor,
     "hypot": F.hypot, "ln": F.log, "log": _log_piper, "log10": F.log10, "log1p": F.log1p,
@@ -348,7 +336,7 @@ _REGISTRY: dict[str, object] = {
     "bit_or": lambda *xs: _bit_fold("bitwiseOR", xs),
     "bit_xor": lambda *xs: _bit_fold("bitwiseXOR", xs),
     "bit_count": F.bit_count, "bit_get": F.bit_get, "getbit": F.getbit,
-    "bit_length": F.bit_length, "bit_not": lambda x: F.bitwise_not(x) if hasattr(F, "bitwise_not") else F.bitwiseNOT(x),
+    "bit_length": F.bit_length, "bit_not": F.bitwise_not,
     "shiftleft": F.shiftleft, "shiftright": F.shiftright,
     "shiftrightunsigned": F.shiftrightunsigned,
     # the reference registers these as VARIADIC SCALAR all/any over the
@@ -373,7 +361,7 @@ _REGISTRY: dict[str, object] = {
     # --- datetime (datetime_functions.rs, timestamp.rs) ---
     "add_months": F.add_months, "current_date": F.current_date,
     "current_timestamp": F.current_timestamp, "current_timezone": F.current_timezone,
-    "now": F.now if hasattr(F, "now") else F.current_timestamp,
+    "now": F.now,
     # reference `date` is TypeConverterFunction{to: DateTime} (mod.rs:138) —
     # piper has ONE temporal type, so date("2024-01-01 10:00") KEEPS the time
     "date": lambda x: _c(x).cast("timestamp"),
@@ -431,7 +419,7 @@ _REGISTRY: dict[str, object] = {
     "double": lambda x: _c(x).cast("double"), "float": lambda x: _c(x).cast("float"),
     "boolean": lambda x: _c(x).cast("boolean"), "string": lambda x: _c(x).cast("string"),
     # --- piper extras (mod.rs:429-435) ---
-    "bucket": P.bucket, "distance": P.distance_km, "uuid": F.uuid if hasattr(F, "uuid") else F.expr("uuid()"),
+    "bucket": P.bucket, "distance": P.distance_km, "uuid": F.uuid,
     "div": P.div,
 }
 

@@ -36,6 +36,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+#: error-as-value convention: a failed cell of column ``c`` is marked by a
+#: non-null message in the companion string column ``ERR_PREFIX + c``
+ERR_PREFIX = "_err_"
+
+
+def error_columns(df: DataFrame) -> list[str]:
+    """The error-marker columns of ``df``, in column order."""
+    return [c for c in df.columns if c.startswith(ERR_PREFIX)]
+
+
 class PipelineError(ValueError):
     """Build-time error (duplicate column, unknown column) — the same class of
     failure the reference raises while building stages (piper/src/piper.rs:265-282)."""
@@ -312,20 +322,20 @@ class Pipeline:
             inputs_ok = F.lit(True)
             for c in inputs:
                 inputs_ok = inputs_ok & F.col(c).isNotNull()
-            exprs[f"_err_{name}"] = F.when(
+            exprs[ERR_PREFIX + name] = F.when(
                 expr.isNull() & inputs_ok, F.lit(f"error evaluating '{name}'")
             ).otherwise(F.lit(None).cast("string"))
         return Pipeline(self.df.withColumns(exprs))
 
     # -- misc ----------------------------------------------------------------
 
-    def ignore_error(self, err_prefix: str = "_err_") -> "Pipeline":
+    def ignore_error(self) -> "Pipeline":
         """Drop rows carrying any error marker.  The reference stores errors
         in cells (SURVEY.md §1.4); our convention is companion ``_err_<col>``
         string columns (null = ok) produced by fallible projections.  This verb
         filters rows where every marker is null and drops the markers —
         matching ignore_error_transformation.rs:39-59."""
-        err_cols = [c for c in self.df.columns if c.startswith(err_prefix)]
+        err_cols = error_columns(self.df)
         if not err_cols:
             return self
         cond = None

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
+from feathr_online_spark.operators.pipeline import ERR_PREFIX, error_columns
+
 # type-class buckets for the Strict legality matrix
 _NUMERIC = {"tinyint", "smallint", "int", "integer", "bigint", "long", "float", "double", "decimal"}
 
@@ -84,19 +86,19 @@ def validated(df: DataFrame, schema: StructType, mode: str = "lenient") -> DataF
         name, dst = field.name, _simple(field.dataType)
         if name not in in_types:
             cols.append(F.lit(None).cast(field.dataType).alias(name))
-            cols.append(F.lit(f"Column {name} is missing in the input data set").alias(f"_err_{name}"))
+            cols.append(F.lit(f"Column {name} is missing in the input data set").alias(ERR_PREFIX + name))
             continue
         src = _simple(in_types[name])
         if src == dst and src != "decimal":
             cols.append(F.col(name))
-            cols.append(F.lit(None).cast("string").alias(f"_err_{name}"))
+            cols.append(F.lit(None).cast("string").alias(ERR_PREFIX + name))
             continue
         if not ok(src, dst):
             cols.append(F.lit(None).cast(field.dataType).alias(name))
             cols.append(
                 F.when(F.col(name).isNotNull(),
                        F.lit(f"Column {name}: cannot {mode}-cast {src} to {dst}"))
-                .alias(f"_err_{name}")
+                .alias(ERR_PREFIX + name)
             )
             continue
         # Column.try_cast (null on failure) regardless of ANSI mode — the
@@ -107,18 +109,18 @@ def validated(df: DataFrame, schema: StructType, mode: str = "lenient") -> DataF
         cols.append(
             F.when(F.col(name).isNotNull() & casted.isNull(),
                    F.lit(f"Column {name}: value failed to convert to {dst}"))
-            .alias(f"_err_{name}")
+            .alias(ERR_PREFIX + name)
         )
     return df.select(*cols)
 
 
-def collect_errors(df: DataFrame, err_prefix: str = "_err_") -> DataFrame:
+def collect_errors(df: DataFrame) -> DataFrame:
     """The reference's error side channel (dataset.rs:238-310 collects per-cell
     errors into ``errors: [{row, column, message}]`` next to the data) as an
     aggregate report: one row per (column, message) with a count — the
     scalable form (per-row error lists don't fit a 10^12-row response).
     """
-    err_cols = [c for c in df.columns if c.startswith(err_prefix)]
+    err_cols = error_columns(df)
     if not err_cols:
         return df.sparkSession.createDataFrame([], "column string, message string, n long")
     # NB a "pre-filter clean rows before the explode" pass was measured and
@@ -129,7 +131,7 @@ def collect_errors(df: DataFrame, err_prefix: str = "_err_") -> DataFrame:
     stacked = df.select(
         F.explode(
             F.array(*[
-                F.struct(F.lit(c[len(err_prefix):]).alias("column"), F.col(c).alias("message"))
+                F.struct(F.lit(c[len(ERR_PREFIX):]).alias("column"), F.col(c).alias("message"))
                 for c in err_cols
             ])
         ).alias("e")

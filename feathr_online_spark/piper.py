@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from feathr_online_spark.dsl import _SPARK_TYPES, CompiledPipeline, parse_pipelines
 from feathr_online_spark.functions.registry import register_udf, unregister_udf
+from feathr_online_spark.operators.pipeline import ERR_PREFIX, error_columns
 from feathr_online_spark.sources.registry import CallableSource, SourceRegistry, load_lookup_conf
 
 
@@ -157,7 +158,7 @@ class Piper:
         # rows are runtime-typed, not JSON text
         df, types = pipe.run_with_types(self.spark, rows_in, self.sources)
         collected = df.collect()
-        err_cols = [c for c in df.columns if c.startswith("_err_")]
+        err_cols = error_columns(df)
         dyn_cols = [c for c in df.columns if types.get(c) == "dynamic"]
         rows, errors = [], []
         for i, r in enumerate(collected):
@@ -165,7 +166,7 @@ class Piper:
             for ec in err_cols:
                 msg = d.pop(ec)
                 if error_report and msg is not None:
-                    errors.append({"row": i, "column": ec[len("_err_"):], "message": msg})
+                    errors.append({"row": i, "column": ec[len(ERR_PREFIX):], "message": msg})
             for dc in dyn_cols:
                 v = d[dc]
                 if isinstance(v, str):

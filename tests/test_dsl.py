@@ -463,3 +463,75 @@ def test_string_literal_args_neither_column_capture_nor_not_iterable(spark):
     assert out.si == "hello"
     assert out.sp == "b"
     assert out.tr == "x"
+
+
+def _stage(line: str) -> str:
+    return f"t(x as int, s as string)\n| {line}\n;"
+
+
+@pytest.mark.parametrize("src", [
+    _stage("top 3 x desc"),                                    # missing by
+    _stage("project y = case when x > 1 1 else 2 end"),        # missing then
+    _stage("project y = case when x > 1 then 1 else 2"),       # missing end
+    _stage("join f from src on x"),                            # missing kind=
+    _stage("lookup f src on x"),                               # missing from
+    _stage("lookup f from src x"),                             # missing on
+    _stage("frobnicate x"),                                    # unknown verb
+    "t(x as blob)\n| where x > 1\n;",                          # unknown type
+    "t(x as int)\n| where x +",                                # expression cut off at EOF
+    "t(x as int)\n| project y = f(1,",                         # unclosed call
+    "t(x as array)\n| project y = x[1",                        # unclosed index
+    "t(x as int)\n| summarize n = count(",                     # unclosed aggregate
+    "t(x as int)\n| where x > 1",                              # missing ;
+    "t(x @ int)\n;",                                           # tokenizer error
+    _stage("take abc"),                                        # non-integer count
+    "t(x as int)\n| take\n;",                                  # missing count
+    _stage("top x by s"),                                      # non-integer top count
+    _stage("take 1.5"),
+])
+def test_parser_rejects_malformed_dsl(src):
+    """Malformed DSL fails at parse time with SyntaxError — never a leaked
+    ValueError from a count, never a silently accepted pipeline."""
+    with pytest.raises(SyntaxError):
+        parse_pipelines(src)
+
+
+_MINUTE_FMT = "%Y-%m-%d %H:%M"
+
+
+def test_timestamp_with_timezone_equals_registry(spark):
+    """The 3-argument (timezone) forms of timestamp/unix_timestamp compile
+    through the one call path and equal the registry functions called
+    directly: Tokyo wall time 03:04 is 18:04 UTC the day before."""
+    from feathr_online_spark.functions.registry import fn
+
+    fmt = _MINUTE_FMT
+    p = parse_pipelines(
+        "t(s as string)\n"
+        f'| project tk = timestamp(s, "{fmt}", "Asia/Tokyo"), u = unix_timestamp(s, "{fmt}", "UTC")\n'
+        ";"
+    )["t"]
+    out = p.run(spark, [{"s": "2024-01-02 03:04"}]).withColumns({
+        "tk_direct": fn("timestamp")(F.col("s"), fmt, "Asia/Tokyo"),
+        "u_direct": fn("unix_timestamp")(F.col("s"), fmt, "UTC"),
+    })
+    minute = "yyyy-MM-dd HH:mm"
+    r = out.select(*[F.date_format(c, minute).alias(c) for c in ("tk", "tk_direct")],
+                   "u", "u_direct").collect()[0]
+    assert r.tk == r.tk_direct == "2024-01-01 18:04"
+    assert r.u == r.u_direct == 1704164640.0
+
+
+def test_timestamp_format_on_dynamic_column(spark):
+    """A dynamic carrier is unwrapped before the format parse, so
+    timestamp/unix_timestamp give the same instant as on a typed column."""
+    fmt = _MINUTE_FMT
+    p = parse_pipelines(
+        "t(s as string, d)\n"
+        f'| project ts = timestamp(s, "{fmt}"), td = timestamp(d, "{fmt}"),\n'
+        f'          us = unix_timestamp(s, "{fmt}"), ud = unix_timestamp(d, "{fmt}")\n'
+        ";"
+    )["t"]
+    r = p.run(spark, [{"s": "2024-01-02 03:04", "d": "2024-01-02 03:04"}]).collect()[0]
+    assert r.td is not None and r.td == r.ts
+    assert r.ud == r.us == 1704164640.0
