@@ -31,33 +31,60 @@ from feathr_online_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from feathr_online_spark.operators.multimodal import extract_features
+from feathr_online_spark.operators.multimodal import extract_features, write_asset_fixture
+from feathr_online_spark.operators.pii import write_pii_fixture
 from feathr_online_spark.operators.pipeline import Pipeline
-from feathr_online_spark.operators.similarity import embedding_topk_pairs, knn_bruteforce
-from feathr_online_spark.operators.text import lang_id
+from feathr_online_spark.operators.similarity import (
+    embedding_topk_pairs,
+    knn_bruteforce,
+    write_embedding_fixture,
+)
+from feathr_online_spark.operators.text import lang_id, write_lang_fixture
 from feathr_online_spark.operators.windows import rolling, sessionize
+from feathr_online_spark.session import RUNTIME_CONF
 
 
 def _prep(spark: SparkSession) -> SparkSession:
     """Make a caller-provided session (the driver creates its own) behave like
-    feathr_online_spark.session.get_spark: UTC timestamps, parquet timestamps
-    as LTZ, Arrow for the pandas paths, ANSI off.  All of these are
-    runtime-settable confs."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.ansi.enabled": "false",
-        # Spark 4.1 streaming-checkpoint checksum writer can deadlock task
-        # commit under many concurrent stateful queries (see session.py) —
-        # the stream_equiv replay needs it off in the driver's session too
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
-    }.items():
+    feathr_online_spark.session.get_spark by applying session.RUNTIME_CONF
+    (all runtime-settable)."""
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
     return spark
+
+
+# Generated inputs that gates read outside sf_dir: name → (path, writer).
+# Every writer goes through datagen.write_parquet_fixture (idempotent,
+# crash-safe); _fixture() ensures one before a query reads it, and
+# oracle_sql() ensures them all, so whether a gate's query or its oracle
+# runs first cannot matter.  The stream_equiv replay fixture is derived
+# per sf_dir by streaming.equiv.run_replay under _replay_dir(sf_dir).
+_FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".fixtures")
+_FIXTURES: dict[str, tuple[str, Callable[[str], str]]] = {
+    "lang": (os.path.join(_FIXTURE_DIR, "lang_docs.parquet"), write_lang_fixture),
+    "multimodal": (os.path.join(_FIXTURE_DIR, "multimodal_assets.parquet"),
+                   lambda p: write_asset_fixture(p, n=96)),
+    "embedding": (os.path.join(_FIXTURE_DIR, "embedding_dups.parquet"),
+                  write_embedding_fixture),
+    # v2: cards carry an exact Luhn check digit (valid iff doc_id%16==0);
+    # the name bump keeps a stale pre-Luhn cached fixture from poisoning
+    # the idempotent write
+    "pii": (os.path.join(_FIXTURE_DIR, "pii_docs_v2.parquet"),
+            lambda p: write_pii_fixture(p, n=240)),
+}
+
+
+def _fixture(name: str) -> str:
+    """Path of generated fixture ``name``, written first if absent."""
+    path, write = _FIXTURES[name]
+    return write(path)
+
+
+def _replay_dir(sf_dir: str) -> str:
+    return os.path.join(_FIXTURE_DIR, "stream_eqv", os.path.basename(os.path.normpath(sf_dir)))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1091,12 +1118,8 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the gate unions the planted multilingual fixture (3 docs for each
     of the 13 languages) — the oracle recomputes every marker list and
     script regex in DuckDB over the same union, pinning all paths."""
-    from feathr_online_spark.operators.text import write_lang_fixture
-
-    write_lang_fixture(_LANG_FIXTURE)
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("text")
-    fix = spark.read.parquet(_LANG_FIXTURE).select("text")
+    fix = spark.read.parquet(_fixture("lang")).select("text")
     return (
         docs.unionByName(fix)
         .select(lang_id("text").alias("lang_pred"))
@@ -1155,16 +1178,12 @@ WITH s AS (
 )"""
 
 
-_LANG_FIXTURE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".fixtures", "lang_docs.parquet"
-)
-
 # the corpus is en/zh-only, so the gate unions the planted multilingual
 # sample docs — every one of the 13 marker lists / script ranges gets a
 # cross-engine-pinned per-language count (doc_id offset keeps ids unique)
 ORACLE_LANG_ID = _duck_lang_ctes(
     "SELECT doc_id, text FROM documents UNION ALL "
-    f"SELECT doc_id + 100000000 AS doc_id, text FROM read_parquet('{_LANG_FIXTURE}')"
+    f"SELECT doc_id + 100000000 AS doc_id, text FROM read_parquet('{_FIXTURES['lang'][0]}')"
 ) + """
 SELECT lang_pred, count(*) AS n FROM p GROUP BY lang_pred
 """
@@ -1521,11 +1540,6 @@ SELECT id, least(id, min(reach)) AS cluster FROM walk GROUP BY id
 """
 
 
-_MULTIMODAL_FIXTURE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".fixtures", "multimodal_assets.parquet"
-)
-
-
 def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """multimodal pipeline under a REAL oracle: deterministic binary assets
     are materialized to a parquet fixture (idempotent pyarrow write — both
@@ -1536,11 +1550,7 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration within 1 ms, video w/h + frame count from the RAWV header).
     DuckDB reproduces n and total_bytes from octet_length(payload) and pins
     meta_ok = true."""
-    from feathr_online_spark.operators.multimodal import write_asset_fixture
-
-    write_asset_fixture(_MULTIMODAL_FIXTURE, n=96)
-    _prep(spark)
-    assets = spark.read.parquet(_MULTIMODAL_FIXTURE)
+    assets = _prep(spark).read.parquet(_fixture("multimodal"))
     feats = extract_features(assets)
     j = feats.join(
         F.broadcast(assets.select("asset_id", "width", "height", "duration_ms")),
@@ -1568,14 +1578,9 @@ ORACLE_MULTIMODAL = f"""
 SELECT kind, count(*) AS n,
        CAST(sum(octet_length(payload)) AS BIGINT) AS total_bytes,
        true AS meta_ok
-FROM read_parquet('{_MULTIMODAL_FIXTURE}')
+FROM read_parquet('{_FIXTURES['multimodal'][0]}')
 GROUP BY kind
 """
-
-
-_EMBEDDING_FIXTURE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".fixtures", "embedding_dups.parquet"
-)
 
 
 def q_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1586,15 +1591,9 @@ def q_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set at cos ≥ 0.99 EXACTLY the planted set, which DuckDB recomputes
     independently.  Output: (n_strong_pairs, recall_ok ≥ 0.9) — at 8 planes
     / multiprobe 2 the expected recall is ≈ 0.999, so the gate has margin."""
-    from feathr_online_spark.operators.similarity import (
-        _cosine_pd,
-        embedding_lsh_pairs,
-        write_embedding_fixture,
-    )
+    from feathr_online_spark.operators.similarity import _cosine_pd, embedding_lsh_pairs
 
-    write_embedding_fixture(_EMBEDDING_FIXTURE)
-    _prep(spark)
-    emb = spark.read.parquet(_EMBEDDING_FIXTURE)
+    emb = _prep(spark).read.parquet(_fixture("embedding"))
     found = embedding_lsh_pairs(emb, threshold=0.99, dim=64).select("a", "b")
     # exact ground-truth leg: vectorized cosine (r6) — the fixture plants
     # dups at cos ≈ 0.999 vs a ≤ 0.6 background, so the 0.99 cut is far
@@ -1622,7 +1621,7 @@ ORACLE_EMBEDDING_LSH = f"""
 WITH u AS (
   SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x*x))) AS nrm
-  FROM read_parquet('{_EMBEDDING_FIXTURE}')
+  FROM read_parquet('{_FIXTURES['embedding'][0]}')
 )
 SELECT count(*) AS n_strong_pairs, true AS recall_ok
 FROM u a JOIN u b ON a.vec_id < b.vec_id
@@ -1690,11 +1689,6 @@ LIMIT 20
 """
 
 
-_STREAM_EQV_ROOT = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".fixtures", "stream_eqv"
-)
-
-
 def q_stream_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming surface gated by BATCH EQUIVALENCE (VERDICT r3 #4): the
     events table is replayed in event-time order across 4 micro-batches
@@ -1710,9 +1704,7 @@ def q_stream_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from feathr_online_spark.streaming.equiv import stream_equivalence_summary
 
     _prep(spark)   # incl. the checkpoint-checksum deadlock workaround
-    fixture = os.path.join(
-        _STREAM_EQV_ROOT, os.path.basename(os.path.normpath(sf_dir)))
-    return stream_equivalence_summary(spark, sf_dir, fixture)
+    return stream_equivalence_summary(spark, sf_dir, _replay_dir(sf_dir))
 
 
 # gap/is_new logic mirrors ORACLE_SESSIONIZE; 'asof' counts the non-purchase
@@ -1748,7 +1740,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     al. 2021 §A1.1), in integer basis points so the sums are BIT-exact
     cross-engine (the quality_features_bp rationale).  All map-side array
     expressions: one corpus pass, no shuffle beyond the tiny groupBy."""
-    from feathr_online_spark.operators.text import repetition_signals_bp, words
+    from feathr_online_spark.operators.text import repetition_flag, repetition_signals_bp, words
 
     # widen: the corpus arrives as ONE scan partition locally and the
     # signals are CPU-dense, byte-light (the dedup _widen rationale)
@@ -1773,10 +1765,10 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.element_at(F.transform(F.array(words(F.col("text"))), _sig_struct), 1).alias("__S"),
     )
-    # the flag derives from the ALREADY-SELECTED signal columns (the same
-    # thresholds as operators.text.is_repetitive, incl. the min-10-words
-    # guard) — recomputing is_repetitive(text) here would evaluate the
-    # expensive top-bigram expression twice per row
+    # the flag applies operators.text.repetition_flag (is_repetitive's rule)
+    # to the ALREADY-SELECTED signal columns — recomputing
+    # is_repetitive(text) here would evaluate the expensive top-bigram
+    # expression twice per row
     sel = bound.select(
         "source",
         F.col("__S.nw").alias("nw"),
@@ -1784,8 +1776,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__S.t2").alias("t2"),
         F.col("__S.d5").alias("d5"),
     )
-    rep = (((F.col("dw") > 5000) | (F.col("t2") > 2000) | (F.col("d5") > 3000))
-           & (F.col("nw") >= 10))
+    rep = repetition_flag(
+        {"dup_word_bp": F.col("dw"), "top2_bp": F.col("t2"), "dup5_bp": F.col("d5")},
+        F.col("nw"))
     return (
         sel.withColumn("rep", rep.cast("long"))
         .groupBy("source")
@@ -1843,14 +1836,6 @@ FROM bp GROUP BY source
 """
 
 
-_PII_FIXTURE = os.path.join(
-    # v2: cards carry an exact Luhn check digit (valid iff doc_id%16==0);
-    # the name bump keeps a stale pre-Luhn cached fixture from poisoning
-    # the idempotent write
-    os.path.dirname(os.path.abspath(__file__)), ".fixtures", "pii_docs_v2.parquet"
-)
-
-
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detection + scrubbing (operators/pii.py) over a deterministic
     planted fixture (the synthetic documents carry no PII): per-kind match
@@ -1858,15 +1843,9 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexes over the same parquet — so pattern semantics are value-checked
     cross-engine — plus clean_ok: after scrub_pii, every detector finds
     ZERO residual matches in every document (bool_and, in-query)."""
-    from feathr_online_spark.operators.pii import (
-        pii_counts,
-        scrub_pii,
-        write_pii_fixture,
-    )
+    from feathr_online_spark.operators.pii import pii_counts, scrub_pii
 
-    write_pii_fixture(_PII_FIXTURE, n=240)
-    _prep(spark)
-    docs = spark.read.parquet(_PII_FIXTURE)
+    docs = _prep(spark).read.parquet(_fixture("pii"))
     c = pii_counts(F.col("text"))
     rc = pii_counts(scrub_pii(F.col("text")))
     clean_row = sum(rc.values(), F.lit(0).cast("long")) == 0
@@ -1895,7 +1874,7 @@ SELECT CAST(sum(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\
        CAST(sum(len(regexp_extract_all(text, '\\(?\\d{{3}}\\)?[-. ]\\d{{3}}[-. ]\\d{{4}}'))) AS BIGINT) AS n_phone,
        CAST(sum(len(regexp_extract_all(text, '\\b\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\b'))) AS BIGINT) AS n_ipv4,
        true AS clean_ok
-FROM read_parquet('{_PII_FIXTURE}')
+FROM read_parquet('{_FIXTURES['pii'][0]}')
 """
 
 
@@ -2069,20 +2048,13 @@ def engine_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return knn_lsh(_queries_of(emb), emb, k=10, n_planes=8, multiprobe=1)
 
     def e_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from feathr_online_spark.operators.similarity import (
-            embedding_lsh_pairs,
-            write_embedding_fixture,
-        )
+        from feathr_online_spark.operators.similarity import embedding_lsh_pairs
 
-        write_embedding_fixture(_EMBEDDING_FIXTURE)
-        emb = spark.read.parquet(_EMBEDDING_FIXTURE)
+        emb = _prep(spark).read.parquet(_fixture("embedding"))
         return embedding_lsh_pairs(emb, threshold=0.99, dim=64)
 
     def e_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from feathr_online_spark.operators.multimodal import write_asset_fixture
-
-        write_asset_fixture(_MULTIMODAL_FIXTURE, n=96)
-        assets = spark.read.parquet(_MULTIMODAL_FIXTURE)
+        assets = _prep(spark).read.parquet(_fixture("multimodal"))
         return extract_features(assets).groupBy("kind").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("n_bytes").alias("total_bytes"),
@@ -2095,9 +2067,7 @@ def engine_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # split can never drift from the gate's plumbing
         from feathr_online_spark.streaming import equiv as eq
 
-        fixture = os.path.join(
-            _STREAM_EQV_ROOT, os.path.basename(os.path.normpath(sf_dir)))
-        state = eq.run_replay(spark, sf_dir, fixture)
+        state = eq.run_replay(spark, sf_dir, _replay_dir(sf_dir))
         handles, ckpt = state["handles"], state["ckpt"]
         try:
             rows = [(surface, eq._sink_df(spark, ref).count())
@@ -2118,16 +2088,10 @@ def engine_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    # the multimodal/embedding oracles read generated parquet fixtures:
-    # ensure they exist whichever side (Spark query / DuckDB oracle) runs
-    # first
-    from feathr_online_spark.operators.multimodal import write_asset_fixture
-    from feathr_online_spark.operators.pii import write_pii_fixture
-    from feathr_online_spark.operators.similarity import write_embedding_fixture
-
-    write_asset_fixture(_MULTIMODAL_FIXTURE, n=96)
-    write_embedding_fixture(_EMBEDDING_FIXTURE)
-    write_pii_fixture(_PII_FIXTURE, n=240)
+    # some oracles read generated fixtures: ensure them all, whichever side
+    # (Spark query / DuckDB oracle) runs first
+    for name in _FIXTURES:
+        _fixture(name)
     return {
         "asof_purchase": ORACLE_ASOF_PURCHASE,
         "where_project": ORACLE_WHERE_PROJECT,

@@ -23,7 +23,9 @@ tests and the local bench (no external data).
 
 from __future__ import annotations
 
+import itertools
 import os
+import tempfile
 
 import numpy as np
 import pyarrow as pa
@@ -36,6 +38,10 @@ VOCAB = 50257
 N_ENTITIES_PER_1K = 40  # ~40 distinct entities per 1000 rows
 BASE_EPOCH = 1_704_067_200  # 2024-01-01 00:00:00 UTC
 F_VEC_DIM = 8
+# 64k-row groups: a single-row-group file collapses Spark's scan to one task
+# regardless of spark.sql.files.maxPartitionBytes (splits can't cross
+# row-group boundaries) — this keeps the scan parallel.
+ROW_GROUP_ROWS = 65_536
 
 
 def gen_sequences(n_rows: int, seed: int = SEED, hot_frac: float | None = None,
@@ -103,25 +109,30 @@ def gen_features(n_rows: int, n_entities: int, seed: int = SEED + 1) -> pa.Table
     )
 
 
-def write_parquet_fixture(path: str, build_table) -> str:
-    """Shared idempotent-atomic single-file fixture writer: skip if ``path``
-    exists, else materialize ``build_table()`` (a pyarrow Table) through a
-    mkstemp temp + os.replace — safe against concurrent writers (each gets
-    its own temp; the loser's rename just overwrites identical deterministic
-    content).  Used by the multimodal asset and embedding-dup fixtures."""
-    import tempfile
-
+def write_parquet_fixture(path: str, build_tables) -> str:
+    """The one writer of generated fixtures; a no-op if ``path`` exists.
+    Streams the pyarrow Tables ``build_tables()`` yields into a hidden temp
+    file beside ``path`` (leading ``.``, no ``.parquet`` suffix: Spark and
+    DuckDB globs skip it) and renames it into place; any exception, even
+    KeyboardInterrupt, deletes the temp, so an interrupted write leaves no
+    truncated fixture behind.  Concurrent writers each get their own temp."""
     if os.path.exists(path):
         return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(suffix=".parquet", dir=os.path.dirname(path))
+    out_dir, name = os.path.split(path)
+    os.makedirs(out_dir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(prefix=f".{name}.", suffix=".tmp", dir=out_dir)
     os.close(fd)
     try:
-        pq.write_table(build_table(), tmp)
+        tables = iter(build_tables())
+        first = next(tables)
+        with pq.ParquetWriter(tmp, first.schema) as writer:
+            for t in itertools.chain([first], tables):
+                writer.write_table(t, row_group_size=ROW_GROUP_ROWS)
+        os.chmod(tmp, 0o644)   # mkstemp's 0600 would hide the fixture from other users
         os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return path
 
 
@@ -129,51 +140,21 @@ def write_fixture(out_dir: str, n_seq: int = 10_000, n_feat: int | None = None,
                   hot_frac: float | None = None) -> dict[str, str]:
     """Write sequences/features parquet under ``out_dir``; returns paths.
     Idempotent for a given (out_dir, sizes, hot_frac)."""
-    os.makedirs(out_dir, exist_ok=True)
     n_feat = n_feat if n_feat is not None else max(n_seq // 2, 8)
     tag = f"_{n_seq}" + (f"_hot{int(hot_frac * 100)}" if hot_frac is not None else "")
     seq_path = os.path.join(out_dir, f"sequences{tag}.parquet")
     feat_path = os.path.join(out_dir, f"features_{n_seq}.parquet")
     n_entities = max(n_seq * N_ENTITIES_PER_1K // 1000, 4)
-    # 64k-row groups: a single-row-group file collapses Spark's scan to one
-    # task regardless of spark.sql.files.maxPartitionBytes (splits can't cross
-    # row-group boundaries) — this keeps the scan parallel.
     # beyond ~4M rows the flattened token array exceeds Arrow's 32-bit list
     # offsets (~2^31 elements) and a single-shot table also costs tens of GB
-    # of RAM — stream 2M-row chunks through one ParquetWriter instead, with
-    # the doc/entity id spaces pinned to the GLOBAL size so the Zipf shape
-    # matches single-shot generation
+    # of RAM — generate 2M-row chunks, with the doc/entity id spaces pinned
+    # to the GLOBAL size so the Zipf shape matches single-shot generation
+    # (chunk 0 of a fixture that fits in one chunk IS the single-shot table)
     chunk = 2_000_000
-    if not os.path.exists(seq_path):
-        if n_seq <= chunk:
-            pq.write_table(gen_sequences(n_seq, hot_frac=hot_frac), seq_path, row_group_size=65536)
-        else:
-            import tempfile
-
-            # mkstemp, not a fixed '.tmp' name: two concurrent writers with
-            # a shared temp path would interleave into one file and publish
-            # a corrupt parquet via os.replace
-            fd, tmp = tempfile.mkstemp(suffix=".parquet.tmp", dir=out_dir)
-            os.close(fd)
-            writer = None
-            try:
-                for ci, start in enumerate(range(0, n_seq, chunk)):
-                    t = gen_sequences(
-                        min(chunk, n_seq - start), seed=SEED + ci, hot_frac=hot_frac,
-                        n_docs=max(n_seq // 4, 1), n_entities=n_entities,
-                    )
-                    if writer is None:
-                        writer = pq.ParquetWriter(tmp, t.schema)
-                    writer.write_table(t, row_group_size=65536)
-                if writer is not None:
-                    writer.close()
-                    writer = None
-                os.replace(tmp, seq_path)
-            finally:
-                if writer is not None:
-                    writer.close()
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
-    if not os.path.exists(feat_path):
-        pq.write_table(gen_features(n_feat, n_entities), feat_path, row_group_size=65536)
+    write_parquet_fixture(seq_path, lambda: (
+        gen_sequences(min(chunk, n_seq - start), seed=SEED + ci, hot_frac=hot_frac,
+                      n_docs=max(n_seq // 4, 1), n_entities=n_entities)
+        for ci, start in enumerate(range(0, n_seq, chunk))
+    ))
+    write_parquet_fixture(feat_path, lambda: [gen_features(n_feat, n_entities)])
     return {"sequences": seq_path, "features": feat_path}

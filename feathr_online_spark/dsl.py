@@ -519,6 +519,10 @@ class ExprCompiler:
             for pos, x in enumerate(ast[2]):
                 if x[0] == "str":
                     args.append(x[1] if pos in native_str else F.lit(x[1]))
+                elif pos in native_str and name.lower() in ("timestamp", "unix_timestamp",
+                                                             "to_unix_timestamp"):
+                    # the strftime format is translated at plan build
+                    raise SyntaxError(f"{name}: the format must be a string literal")
                 elif x[0] == "num":
                     txt = x[1]
                     args.append(float(txt) if "." in txt else int(txt, 0))

@@ -249,7 +249,7 @@ def write_asset_fixture(path: str, n: int = 96, seed: int = 42) -> str:
         import pyarrow as pa
 
         cols = list(zip(*synth_asset_rows(n, seed)))
-        return pa.table(
+        yield pa.table(
             {
                 "asset_id": pa.array(cols[0], pa.int64()),
                 "kind": pa.array(cols[1], pa.string()),

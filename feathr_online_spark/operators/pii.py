@@ -21,8 +21,6 @@ SSNs, phones, IPv4 last.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -140,17 +138,15 @@ def _planted_card(i: int) -> str:
 
 
 def write_pii_fixture(path: str, n: int = 240) -> str:
-    """Idempotent pyarrow write of ``n`` docs with deterministically planted
+    """Parquet fixture of ``n`` docs with deterministically planted
     PII: doc i gets an email iff i%3==0, a phone iff i%4==0, an IPv4 iff
     i%5==0, an SSN iff i%6==0, a card iff i%8==0 (Luhn-valid iff i%16==0,
     see ``_planted_card``) — so expected counts are exact integer functions
     of ``n`` and the gate's sums are predictable."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    if os.path.exists(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    from feathr_online_spark.datagen import write_parquet_fixture
+
     rows = []
     for i in range(n):
         parts = [_FILLER[j % len(_FILLER)] for j in range(i % 7 + 5)]
@@ -167,5 +163,4 @@ def write_pii_fixture(path: str, n: int = 240) -> str:
         rows.append({"doc_id": i, "text": " ".join(parts)})
     tbl = pa.Table.from_pylist(rows, schema=pa.schema(
         [pa.field("doc_id", pa.int64()), pa.field("text", pa.string())]))
-    pq.write_table(tbl, path)
-    return path
+    return write_parquet_fixture(path, lambda: [tbl])

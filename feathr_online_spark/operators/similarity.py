@@ -687,6 +687,6 @@ def write_embedding_fixture(
         emb = pa.FixedSizeListArray.from_arrays(pa.array(vecs.ravel()), dim).cast(
             pa.list_(pa.float32())
         )
-        return pa.table({"vec_id": pa.array(ids), "embedding": emb})
+        yield pa.table({"vec_id": pa.array(ids), "embedding": emb})
 
     return write_parquet_fixture(path, build)

@@ -50,9 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
-from feathr_online_spark.operators.windows import gap_micros
-
-_FNS = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max, "count": F.count, "stddev": F.stddev}
+from feathr_online_spark.operators.windows import ROLLING_FNS, gap_micros
 
 
 def _bkt(ts_col: str, bucket_seconds: int) -> Column:
@@ -260,7 +258,7 @@ def _pit_core(
         else:
             frame = Window.partitionBy(on, "__bkt").orderBy("__us").rangeBetween(
                 -range_seconds * 1_000_000, 0 if include_current else -1)
-        kept = kept.withColumns({name: _FNS[fn](c).over(frame) for name, (c, fn) in aggs.items()})
+        kept = kept.withColumns({name: ROLLING_FNS[fn](c).over(frame) for name, (c, fn) in aggs.items()})
 
     def out(c: str) -> Column:
         if c in ffill_cols:

@@ -8,6 +8,8 @@ direct ANSI-SQL equivalent so the DuckDB oracle can replay it.
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -240,26 +242,32 @@ def repetition_signals_bp(text: ColumnOrName | None,
     }
 
 
-def is_repetitive(text: ColumnOrName,
-                  max_dup_word_bp: int = 5000,
-                  max_top2_bp: int = 2000,
-                  max_dup5_bp: int = 3000,
-                  min_words: int = 10) -> Column:
-    """Boolean repetition filter with Gopher-shaped default thresholds
-    (tuned per-corpus in practice): true when ANY signal exceeds its cap.
+def repetition_flag(signals: Mapping[str, Column], n_words: Column,
+                    max_dup_word_bp: int = 5000,
+                    max_top2_bp: int = 2000,
+                    max_dup5_bp: int = 3000,
+                    min_words: int = 10) -> Column:
+    """The repetition rule over already-computed ``repetition_signals_bp``
+    columns and a word count, with Gopher-shaped default thresholds (tuned
+    per-corpus in practice): true when ANY signal exceeds its cap.
 
     ``min_words``: documents shorter than this are NEVER flagged — the
     fractions are meaningless at tiny n (a 6-word doc with zero repetition
     has top2_bp = floor(2·10000/6) = 3333 purely from its length; Gopher
     likewise applies its repetition filters only above a minimum length).
     Set 0 to disable the guard."""
-    s = repetition_signals_bp(text)
-    flag = ((s["dup_word_bp"] > max_dup_word_bp)
-            | (s["top2_bp"] > max_top2_bp)
-            | (s["dup5_bp"] > max_dup5_bp))
+    flag = ((signals["dup_word_bp"] > max_dup_word_bp)
+            | (signals["top2_bp"] > max_top2_bp)
+            | (signals["dup5_bp"] > max_dup5_bp))
     if min_words > 0:
-        flag = flag & (F.size(words(text)) >= min_words)
+        flag = flag & (n_words >= min_words)
     return flag
+
+
+def is_repetitive(text: ColumnOrName, **thresholds: int) -> Column:
+    """Boolean repetition filter on ``text``: ``repetition_flag`` (which
+    takes the ``thresholds`` keywords) over its signals and word count."""
+    return repetition_flag(repetition_signals_bp(text), F.size(words(text)), **thresholds)
 
 
 def quality_score_bp(text: ColumnOrName,
@@ -412,17 +420,13 @@ _LANG_SAMPLES: dict[str, list[str]] = {
 
 
 def write_lang_fixture(path: str) -> str:
-    """Idempotent pyarrow write of the multilingual sample docs
-    (``_LANG_SAMPLES``): columns (doc_id, lang_true, text), doc_id dense in
-    sample order — deterministic, no randomness."""
-    import os
-
+    """The multilingual sample docs (``_LANG_SAMPLES``) as a parquet fixture:
+    columns (doc_id, lang_true, text), doc_id dense in sample order —
+    deterministic, no randomness."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    if os.path.exists(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    from feathr_online_spark.datagen import write_parquet_fixture
+
     rows = []
     for lang in sorted(_LANG_SAMPLES):
         for s in _LANG_SAMPLES[lang]:
@@ -430,8 +434,7 @@ def write_lang_fixture(path: str) -> str:
     tbl = pa.Table.from_pylist(rows, schema=pa.schema(
         [pa.field("doc_id", pa.int64()), pa.field("lang_true", pa.string()),
          pa.field("text", pa.string())]))
-    pq.write_table(tbl, path)
-    return path
+    return write_parquet_fixture(path, lambda: [tbl])
 
 
 # ---------------------------------------------------------------------------

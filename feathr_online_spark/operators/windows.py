@@ -23,6 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
 
+# rolling aggregate name → function, for ``rolling`` and skew.py's bucketed core
+ROLLING_FNS = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
+               "count": F.count, "stddev": F.stddev}
+
+
 def entity_window(on: str = "entity", ts: str = "event_time") -> WindowSpec:
     return Window.partitionBy(on).orderBy(ts)
 
@@ -76,11 +81,9 @@ def rolling(
             .orderBy(F.unix_micros(F.col(ts)))
             .rangeBetween(-range_seconds * 1_000_000, 0 if include_current else -1)
         )
-    fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
-           "count": F.count, "stddev": F.stddev}
     out = {}
     for name, (col, fn) in aggs.items():
-        out[name] = fns[fn](col).over(w)
+        out[name] = ROLLING_FNS[fn](col).over(w)
     return df.withColumns(out)
 
 

@@ -14,16 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Configs that matter at 100 TB and cost nothing at test scale.  On a real
-# cluster these are spark-submit --conf flags; the helper bakes them in so
-# local tests run the same plan shapes (AQE, broadcast thresholds) the
-# production job would.
-ENGINE_CONF: dict[str, str] = {
-    # Runtime re-planning: coalesce tiny post-shuffle partitions, split skewed
-    # ones, and demote sort-merge to broadcast when a side turns out small.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
+# The engine's session policy that can be set at runtime: get_spark bakes it
+# in, and __spark_entry__._prep applies it to a caller-provided session.
+RUNTIME_CONF: dict[str, str] = {
     # Arrow transfer for every pandas UDF / toPandas boundary.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic comparisons against the UTC-naive DuckDB oracle.
@@ -43,6 +36,19 @@ ENGINE_CONF: dict[str, str] = {
     # Checkpoint integrity is irrelevant for this engine's ephemeral local
     # checkpoints; a real deployment can re-enable per-job.
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+}
+
+# Configs that matter at 100 TB and cost nothing at test scale.  On a real
+# cluster these are spark-submit --conf flags; the helper bakes them in so
+# local tests run the same plan shapes (AQE, broadcast thresholds) the
+# production job would.
+ENGINE_CONF: dict[str, str] = {
+    # Runtime re-planning: coalesce tiny post-shuffle partitions, split skewed
+    # ones, and demote sort-merge to broadcast when a side turns out small.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    **RUNTIME_CONF,
 }
 
 

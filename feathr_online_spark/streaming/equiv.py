@@ -73,12 +73,13 @@ def write_replay_fixture(sf_dir: str, out_dir: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    n_files = 2
+    from feathr_online_spark.datagen import write_parquet_fixture
+
+    names = [f"part-{i:02d}.parquet" for i in range(2)]
     if os.path.isdir(out_dir):
-        if len(os.listdir(out_dir)) == n_files:
+        if sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet")) == names:
             return out_dir
-        shutil.rmtree(out_dir)   # stale layout from an older fixture shape
-    os.makedirs(out_dir, exist_ok=True)
+        shutil.rmtree(out_dir)   # stale or partial layout
     t = pq.read_table(os.path.join(sf_dir, "events.parquet")).to_pandas()
     df = t.rename(columns={"user_id": "entity", "ts": "event_time"})[
         ["entity", "event_time", "event_id", "value"]
@@ -109,9 +110,9 @@ def write_replay_fixture(sf_dir: str, out_dir: str) -> str:
             "diverge on that boundary; regenerate or change GAP_SECONDS")
     schema = pa.Schema.from_pandas(slices[0], preserve_index=False)
     base_mtime = 1_600_000_000
-    for i, part in enumerate(slices + [dups]):
-        p = os.path.join(out_dir, f"part-{i:02d}.parquet")
-        pq.write_table(pa.Table.from_pandas(part, schema=schema, preserve_index=False), p)
+    for i, (name, part) in enumerate(zip(names, slices + [dups])):
+        tbl = pa.Table.from_pandas(part, schema=schema, preserve_index=False)
+        p = write_parquet_fixture(os.path.join(out_dir, name), lambda: [tbl])
         os.utime(p, (base_mtime + 10 * i, base_mtime + 10 * i))
     return out_dir
 

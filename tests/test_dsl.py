@@ -535,3 +535,12 @@ def test_timestamp_format_on_dynamic_column(spark):
     r = p.run(spark, [{"s": "2024-01-02 03:04", "d": "2024-01-02 03:04"}]).collect()[0]
     assert r.td is not None and r.td == r.ts
     assert r.ud == r.us == 1704164640.0
+
+
+@pytest.mark.parametrize("fn", ["timestamp", "unix_timestamp", "to_unix_timestamp"])
+def test_timestamp_format_must_be_a_string_literal(spark, fn):
+    """The strftime format is translated to a Java pattern at plan build, so
+    a column format is a compile-time SyntaxError."""
+    p = parse_pipelines(f"t(s as string, f as string)\n| project y = {fn}(s, f)\n;")["t"]
+    with pytest.raises(SyntaxError, match="string literal"):
+        p.run(spark, [{"s": "2024-01-02 03:04", "f": _MINUTE_FMT}])

@@ -27,3 +27,23 @@ def test_oracle_whitespace_classes_include_vertical_tab():
     bare = {name: sql for name, sql in entry.oracle_sql().items()
             if re.search(r"\\s(?!\\v)", sql)}
     assert not bare, sorted(bare)
+
+
+def test_oracle_sql_ensures_every_fixture_it_reads(tmp_path, monkeypatch):
+    """A copy of the entry module beside an empty ``.fixtures/``: after
+    ``oracle_sql()`` every ``read_parquet`` path in its SQL exists."""
+    import importlib.util
+    import os
+    import shutil
+    import sys
+
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    copy = tmp_path / "__spark_entry__.py"
+    shutil.copy(entry.__file__, copy)
+    spec = importlib.util.spec_from_file_location("entry_copy", copy)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    paths = {p for sql in mod.oracle_sql().values()
+             for p in re.findall(r"read_parquet\('([^']+)'\)", sql)}
+    assert paths and all(p.startswith(str(tmp_path / ".fixtures")) for p in paths)
+    assert not [p for p in paths if not os.path.exists(p)]

@@ -5,7 +5,9 @@ SparkSession and assert nothing accumulates between passes —
   cached across calls, and the bound below allows one frame of slack),
 - temp views (streaming memory sinks must be dropped),
 - active streaming queries (replays must stop their queries),
-- checkpoint temp dirs under /tmp (stream_eqv_ckpt_* must be removed).
+- checkpoint temp dirs under /tmp (stream_eqv_ckpt_* must be removed),
+- fixture temp files (``.fixtures/**/.*``: the fixture writer must rename
+  or delete every temp file it makes).
 
 This is the holistic check behind the r4/r5 cache-leak ADVICE fixes: a
 bench/driver process runs every gate several times in one JVM, and any
@@ -22,7 +24,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def snapshot(spark) -> dict:
@@ -32,6 +35,8 @@ def snapshot(spark) -> dict:
         "temp_views": len(spark.catalog.listTables()),
         "active_streams": len(spark.streams.active),
         "stream_ckpt_dirs": len(glob.glob("/tmp/stream_eqv_ckpt_*")),
+        "fixture_tmp_files": len(glob.glob(os.path.join(REPO, ".fixtures", "**", ".*"),
+                                           recursive=True)),
     }
 
 
@@ -63,12 +68,14 @@ def main() -> None:
     leaks = {k: {"after_pass_1": first[k], "after_pass_n": last[k]}
              for k in first if last[k] > first[k]}
     # absolute bounds on this session's additions: at most one persisted
-    # frame; zero live streams / leftover views / new checkpoint dirs
+    # frame; zero live streams / leftover views / new checkpoint dirs or
+    # fixture temp files
     bounds_ok = (
         last["persistent_rdds"] - base["persistent_rdds"] <= 1
         and last["active_streams"] == 0
         and last["temp_views"] <= base["temp_views"]
         and last["stream_ckpt_dirs"] <= base["stream_ckpt_dirs"]
+        and last["fixture_tmp_files"] <= base["fixture_tmp_files"]
     )
     print(json.dumps({"passes": passes, "sf": sf_dir, "baseline": base,
                       "after_pass_1": first, "after_pass_n": last,
