@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
@@ -59,13 +59,8 @@ def asof_join(
     attached feature row whose payload happens to be all null — pass it to
     ``leakage_check(matched_col=...)`` to close that blind spot.
     """
-    payload = _payload_cols(features, on, right_ts)
-    if not payload:
-        raise ValueError("asof_join: features must have at least one payload "
-                         f"column besides ({on}, {right_ts})")
-    overlap = set(payload) & set(events.columns)
-    if overlap:
-        raise ValueError(f"asof_join: feature columns collide with event columns: {sorted(overlap)}")
+    payload, (feat_tag, event_tag), tiebreak = asof_contract(
+        features, on, right_ts, events, strict, "asof_join")
     # A feature row with a NULL timestamp has no defined position on the
     # timeline and can never be attached without risking leakage — drop it
     # (the union sort would otherwise treat it as -inf).
@@ -76,11 +71,6 @@ def asof_join(
         raise ValueError(f"asof_join: match_indicator {match_indicator!r} "
                          f"collides with an existing column")
     event_cols = [c for c in events.columns if c not in (on, left_ts)]
-
-    # Tag order encodes the leakage rule: at equal ts, events (tag 0) sort
-    # before features (tag 1) so a feature at exactly the event time is not yet
-    # visible to the running last() — strict '<'.  Non-strict flips the tag.
-    feat_tag, event_tag = (1, 0) if strict else (0, 1)
 
     # WHOLE-ROW attach: the payload travels as ONE struct so a null field in
     # the most recent qualifying feature row stays null in the output (per-
@@ -100,8 +90,7 @@ def asof_join(
         F.col(on),
         F.col(right_ts).alias("__ts"),
         F.lit(feat_tag).alias("__tag"),
-        # deterministic winner among same-(entity, ts) feature rows
-        F.xxhash64(*[F.col(c) for c in payload]).alias("__tb"),
+        tiebreak.alias("__tb"),
         *[F.lit(None).cast(events.schema[c].dataType).alias(c) for c in event_cols],
         F.struct(*[F.col(c) for c in payload]).alias("__pl"),
     )
@@ -131,8 +120,25 @@ def asof_join(
     )
 
 
-def _payload_cols(features: DataFrame, on: str, right_ts: str) -> list[str]:
-    return [c for c in features.columns if c not in (on, right_ts)]
+def asof_contract(features: DataFrame, on: str, right_ts: str, events: DataFrame | None = None,
+                  strict: bool = True, caller: str = "asof_join") -> tuple[list[str], tuple[int, int], Column]:
+    """The input contract every as-of strategy shares: ``(payload,
+    (feature_tag, event_tag), tiebreak)``.  The payload is the feature
+    columns besides ``on`` and ``right_ts``; there must be one, and none may
+    share an ``events`` column's name (else a ValueError naming ``caller``).
+    The tags encode the leakage rule: at equal ts, events (tag 0) sort
+    before features (tag 1), so a feature at exactly the event time is not
+    yet visible — strict '<'; non-strict flips them.  Among feature rows
+    sharing (entity, ts) the greatest ``tiebreak`` (xxhash64 of the payload)
+    wins, so results do not depend on input order."""
+    payload = [c for c in features.columns if c not in (on, right_ts)]
+    if not payload:
+        raise ValueError(f"{caller}: features must have at least one payload "
+                         f"column besides ({on}, {right_ts})")
+    overlap = set(payload) & set(events.columns if events is not None else ())
+    if overlap:
+        raise ValueError(f"{caller}: feature columns collide with event columns: {sorted(overlap)}")
+    return payload, ((1, 0) if strict else (0, 1)), F.xxhash64(*payload)
 
 
 def leakage_check(
@@ -155,7 +161,7 @@ def leakage_check(
     row whose payload columns are ALL null is indistinguishable from a miss
     and goes unchecked.  Pass the indicator to close it."""
     if match_cols is None:
-        match_cols = _payload_cols(features, on, right_ts)
+        match_cols = asof_contract(features, on, right_ts, caller="leakage_check")[0]
     match_cols = list(match_cols)
     if matched_col is not None and matched_col in match_cols:
         match_cols.remove(matched_col)

@@ -206,7 +206,6 @@ class Pipeline:
         key: str,
         fields: Mapping[str, str] | list[str],
         tiebreak: str | None = None,
-        broadcast_hint: bool = True,
         persist_probe: bool = False,
     ) -> "Pipeline":
         """1:1 enrich: left join keeping exactly one source row per key.
@@ -218,9 +217,8 @@ class Pipeline:
         Missing keys null-fill (left-outer), matching
         lookup_transformation.rs:218-231.
 
-        The dedup is a per-key min aggregation (cheap, combinable) rather than
-        a row_number window when possible; the dimension is broadcast by
-        default — a lookup source is small by construction in the reference
+        The dedup is a row_number window per key; the dimension is always
+        broadcast — a lookup source is small by construction in the reference
         (loaded wholesale into memory, local_store/mod.rs:70-168).
 
         ``source`` may also be a CallableSource (the Python lookup-function
@@ -231,21 +229,9 @@ class Pipeline:
         upstream is never computed twice; off by default — the engine never
         silently caches data it cannot size.
         """
-        base, source = self._materialize_source(source, on, persist_probe)
-        if isinstance(fields, list):
-            fields = {f: f for f in fields}
         order = F.col(tiebreak) if tiebreak else F.col(key)
-        w = Window.partitionBy(key).orderBy(order)
-        dim = (
-            source.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(F.col(key).alias("__lk_key"), *[F.col(src).alias(dst) for dst, src in fields.items()])
-        )
-        if broadcast_hint:
-            dim = F.broadcast(dim)
-        key_expr = _as_column(on)
-        joined = base.join(dim, key_expr == F.col("__lk_key"), "left").drop("__lk_key")
-        return Pipeline(joined)
+        return self._enrich(source, on, key, fields, "left", broadcast_hint=True,
+                            persist_probe=persist_probe, first_by=order)
 
     def join(
         self,
@@ -264,9 +250,20 @@ class Pipeline:
         how = {"left-inner": "inner", "left-outer": "left"}.get(kind)
         if how is None:
             raise PipelineError(f"join: unknown kind '{kind}'")
+        return self._enrich(source, on, key, fields, how, broadcast_hint, persist_probe)
+
+    def _enrich(self, source, on: Column | str, key: str, fields: Mapping[str, str] | list[str],
+                how: str, broadcast_hint: bool, persist_probe: bool,
+                first_by: Column | None = None) -> "Pipeline":
+        """The body of lookup and join: the ``fields`` of ``source`` (the
+        first row per ``key`` by ``first_by``, if given) joined ``how`` on
+        ``on == key``, the key itself dropped."""
         base, source = self._materialize_source(source, on, persist_probe)
         if isinstance(fields, list):
             fields = {f: f for f in fields}
+        if first_by is not None:
+            w = Window.partitionBy(key).orderBy(first_by)
+            source = source.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
         dim = source.select(
             F.col(key).alias("__lk_key"), *[F.col(src).alias(dst) for dst, src in fields.items()]
         )

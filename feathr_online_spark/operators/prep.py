@@ -1,7 +1,8 @@
 """End-to-end training-corpus preparation: the composition every LLM data
 pipeline runs before tokenization — language filter → quality threshold →
-exact-dedup survivor selection → (optionally) near-dup survivor selection and
-benchmark decontamination.
+exact-dedup survivor selection → (optionally) near-dup survivor selection.
+Benchmark decontamination is a separate step a caller runs on the result
+(operators.dedup.decontaminate).
 
 Each stage is one of the already-gated primitives (operators/text.py,
 operators/dedup.py); this module owns the COMPOSITION so the whole prep is
@@ -16,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feathr_online_spark.operators.dedup import decontaminate, dedup_survivors
+from feathr_online_spark.operators.dedup import dedup_survivors
 from feathr_online_spark.operators.text import lang_id, quality_score_bp
 
 
@@ -26,14 +27,13 @@ def prepare_corpus(
     id_col: str,
     langs: tuple[str, ...] = ("en",),
     min_quality_bp: int = 0,
-    evalset: DataFrame | None = None,
     near_dup_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Surviving documents with their (lang_pred, quality_bp) annotations.
 
     Stage order is deliberate: map-side predicates (language, quality) first,
     exact dedup second (shuffle only the keep-set's fingerprints), then the
-    optional near-dup survivor anti-join and eval-set decontamination.
+    optional near-dup survivor anti-join.
 
     r6 shape — decide on small rows, annotate survivors only: the decision
     pass computes (id, lang, quality, fingerprint) once over the corpus,
@@ -78,6 +78,4 @@ def prepare_corpus(
     kept = df.join(keep, id_col, "left_semi").withColumns(ann)
     if near_dup_pairs is not None:
         kept = dedup_survivors(kept, near_dup_pairs, id_col)
-    if evalset is not None:
-        kept = decontaminate(kept, evalset, text_col, id_col)
     return kept

@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
+from feathr_online_spark.operators.asof import asof_contract
 from feathr_online_spark.operators.windows import ROLLING_FNS, gap_micros
 
 
@@ -114,11 +115,11 @@ def _pit_core(
     payload columns.  A rows frame ends before the row; ``include_current``
     applies to the range frame only."""
     event_cols = [c for c in events.columns if c not in (on, left_ts)]
-    payload = [] if features is None else [c for c in features.columns if c not in (on, right_ts)]
-    if features is not None and not payload:
-        raise ValueError(f"bucketed as-of: features need a payload column besides ({on}, {right_ts})")
-    if set(payload) & set(events.columns):
-        raise ValueError(f"bucketed as-of: column collision {sorted(set(payload) & set(events.columns))}")
+    if features is None:   # the window-only paths: events alone, tagged 0
+        payload, (feat_tag, ev_tag), tiebreak = [], (1, 0), None
+    else:
+        payload, (feat_tag, ev_tag), tiebreak = asof_contract(
+            features, on, right_ts, events, strict, "bucketed as-of")
     aggs = aggs or {}
     if aggs:
         if (rows is None) == (range_seconds is None):
@@ -127,7 +128,6 @@ def _pit_core(
             raise ValueError("bucketed rolling: range_seconds must be ≤ bucket_seconds (single-hop context)")
         if any(c not in event_cols for c, _ in aggs.values()):
             raise ValueError("bucketed rolling aggregates event columns only")
-    feat_tag, ev_tag = (1, 0) if strict else (0, 1)
     pf = [c for c in ffill_cols if c in payload]        # payload columns to fill
     agg_cols = list(dict.fromkeys(c for c, _ in aggs.values()))
     carry_tag = -1   # a bucket's carry row sorts first: (null µs, -1) precedes every real row
@@ -143,7 +143,7 @@ def _pit_core(
         # null-ts feature rows have no place on the timeline: asof_join drops them too
         ft = features.filter(F.col(right_ts).isNotNull())
         # whole-row payload struct: the winning feature ROW attaches as-is, nulls preserved
-        base = base.unionByName(tagged(ft, right_ts, feat_tag, F.xxhash64(*payload),
+        base = base.unionByName(tagged(ft, right_ts, feat_tag, tiebreak,
                                        [F.struct(*payload).alias("__pl")]), allowMissingColumns=True)
     is_ev = (F.col("__tag") == ev_tag) & (F.col("__ctx") == 0)
     is_feat = F.col("__tag") == feat_tag

@@ -59,7 +59,7 @@ class Piper:
         lookups=None,
         functions: dict | None = None,
         spark: SparkSession | None = None,
-        max_process_rows: int | None = None,
+        max_process_rows: int = 100_000,
     ):
         self.max_process_rows = max_process_rows
         if spark is None:
@@ -123,27 +123,24 @@ class Piper:
 
     # -- processing -----------------------------------------------------------
 
-    #: process() collects every output row to the driver — correct for the
-    #: reference's request/response API over small row sets, a driver OOM
-    #: waiting to happen for bulk data.  Raise above this many input rows
-    #: (override per-instance via ``max_process_rows=``).
-    MAX_PROCESS_ROWS = 100_000
-
     def process(self, pipeline_name: str, data, error_report: bool = True):
         """Run ``data`` (one dict or a list of dicts) through the named
         pipeline → ``(rows, errors)``: rows as dicts, failed cells null, and
         one error record per non-null ``_err_*`` marker (the error-as-value
         side channel; [] when the pipeline has no fallible stages).
 
-        Input is bounded by ``MAX_PROCESS_ROWS`` (the result is collected to
-        the driver); for bulk data build a DataFrame and use
-        ``CompiledPipeline.apply`` — same semantics, fully distributed."""
+        Input is bounded by the constructor's ``max_process_rows`` (100,000
+        by default): process() collects every output row into this process —
+        correct for the reference's request/response API over small row
+        sets, an out-of-memory error waiting to happen for bulk data.  For
+        bulk data build a DataFrame and use ``CompiledPipeline.apply`` —
+        same semantics, fully distributed."""
         import json
 
         if pipeline_name not in self.pipelines:
             raise KeyError(f"unknown pipeline '{pipeline_name}'")
         rows_in = [data] if isinstance(data, dict) else list(data)
-        limit = getattr(self, "max_process_rows", None) or self.MAX_PROCESS_ROWS
+        limit = self.max_process_rows
         if len(rows_in) > limit:
             raise ValueError(
                 f"Piper.process: {len(rows_in)} input rows exceeds the "

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from feathr_online_spark.operators.asof import asof_contract
+
 
 def stream_windowed_features(
     events: DataFrame,
@@ -129,16 +131,13 @@ def stream_asof_enrich(
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
 
-    payload = [c for c in features.columns if c not in (on, right_ts)]
-    event_cols = [c for c in events.columns if c not in (on, left_ts)]
-    overlap = set(payload) & set(events.columns)
-    if overlap:
-        raise ValueError(f"stream_asof_enrich: column collision {sorted(overlap)}")
-
     # Deterministic winner among equal-(entity, ts) feature rows: the same
     # xxhash64-of-payload tiebreak as the batch strategies (asof.py) —
     # computed JVM-side, carried through the GroupState, so streaming output
-    # is reproducible and matches the batch result on identical data.
+    # is reproducible and matches the batch result on identical data.  The
+    # tags stay (feature 1, event 0): ``strict`` acts in merge_asof below.
+    payload, _, tiebreak = asof_contract(features, on, right_ts, events, caller="stream_asof_enrich")
+    event_cols = [c for c in events.columns if c not in (on, left_ts)]
     tagged_events = events.select(
         F.col(on), F.col(left_ts).alias("__ts"), F.lit(0).alias("__tag"),
         F.lit(0).cast("long").alias("__tb"),
@@ -147,7 +146,7 @@ def stream_asof_enrich(
     )
     tagged_feats = features.select(
         F.col(on), F.col(right_ts).alias("__ts"), F.lit(1).alias("__tag"),
-        F.xxhash64(*[F.col(c) for c in payload]).cast("long").alias("__tb"),
+        tiebreak.cast("long").alias("__tb"),
         *[F.lit(None).cast(events.schema[c].dataType).alias(c) for c in event_cols],
         *[F.col(c) for c in payload],
     )

@@ -1,7 +1,7 @@
 """Production entry point: the north-rule feature job as a spark-submit script.
 
     spark-submit --py-files feathr_online_spark.zip jobs/northrule_job.py \
-        --sequences <path-or-iceberg-table> --features <path> \
+        --sequences <path-or-iceberg-table> --features <path-or-iceberg-table> \
         --output /path/out --metrics /path/metrics \
         --manifest /path/manifest [--hot-threshold 5000000] [--bucket-seconds 86400]
 
@@ -15,9 +15,11 @@ Pipeline per BASELINE.json's north rule:
   → write partitioned output + per-partition lineage rows + manifest marks.
 
 Iceberg: on a cluster with the iceberg-spark runtime on the classpath, pass
-``--iceberg catalog.db.table`` names instead of paths and add the catalog
-confs (see iceberg_conf below); this sandbox has no Iceberg jars, so paths
-read/write parquet — the plan shapes are identical.
+catalog table names (``catalog.db.table``) to ``--sequences``/``--features``
+instead of paths — ``read_table`` reads a dotted name without ``/`` as a
+catalog table — and add the catalog confs (see iceberg_conf below).  The
+output is always written as parquet under ``--output``.  Without the
+Iceberg jars, paths read parquet; the plan shapes are identical.
 """
 
 from __future__ import annotations

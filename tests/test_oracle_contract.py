@@ -1,6 +1,7 @@
 """The gate contract of ``__spark_entry__``: every query has a DuckDB oracle
-and every oracle a query, and the oracles' whitespace classes match Java's.
-Spark-free: it reads the two dicts and the SQL text, and runs nothing."""
+and every oracle a query, every oracle binds against the test tables, and
+the oracles' whitespace classes match Java's.  Spark-free: it reads the
+contract's dicts and SQL text, and only plans the SQL in DuckDB."""
 
 import re
 
@@ -47,3 +48,26 @@ def test_oracle_sql_ensures_every_fixture_it_reads(tmp_path, monkeypatch):
              for p in re.findall(r"read_parquet\('([^']+)'\)", sql)}
     assert paths and all(p.startswith(str(tmp_path / ".fixtures")) for p in paths)
     assert not [p for p in paths if not os.path.exists(p)]
+
+
+def test_every_oracle_binds_against_the_tables(sf_dir):
+    """DuckDB ``EXPLAIN`` of each oracle over views of the sf tables: a
+    fragment composed into a broken statement, or a name the tables lack,
+    fails here.  Planning only — running the O(n²) pair oracles is the job
+    of tools/check_oracle.py."""
+    import os
+
+    import duckdb
+
+    with duckdb.connect() as con:
+        for f in sorted(os.listdir(sf_dir)):
+            if f.endswith(".parquet"):
+                con.execute(f"CREATE VIEW {f[:-len('.parquet')]} AS "
+                            f"SELECT * FROM read_parquet('{os.path.join(sf_dir, f)}')")
+        failed = {}
+        for name, sql in entry.oracle_sql().items():
+            try:
+                con.execute("EXPLAIN " + sql)
+            except duckdb.Error as e:
+                failed[name] = str(e).splitlines()[0]
+    assert not failed, failed

@@ -152,6 +152,18 @@ def test_stream_asof_enrich(spark, tmp_path):
     assert got["e3"] is None         # entity 2: feature is later than the event
 
 
+def test_stream_asof_rejects_features_without_payload(spark):
+    """A feature frame of only the key and time columns has nothing to
+    attach: rejected up front, like the batch as-of join."""
+    from feathr_online_spark.streaming.pit import stream_asof_enrich
+
+    ev = spark.createDataFrame([(1, datetime(2024, 1, 1), "e1")],
+                               "entity long, event_time timestamp, eid string")
+    ft = spark.createDataFrame([(1, datetime(2024, 1, 1))], "entity long, feature_time timestamp")
+    with pytest.raises(ValueError, match="payload"):
+        stream_asof_enrich(ev, ft)
+
+
 def test_stream_exact_dedup(spark, tmp_path):
     """dropDuplicatesWithinWatermark-based ingest dedup: duplicates within a
     micro-batch and across batches (inside the watermark horizon) are
